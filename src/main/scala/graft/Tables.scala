@@ -15,15 +15,13 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** The testdata dirs are immutable inputs, so the parquet SCHEMA is
-    * process-stable: route reads through the schema memo
-    * ([[graft.engine.ParquetReadCache]]) and the per-query footer
-    * inference job is paid once per table per JVM instead of once per
-    * query construction per bench rep. The DATA is still scanned by
-    * every action — only resolution metadata is reused, the same thing
-    * a catalog/table format hands the planner for free. */
+  /** The testdata dirs are immutable inputs: reads go through the
+    * session [[graft.engine.Resolver]] (README, "Read resolution and
+    * staleness"), so the footer inference job is paid once per table per
+    * session instead of once per query construction per bench rep. The
+    * DATA is still scanned by every action. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    graft.engine.ParquetReadCache.read(spark, s"$sfDir/$name.parquet")
+    graft.engine.Resolver(spark).read(s"$sfDir/$name.parquet")
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame   = load(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame     = load(spark, sfDir, "orders")

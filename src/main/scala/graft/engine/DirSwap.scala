@@ -64,8 +64,6 @@ object DirSwap {
   def deleteRecursively(path: String): Unit = {
     val f = new java.io.File(path)
     if (f.exists) deleteRec(f)
-    ParquetReadCache.invalidate(path)
-    invalidateParent(path)
   }
 
   /** Heal a swap torn between rename-aside and rename-into-place: if
@@ -78,22 +76,8 @@ object DirSwap {
     val old = new java.io.File(target + ".old")
     if (!dir.exists && old.exists) {
       require(old.renameTo(dir), s"recovery failed restoring $target from .old")
-      ParquetReadCache.invalidate(target)
-      invalidateParent(target)
       true
     } else false
-  }
-
-  /** Bump the PARENT dir's read-cache epoch too: a swap of a bucket
-    * SUBDIR (MergeUpsert layout, streaming maintenance) changes what a
-    * partition-discovery read of the parent model dir sees, and the
-    * parent's memoized frame/schema must retire with it (ADVICE r21 —
-    * previously only the subdir epoch moved, which an instance-level
-    * cache could miss). Harmless when the parent is a warehouse root or
-    * /tmp: nothing keys frames there. */
-  private def invalidateParent(target: String): Unit = {
-    val p = new java.io.File(target).getAbsoluteFile.getParentFile
-    if (p != null) ParquetReadCache.invalidate(p.toString)
   }
 
   /** Replace `target` with the committed contents of `tmp`. */
@@ -117,7 +101,5 @@ object DirSwap {
       require(new java.io.File(tmp).renameTo(dir), s"swap failed for $target")
     }
     if (old.exists) deleteRec(old)
-    ParquetReadCache.invalidate(target)
-    invalidateParent(target)
   }
 }

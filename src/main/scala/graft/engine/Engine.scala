@@ -299,66 +299,32 @@ final class Engine(
     if (stage.isDirectory) DirSwap.deleteRecursively(stage.getPath)
   }
 
-  /** Per-GENERATION memo of model-dir reads: every fresh
-    * `spark.read.parquet` pays a schema-inference/listing Spark job at
-    * resolution time, and one build resolves the same model several
-    * times (the consumer refs, the engine's own HWM/align/merge reads).
-    * The memo holds the resolved frame until the engine WRITES that
-    * model ([[invalidateRead]] at every materialize/compact/retention
-    * commit), so a reused frame always reflects the current committed
-    * generation — exactly the dbt contract a fresh read satisfies, one
-    * resolution job cheaper. Keyed per Engine instance; a new Engine
-    * (or an external maintenance tool) starts cold. */
-  private val readCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, DataFrame)]()
-  private def invalidateRead(name: String): Unit = readCache.remove(name)
-
   /** Parquet read of a model dir, with footer schema merging exactly
     * when the model's materialization can have EVOLVED its schema
-    * (IncrementalAppend + AppendNewColumns): older generations lack the
-    * evolved columns, and a single-footer read would surface a
-    * generation-dependent schema. Every other model pays nothing.
-    * Memoized per committed generation (see [[readCache]]); heal-before-
-    * read runs on the cache miss, i.e. before the file listing is
-    * pinned. */
+    * (AppendNewColumns): older generations lack the evolved columns, and
+    * a single-footer read would surface a generation-dependent schema.
+    * Resolved through the session [[Resolver]] (README, "Read resolution
+    * and staleness"), which serves one frame per committed generation.
+    * Heal-before-read runs on every read, before the listing is
+    * fingerprinted — the crash-heal-on-read contract (EngineSpec's
+    * torn-swap tests). */
   private def readEvolved(name: String): DataFrame = {
-    // heal-before-read runs on EVERY read, hit or miss — the
-    // crash-heal-on-read contract (EngineSpec's torn-swap tests). Both
-    // heals are fs-metadata-only: a WHOLE-DIR recovery renames the .old
-    // generation back AND bumps the path epoch, so the stale pinned
-    // frame below misses; a bucket-level heal restores the exact
-    // pre-crash file paths, so a pinned listing is valid again and the
-    // hit can be served.
     DirSwap.recover(path(name))
     if (byName.get(name).exists(
         _.materialization.isInstanceOf[Materialization.MergeUpsert]))
       healMergeBuckets(name)
-    // epoch check: an EXTERNAL writer's swap of this dir (retrain /
-    // streaming maintenance go through DirSwap, which bumps the epoch)
-    // retires a pinned frame this instance's own writes didn't know about
-    val ep = ParquetReadCache.epoch(path(name))
-    val hit = readCache.get(name)
-    if (hit != null && hit._1 == ep) hit._2
-    else {
-      val evolving = byName.get(name).map(_.materialization).exists {
-        case m: Materialization.IncrementalAppend =>
-          m.onSchemaChange == Materialization.SchemaChange.AppendNewColumns
-        case m: Materialization.DeleteInsert =>
-          m.onSchemaChange == Materialization.SchemaChange.AppendNewColumns
-        case m: Materialization.MergeUpsert =>
-          m.onSchemaChange == Materialization.SchemaChange.AppendNewColumns
-        case m: Materialization.Microbatch =>
-          m.onSchemaChange == Materialization.SchemaChange.AppendNewColumns
-        case _ => false
-      }
-      val df =
-        if (evolving) spark.read.option("mergeSchema", "true").parquet(path(name))
-        else ParquetReadCache.read(spark, path(name))
-      // re-read the epoch AFTER construction: recover()/read() may have
-      // bumped it, and caching the pre-heal epoch would miss forever
-      readCache.put(name, (ParquetReadCache.epoch(path(name)), df))
-      df
+    val evolving = byName.get(name).map(_.materialization).exists {
+      case m: Materialization.IncrementalAppend =>
+        m.onSchemaChange == Materialization.SchemaChange.AppendNewColumns
+      case m: Materialization.DeleteInsert =>
+        m.onSchemaChange == Materialization.SchemaChange.AppendNewColumns
+      case m: Materialization.MergeUpsert =>
+        m.onSchemaChange == Materialization.SchemaChange.AppendNewColumns
+      case m: Materialization.Microbatch =>
+        m.onSchemaChange == Materialization.SchemaChange.AppendNewColumns
+      case _ => false
     }
+    Resolver(spark).read(path(name), mergeSchema = evolving)
   }
 
   /** Consumer view of a materialized model: merge models hide their
@@ -392,10 +358,7 @@ final class Engine(
         if (spark.catalog.tableExists(bucketTable(name)))
           spark.table(bucketTable(name))
         else spark.read.parquet(path(name))
-      case Some(_) =>
-        // swap healing happens inside readEvolved's cache miss, i.e.
-        // before the file listing is pinned — see exists()
-        consumerView(name)
+      case Some(_) => consumerView(name)
       case None => throw new UnknownRefException(name)
     }
 
@@ -547,7 +510,6 @@ final class Engine(
     val w = shaped.write.mode("overwrite")
     (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w).parquet(tmp)
     replaceDir(tmp, path(name))
-    invalidateRead(name) // the rewrite retired the memoized generation
     if (viewsRegistered) registerViews() // refresh pinned file listings
     stat.getLong(1)
   }
@@ -718,28 +680,16 @@ final class Engine(
     // frozen-artifact skip BEFORE the buildFn runs: a TrainOnceTable
     // whose target exists costs zero jobs on this build — not even the
     // buildFn's eager construction work (driver-side collects) runs.
-    // Checked BEFORE the invalidation wrapper: a skip writes nothing,
-    // so the memoized resolution stays valid for this build's consumers.
     if (m.materialization == Materialization.TrainOnceTable &&
         !fullRefresh && exists(m.name)) return 0L
-    // the write (even a failed, partial one) retires this model's
-    // committed generation: drop the memoized resolution so the next
-    // read re-lists and re-heals
     val seed = new java.util.concurrent.atomic.AtomicReference[
       org.apache.spark.sql.types.StructType]()
-    var n = 0L
-    try n = materializeInner(m, batchTs, fullRefresh, seed)
-    finally {
-      invalidateRead(m.name)
-      ParquetReadCache.invalidate(path(m.name))
-    }
-    // SUCCESS-only writer-side schema seed (after the invalidate above,
-    // which would otherwise drop it): the engine knows exactly what a
-    // read-back of the layout it just committed infers, so the first
-    // post-write resolution — the one per-generation footer job the
-    // read memos cannot remove — launches no job either. A failed write
-    // never reaches this line, so a partial dir is always re-inferred.
-    Option(seed.get).foreach(s => ParquetReadCache.seed(path(m.name), s))
+    val n = materializeInner(m, batchTs, fullRefresh, seed)
+    // SUCCESS-only writer-side schema seed: the engine knows exactly what
+    // a read-back of the layout it just committed infers, so the first
+    // post-write resolution launches no footer-inference job. A failed
+    // write never reaches this line, so a partial dir is re-inferred.
+    Option(seed.get).foreach(s => Resolver(spark).seed(path(m.name), s))
     n
   }
 
@@ -770,21 +720,6 @@ final class Engine(
       seed: java.util.concurrent.atomic.AtomicReference[
         org.apache.spark.sql.types.StructType]): Long = {
     val prior = targetIfExists(m.name, fullRefresh)
-    // IncrementalAppend high-water mark, computed ONCE per build: the
-    // engine's own append guard needs max(watermark) over the stored
-    // target, and most incremental buildFns run the identical aggregate
-    // over the same prior frame (Incremental.hwm). Prefetch the scalar
-    // and register it on the prior frame so both consumers share one
-    // footer-stats job instead of paying it twice.
-    val prefetchedHwm: Option[org.apache.spark.sql.Row] = m.materialization match {
-      case Materialization.IncrementalAppend(wm, _, _, _)
-          if prior.exists(_.columns.contains(wm)) =>
-        val row = prior.get.agg(max(col(wm))).first()
-        Incremental.cacheHwm(prior.get, wm,
-          if (row.isNullAt(0)) None else Some(row.get(0)))
-        Some(row)
-      case _ => None
-    }
     val df = m.buildFn(spark, ref, prior)
     // dbt model contract (`contract: enforced`): the build output's
     // column set and types must match the declaration EXACTLY, checked
@@ -838,9 +773,9 @@ final class Engine(
           n
         } else {
           // High-water mark: single scalar off parquet min/max footer
-          // stats — the one prefetched before the buildFn ran.
-          val prev = prefetchedHwm.getOrElse(
-            readEvolved(m.name).agg(max(col(wm))).first())
+          // stats — one artifact of the served prior frame, shared with
+          // the buildFn's Incremental.hwm
+          val prev = Incremental.maxRow(readEvolved(m.name), wm)
           val delta =
             if (prev.isNullAt(0)) df else df.filter(col(wm) > lit(prev.get(0)))
           val aligned = alignSchema(m.name, delta, schemaPolicy, wm +: pcols, pcols)
@@ -1651,7 +1586,7 @@ final class Engine(
       // substring delta, assigned training): every registered frame's
       // last consumer is a write THIS build ran, so unpersisting here
       // bounds cached-block lifetime to the build (VERDICT r21 item 7)
-      BuildPersists.drain()
+      Resolver(spark).drainPersists()
     }
     if (viewsRegistered) registerViews() // refresh pinned file listings
     // promote fingerprints only for green nodes; errored/test-failed/

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared frontier/high-water-mark plumbing for incremental-append
@@ -32,43 +32,21 @@ object Incremental {
   /** Column spec for marker/empty construction: (name, Spark SQL type). */
   type Schema = Seq[(String, String)]
 
-  /** Engine-prefetched high-water marks, keyed by the prior-state
-    * DataFrame IDENTITY (Dataset does not override equals): the engine's
-    * IncrementalAppend materialization needs `max(watermarkCol)` over
-    * the stored target for its own append guard, and most incremental
-    * buildFns run the IDENTICAL aggregate over the same prior frame via
-    * [[hwm]] — two footer-stats jobs per build for one scalar. The
-    * engine computes it once before invoking the buildFn and registers
-    * it here; [[hwm]] consults the registry before launching a job.
-    * Weak keys so a retired prior frame never pins the entry; value is
-    * None when the stored table is empty (max = null). */
-  private val prefetched = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, Map[String, Option[Any]]]())
-
-  /** Register the engine-computed `max(watermarkCol)` for `prior` (None
-    * = stored table empty). Engine-internal. */
-  def cacheHwm(prior: DataFrame, watermarkCol: String, v: Option[Any]): Unit = {
-    val cur = Option(prefetched.get(prior)).getOrElse(Map.empty[String, Option[Any]])
-    prefetched.put(prior, cur + (watermarkCol -> v))
-  }
+  /** `max(watermarkCol)` over a prior-state frame, as a one-row result:
+    * an artifact of the frame's [[Resolver]] entry, so the engine's
+    * IncrementalAppend guard and a buildFn's [[hwm]] over the same
+    * served prior share one footer-stats job per build. */
+  def maxRow(prior: DataFrame, watermarkCol: String): Row =
+    Resolver(prior.sparkSession).artifact(prior, s"max($watermarkCol)")(
+      prior.agg(max(col(watermarkCol))).first())
 
   /** The prior state's high-water mark on `watermarkCol`, or -1 when
     * there is no prior state (first build) or it is empty. `max` over an
     * append-only parquet table is answered from footer stats — the same
-    * cost class as reading the footer itself — and reuses the engine's
-    * prefetched scalar when the same aggregate already ran this build. */
+    * cost class as reading the footer itself ([[maxRow]]). */
   def hwm(prior: Option[DataFrame], watermarkCol: String): Long =
-    prior match {
-      case None => -1L
-      case Some(df) =>
-        Option(prefetched.get(df)).flatMap(_.get(watermarkCol)) match {
-          case Some(None) => -1L
-          case Some(Some(v: Long)) => v
-          case _ =>
-            val row = df.agg(max(col(watermarkCol))).first()
-            if (row.isNullAt(0)) -1L else row.getLong(0)
-        }
-    }
+    prior.map(maxRow(_, watermarkCol))
+      .filter(!_.isNullAt(0)).map(_.getLong(0)).getOrElse(-1L)
 
   /** The scan frontier of this build: max of `watermarkCol` over the
     * frame actually scanned, None when the frame is empty (nothing

@@ -655,15 +655,15 @@ object DedupQueries {
           graft.engine.Materialization.IncrementalAppend("doc_id")) {
           (_, _, prior) =>
             // doc_id is the model's declared watermark — the engine's
-            // prefetched scalar (Incremental.hwm registry) answers this
-            // without a second footer job; -1 ≡ MinValue for nonneg ids
+            // append guard shares this scalar (Incremental.maxRow), so
+            // no second footer job; -1 ≡ MinValue for nonneg ids
             val hwm = graft.engine.Incremental.hwm(prior, "doc_id")
             winnowFingerprints(src.filter(col("doc_id") > hwm))
         }))
       val r0 = e.build(); require(r0.ok, r0.results.mkString("; "))
       src = docs
       val r1 = e.build(); require(r1.ok, r1.results.mkString("; "))
-      graft.engine.ParquetReadCache.read(s, s"$wh/winnow_index")
+      graft.engine.Resolver(s).read(s"$wh/winnow_index")
         .select(col("doc_id"), col("fp_pos"), col("fp_hash"))
     },
 
@@ -739,7 +739,7 @@ object DedupQueries {
       build(docs.filter(col("doc_id") <= mid))
       build(docs)
       graft.dedup.IncrementalDedup
-        .pairs(graft.engine.ParquetReadCache.read(s, s"$wh/neardup_candidates"))
+        .pairs(graft.engine.Resolver(s).read(s"$wh/neardup_candidates"))
         .select(col("doc_a"), col("doc_b"))
     },
 
@@ -1059,7 +1059,7 @@ object DedupQueries {
       build(urls.filter(col("doc_id") <= mid))
       build(urls)
       graft.dedup.IncrementalUrlDedup.dedupedUrls(
-        urls, graft.engine.ParquetReadCache.read(s, s"$wh/url_first"))
+        urls, graft.engine.Resolver(s).read(s"$wh/url_first"))
     },
 
     // ---- exact duplicated-SUBSTRING spans (Lee et al. 2022,
@@ -1364,12 +1364,10 @@ object DedupQueries {
                 // engine-wide reuse idiom: recompute on block loss,
                 // spill not evict); without it the gram explode + count
                 // runs twice per build — two full delta passes at
-                // 100 TB. Registered with BuildPersists: the staging
-                // write is this build's last consumer, so the engine
-                // unpersists it when the build ends.
-                val dcP = dc.persist(
-                  org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-                graft.engine.BuildPersists.register(dcP)
+                // 100 TB. Build-scoped: the staging write is this
+                // build's last consumer, so the engine unpersists it when
+                // the build ends.
+                val dcP = graft.engine.Resolver(dc.sparkSession).persistForBuild(dc)
                 // ≤ buckets scalars; makes the prior read partition-pruned
                 val touched = dcP
                   .select(pmod(hash(col("g")), lit(GramBuckets)).as("b"))

@@ -823,8 +823,8 @@ object PipelineQueries {
           (_, _, prior) =>
             val base = prior.map(_.agg(max(col("end_tok"))).first())
               .filter(!_.isNullAt(0)).map(_.getLong(0)).getOrElse(0L)
-            // doc_id is the model's declared watermark, so the engine
-            // already prefetched this scalar (Incremental.hwm registry)
+            // doc_id is the model's declared watermark, so the engine's
+            // append guard shares this scalar (Incremental.maxRow)
             // — no second footer job; -1 ≡ MinValue for nonneg doc_ids
             val hwm = graft.engine.Incremental.hwm(prior, "doc_id")
             val delta = src.filter(col("doc_id") > hwm)
@@ -836,7 +836,7 @@ object PipelineQueries {
       val r0 = e.build(); require(r0.ok, r0.results.mkString("; "))
       src = docs
       val r1 = e.build(); require(r1.ok, r1.results.mkString("; "))
-      packSpans(graft.engine.ParquetReadCache.read(s, s"$wh/pack_offsets"), "doc_id", CtxLen)
+      packSpans(graft.engine.Resolver(s).read(s"$wh/pack_offsets"), "doc_id", CtxLen)
     },
 
     // ---- cross-document repeated-n-gram coverage (boilerplate signal)
@@ -1164,7 +1164,7 @@ object PipelineQueries {
       build(docs.filter(col("doc_id") <= mid))
       build(docs)
       graft.dedup.IncrementalBlockDedup.cleanedDocs(
-        docs, graft.engine.ParquetReadCache.read(s, s"$wh/block_first"), BlockTokens)
+        docs, graft.engine.Resolver(s).read(s"$wh/block_first"), BlockTokens)
     },
 
     // ---- incremental decontamination as an engine model: two builds
@@ -1205,7 +1205,7 @@ object PipelineQueries {
       }
       build(train.filter(col("doc_id") <= mid))
       build(train)
-      graft.engine.ParquetReadCache.read(s, s"$wh/contam_flags")
+      graft.engine.Resolver(s).read(s"$wh/contam_flags")
     }
   )
 }

@@ -648,7 +648,7 @@ object SimilarityQueries {
       }
       build(e.filter(col("vec_id") <= mid))
       build(e)
-      graft.engine.ParquetReadCache.read(s, s"$wh/knn_edges")
+      graft.engine.Resolver(s).read(s"$wh/knn_edges")
         .select(col("src_id"), col("nbr_id"), col("rnk"), col("cos_sim"),
           col("cluster").cast("int").as("cluster"))
     },
@@ -1734,7 +1734,7 @@ object SimilarityQueries {
       build(e.filter(col("vec_id") <= mid))
       build(e)
       graft.similarity.IncrementalIvfIndex.searchTopK(
-        graft.engine.ParquetReadCache.read(s, s"$wh/ivf_index"), NQueries, TopK)
+        graft.engine.Resolver(s).read(s"$wh/ivf_index"), NQueries, TopK)
     },
 
     // ---- multi-probe over the SAME incrementally-built index: each
@@ -1763,8 +1763,8 @@ object SimilarityQueries {
       build(e.filter(col("vec_id") <= mid))
       build(e)
       graft.similarity.IncrementalIvfIndex.searchTopKMultiProbe(
-        graft.engine.ParquetReadCache.read(s, s"$wh/ivf_index"),
-        graft.engine.ParquetReadCache.read(s, s"$wh/ivf_centroids"), NQueries, TopK, NProbe)
+        graft.engine.Resolver(s).read(s"$wh/ivf_index"),
+        graft.engine.Resolver(s).read(s"$wh/ivf_centroids"), NQueries, TopK, NProbe)
     },
 
     // ---- the SAME multi-probe search through the scan-local
@@ -1790,13 +1790,13 @@ object SimilarityQueries {
       }
       build(e.filter(col("vec_id") <= mid))
       build(e)
-      val index = graft.engine.ParquetReadCache.read(s, s"$wh/ivf_index")
+      val index = graft.engine.Resolver(s).read(s"$wh/ivf_index")
       graft.similarity.IncrementalIvfIndex.searchTopKFor(
         index,
         index.filter(col("vec_id") < NQueries)
           .select(col("vec_id"), col("q"), col("nsq")),
         graft.similarity.CentroidAssign.collectCentroids(
-          graft.engine.ParquetReadCache.read(s, s"$wh/ivf_centroids")),
+          graft.engine.Resolver(s).read(s"$wh/ivf_centroids")),
         TopK, nprobe = NProbe)
     },
 
@@ -1831,7 +1831,7 @@ object SimilarityQueries {
       graft.streaming.Streaming.vectorIndexStream(
         s, src, idx, ckp, schema, cents, maintenanceMaxFiles = Some(2))
       graft.similarity.IncrementalIvfIndex.searchTopK(
-        graft.engine.ParquetReadCache.read(s, idx), NQueries, TopK)
+        graft.engine.Resolver(s).read(idx), NQueries, TopK)
     },
 
     // ---- index BALANCE diagnostics: per-cluster row counts and id
@@ -1876,7 +1876,7 @@ object SimilarityQueries {
       }
       build(e.filter(col("vec_id") <= mid))
       build(e)
-      graft.engine.ParquetReadCache.read(s, s"$wh/ivf_index")
+      graft.engine.Resolver(s).read(s"$wh/ivf_index")
         .groupBy(col("cluster"))
         .agg(count(lit(1)).as("n_vectors"),
           min(col("vec_id")).as("min_vec_id"),
@@ -1913,7 +1913,7 @@ object SimilarityQueries {
       graft.streaming.Streaming.vectorIndexStreamPQ(
         s, src, idx, ckp, schema, cents, cb, maintenanceMaxFiles = Some(2))
       graft.similarity.IncrementalIvfIndex.searchTopKPQ(
-        graft.engine.ParquetReadCache.read(s, idx), cbDf, NQueries, TopK, shortK = TopK * 3)
+        graft.engine.Resolver(s).read(idx), cbDf, NQueries, TopK, shortK = TopK * 3)
     },
 
     // ---- FILTERED search over the SAME incrementally-built index:
@@ -1942,8 +1942,8 @@ object SimilarityQueries {
       build(e.filter(col("vec_id") <= mid))
       build(e)
       graft.similarity.IncrementalIvfIndex.searchTopKMultiProbe(
-        graft.engine.ParquetReadCache.read(s, s"$wh/ivf_index"),
-        graft.engine.ParquetReadCache.read(s, s"$wh/ivf_centroids"), NQueries, TopK,
+        graft.engine.Resolver(s).read(s"$wh/ivf_index"),
+        graft.engine.Resolver(s).read(s"$wh/ivf_centroids"), NQueries, TopK,
         nprobe = FilteredProbe,
         candFilter = Some(col("vec_id") % 3 === 0))
     },
@@ -1976,8 +1976,8 @@ object SimilarityQueries {
       build(e.filter(col("vec_id") <= mid))
       build(e)
       graft.similarity.IncrementalIvfIndex.searchTopKPQ(
-        graft.engine.ParquetReadCache.read(s, s"$wh/ivf_index"),
-        graft.engine.ParquetReadCache.read(s, s"$wh/pq_codebook"), NQueries, TopK, shortK = TopK * 3)
+        graft.engine.Resolver(s).read(s"$wh/ivf_index"),
+        graft.engine.Resolver(s).read(s"$wh/pq_codebook"), NQueries, TopK, shortK = TopK * 3)
     },
 
     // ---- MULTI-PROBE over the PQ-coded incremental index — the
@@ -2005,9 +2005,9 @@ object SimilarityQueries {
       build(e.filter(col("vec_id") <= mid))
       build(e)
       graft.similarity.IncrementalIvfIndex.searchTopKPQMultiProbe(
-        graft.engine.ParquetReadCache.read(s, s"$wh/ivf_index"),
-        graft.engine.ParquetReadCache.read(s, s"$wh/pq_codebook"),
-        graft.engine.ParquetReadCache.read(s, s"$wh/ivf_centroids"),
+        graft.engine.Resolver(s).read(s"$wh/ivf_index"),
+        graft.engine.Resolver(s).read(s"$wh/pq_codebook"),
+        graft.engine.Resolver(s).read(s"$wh/ivf_centroids"),
         NQueries, TopK, shortK = TopK * 3, nprobe = NProbe)
     },
 
@@ -2038,9 +2038,9 @@ object SimilarityQueries {
       build(e.filter(col("vec_id") <= mid))
       build(e)
       graft.similarity.IncrementalIvfIndex.searchTopKPQResidual(
-        graft.engine.ParquetReadCache.read(s, s"$wh/ivf_index"),
-        graft.engine.ParquetReadCache.read(s, s"$wh/pq_codebook"),
-        graft.engine.ParquetReadCache.read(s, s"$wh/ivf_means"), NQueries, TopK, shortK = TopK * 3)
+        graft.engine.Resolver(s).read(s"$wh/ivf_index"),
+        graft.engine.Resolver(s).read(s"$wh/pq_codebook"),
+        graft.engine.Resolver(s).read(s"$wh/ivf_means"), NQueries, TopK, shortK = TopK * 3)
     },
 
     // ---- the COMPLETE production IVFADC configuration: residual
@@ -2069,10 +2069,10 @@ object SimilarityQueries {
       build(e.filter(col("vec_id") <= mid))
       build(e)
       graft.similarity.IncrementalIvfIndex.searchTopKPQResidualMultiProbe(
-        graft.engine.ParquetReadCache.read(s, s"$wh/ivf_index"),
-        graft.engine.ParquetReadCache.read(s, s"$wh/pq_codebook"),
-        graft.engine.ParquetReadCache.read(s, s"$wh/ivf_means"),
-        graft.engine.ParquetReadCache.read(s, s"$wh/ivf_centroids"),
+        graft.engine.Resolver(s).read(s"$wh/ivf_index"),
+        graft.engine.Resolver(s).read(s"$wh/pq_codebook"),
+        graft.engine.Resolver(s).read(s"$wh/ivf_means"),
+        graft.engine.Resolver(s).read(s"$wh/ivf_centroids"),
         NQueries, TopK, shortK = TopK * 3, nprobe = NProbe)
     },
 
@@ -2101,15 +2101,15 @@ object SimilarityQueries {
       }
       build(e.filter(col("vec_id") <= mid))
       build(e)
-      val index = graft.engine.ParquetReadCache.read(s, s"$wh/ivf_index")
+      val index = graft.engine.Resolver(s).read(s"$wh/ivf_index")
       graft.similarity.IncrementalIvfIndex.searchTopKPQFor(
         index,
         index.filter(col("vec_id") < NQueries)
           .select(col("vec_id"), col("q"), col("nsq")),
         graft.similarity.CentroidAssign.collectCentroids(
-          graft.engine.ParquetReadCache.read(s, s"$wh/ivf_centroids")),
+          graft.engine.Resolver(s).read(s"$wh/ivf_centroids")),
         graft.similarity.ProductQuantizer.collectCodebook(
-          graft.engine.ParquetReadCache.read(s, s"$wh/pq_codebook")),
+          graft.engine.Resolver(s).read(s"$wh/pq_codebook")),
         means = Map.empty,
         TopK, shortK = TopK * 3, nprobe = NProbe)
     },
@@ -2136,17 +2136,17 @@ object SimilarityQueries {
       }
       build(e.filter(col("vec_id") <= mid))
       build(e)
-      val index = graft.engine.ParquetReadCache.read(s, s"$wh/ivf_index")
+      val index = graft.engine.Resolver(s).read(s"$wh/ivf_index")
       graft.similarity.IncrementalIvfIndex.searchTopKPQFor(
         index,
         index.filter(col("vec_id") < NQueries)
           .select(col("vec_id"), col("q"), col("nsq")),
         graft.similarity.CentroidAssign.collectCentroids(
-          graft.engine.ParquetReadCache.read(s, s"$wh/ivf_centroids")),
+          graft.engine.Resolver(s).read(s"$wh/ivf_centroids")),
         graft.similarity.ProductQuantizer.collectCodebook(
-          graft.engine.ParquetReadCache.read(s, s"$wh/pq_codebook")),
+          graft.engine.Resolver(s).read(s"$wh/pq_codebook")),
         graft.similarity.IncrementalIvfIndex.collectMeans(
-          graft.engine.ParquetReadCache.read(s, s"$wh/ivf_means")),
+          graft.engine.Resolver(s).read(s"$wh/ivf_means")),
         TopK, shortK = TopK * 3, nprobe = NProbe)
     },
 
@@ -2176,7 +2176,7 @@ object SimilarityQueries {
       build(e.filter(col("vec_id") <= mid))
       build(e)
       graft.similarity.IncrementalIvfIndex.searchTopKWithDeletes(
-        graft.engine.ParquetReadCache.read(s, s"$wh/ivf_index"), deleteSet(e), NQueries, TopK)
+        graft.engine.Resolver(s).read(s"$wh/ivf_index"), deleteSet(e), NQueries, TopK)
     },
 
     // ---- DELETION, compaction half: Engine.compact applies the same
@@ -2211,7 +2211,7 @@ object SimilarityQueries {
       val eng = build(e)
       eng.compact("ivf_index", Some(deleteSet(e)))
       graft.similarity.IncrementalIvfIndex.searchTopK(
-        graft.engine.ParquetReadCache.read(s, s"$wh/ivf_index"), NQueries, TopK)
+        graft.engine.Resolver(s).read(s"$wh/ivf_index"), NQueries, TopK)
     },
 
     // ---- RETRAIN lifecycle: build half the corpus, run one Lloyd
@@ -2246,7 +2246,7 @@ object SimilarityQueries {
       graft.similarity.IncrementalIvfIndex.retrain(s, wh, Dims)
       build(e)
       graft.similarity.IncrementalIvfIndex.searchTopK(
-        graft.engine.ParquetReadCache.read(s, s"$wh/ivf_index"), NQueries, TopK)
+        graft.engine.Resolver(s).read(s"$wh/ivf_index"), NQueries, TopK)
     },
 
     // ---- multi-vector MaxSim late interaction (Khattab & Zaharia

@@ -122,7 +122,7 @@ object SqlSurfaceQueries {
       }
       build(ev.filter(col("event_id") <= mid))
       build(ev)
-      val est = graft.engine.ParquetReadCache.read(s, s"$wh/uv_sketch")
+      val est = graft.engine.Resolver(s).read(s"$wh/uv_sketch")
         .groupBy(col("day"))
         .agg(hll_sketch_estimate(hll_union_agg(col("sketch"))).as("uv"))
       val exact = ev.groupBy(col("day"))

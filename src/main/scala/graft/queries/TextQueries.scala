@@ -572,7 +572,7 @@ object TextQueries {
       }
       build(docs.filter(col("doc_id") <= mid))
       build(docs)
-      val state = graft.engine.ParquetReadCache.read(s, s"$wh/bm25_stats")
+      val state = graft.engine.Resolver(s).read(s"$wh/bm25_stats")
       val dfreq = graft.text.IncrementalBm25.termDf(state)
         .filter(col("term").isin(BM25Terms: _*))
       val stats = graft.text.IncrementalBm25.corpusStats(state)
@@ -713,7 +713,7 @@ object TextQueries {
       val wh = graft.engine.Scratch.dir("graft_bpe_vocab")
       bpeVocab(docs.filter(col("doc_id") % 2 === 0), "text", BpeMerges)
         .coalesce(1).write.mode("overwrite").parquet(s"$wh/bpe_vocab")
-      val vocab = graft.engine.ParquetReadCache.read(s, s"$wh/bpe_vocab")
+      val vocab = graft.engine.Resolver(s).read(s"$wh/bpe_vocab")
       bpeEncodeFromVocab(vocab, docs.filter(col("doc_id") % 2 === 0),
           "doc_id", "text")
         .union(bpeEncodeFromVocab(vocab, docs.filter(col("doc_id") % 2 =!= 0),

@@ -35,34 +35,15 @@ object CentroidAssign {
     * contract — the published SemDeDup/IVF configurations keep
     * k ∝ corpus/10⁵ — so this moves the same bytes the declarative plan
     * broadcast; at k = 10⁵, 64 dims it is ~50 MB, the standard broadcast
-    * budget. */
-  /** Identity-keyed memo of collected centroid tables: one engine build
-    * resolves `ivf_centroids` to ONE memoized DataFrame (the engine's
-    * per-generation read cache), and several nodes of the same DAG —
-    * means, codebook, index — each collect it, paying k-row collect jobs
-    * for an identical immutable array. Weak keys (Dataset keeps identity
-    * equality) so retired frames never pin entries; a fresh read is a
-    * fresh key, so a new generation always re-collects. Callers treat
-    * the array as read-only (they already did — it is shared through
-    * broadcasts). */
-  private val collected = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, Array[(Int, Array[Long], Long)]]())
-
-  /** PUBLIC CONTRACT: the returned array is MEMOIZED and SHARED across
-    * every caller for the frame's lifetime — treat it as immutable
-    * (read-only iteration / broadcast). Sorting or mutating in place
-    * would corrupt every other consumer (ADVICE r21). */
+    * budget. Memoized as an artifact of a [[graft.engine.Resolver]]-served
+    * frame: one build resolves `ivf_centroids` to ONE frame per committed
+    * generation, and the several nodes that collect it pay one job. */
   def collectCentroids(cent: DataFrame): Array[(Int, Array[Long], Long)] = {
-    val hit = collected.get(cent)
-    if (hit != null) hit
-    else {
-      val s = cent.sparkSession
-      import s.implicits._
-      val arr = cent.selectExpr("cast(label as int) label", "c", "ncsq")
-        .as[(Int, Array[Long], Long)].collect().sortBy(_._1)
-      collected.put(cent, arr)
-      arr
-    }
+    val s = cent.sparkSession
+    import s.implicits._
+    graft.engine.Resolver(s).artifact(cent, "centroids")(
+      cent.selectExpr("cast(label as int) label", "c", "ncsq")
+        .as[(Int, Array[Long], Long)].collect().sortBy(_._1))
   }
 
   /** PROBED (ANN-assisted, approximate) assignment kernel — the same

@@ -181,7 +181,7 @@ object IncrementalIvfIndex {
     val centDir = s"$warehouse/ivf_centroids"
     graft.engine.DirSwap.recover(idxDir)
     graft.engine.DirSwap.recover(centDir)
-    val rows = graft.engine.ParquetReadCache.read(spark, idxDir)
+    val rows = graft.engine.Resolver(spark).read(idxDir)
     val data = rows.filter(col("q").isNotNull)
     val markers = rows.filter(col("q").isNull)
     // 1. centroid update from stored membership (eager, k rows)
@@ -259,8 +259,8 @@ object IncrementalIvfIndex {
     val centDir = s"$warehouse/ivf_centroids"
     graft.engine.DirSwap.recover(idxDir)
     graft.engine.DirSwap.recover(centDir)
-    val stored = CentroidAssign.collectCentroids(graft.engine.ParquetReadCache.read(spark, centDir))
-    val data = graft.engine.ParquetReadCache.read(spark, idxDir).filter(col("q").isNotNull)
+    val stored = CentroidAssign.collectCentroids(graft.engine.Resolver(spark).read(centDir))
+    val data = graft.engine.Resolver(spark).read(idxDir).filter(col("q").isNotNull)
     val updated = CentroidAssign.collectCentroids(centroids(
       data.select(col("vec_id"), col("cluster").cast("int").as("label"),
         col("q"), col("nsq")), dims))
@@ -345,10 +345,9 @@ object IncrementalIvfIndex {
     // ivf_means aggregates the assigned snapshot and pq_codebook codes
     // its residuals — re-deriving the identical assignment in each
     // buildFn paid a second full pass over the snapshot (guide §1.2
-    // step 1). The frame is persisted (the engine reuse idiom) and
-    // memoized per centroid GENERATION (frame identity — a full-refresh
-    // retrain is a new frame, so it re-assigns); BuildPersists releases
-    // it when the build ends. Keyed per models-instance: each build()
+    // step 1). The frame is memoized per centroid GENERATION (frame
+    // identity — a full-refresh retrain is a new frame, so it
+    // re-assigns). Keyed per models-instance: each build()
     // call site constructs a fresh DAG, so the memo never outlives its
     // engine's resolution scope.
     val assignedMemo =
@@ -667,25 +666,14 @@ object IncrementalIvfIndex {
   /** Collect an `ivf_means` table to its k-row driver map — the
     * broadcast-state shape [[searchTopKPQFor]] /
     * [[graft.streaming.Streaming.vectorSearchStreamPQ]] take (same
-    * budget contract as [[CentroidAssign.collectCentroids]]). PUBLIC
-    * CONTRACT: memoized and shared — the map's Array values are
-    * read-only for every caller (ADVICE r21). */
+    * budget contract as [[CentroidAssign.collectCentroids]]), memoized
+    * as an artifact of a [[graft.engine.Resolver]]-served frame. */
   def collectMeans(means: DataFrame): Map[Int, Array[Long]] = {
-    val hit = collectedMeans.get(means)
-    if (hit != null) return hit
     val s = means.sparkSession
     import s.implicits._
-    val m = means.select(col("cluster"), col("mc"))
-      .as[(Int, Array[Long])].collect().toMap
-    collectedMeans.put(means, m)
-    m
+    graft.engine.Resolver(s).artifact(means, "means")(
+      means.select(col("cluster"), col("mc")).as[(Int, Array[Long])].collect().toMap)
   }
-
-  /** Identity-keyed memo for [[collectMeans]] — the
-    * CentroidAssign.collectCentroids idiom: immutable k-row state
-    * collected more than once from the same resolved frame. */
-  private val collectedMeans = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, Map[Int, Array[Long]]]())
 
   /** The k-row `ivf_means` table re-emitted as a LOCAL frame (from the
     * memoized [[collectMeans]] array, sorted by cluster for a stable

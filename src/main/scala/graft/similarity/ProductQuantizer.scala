@@ -132,13 +132,11 @@ object ProductQuantizer {
     // two full passes over the training snapshot per codebook training.
     // The snapshot is training-sample-sized by the frozen-quantizer
     // contract, so the cached footprint is bounded by design. Lifetime:
-    // registered with BuildPersists, so an engine build (the pq_codebook
-    // write is the last consumer) unpersists it at build end; [[train]]
-    // unpersists directly after its collect; other callers fall back to
+    // build-scoped, so an engine build (the pq_codebook write is the
+    // last consumer) unpersists it at build end; [[train]] unpersists
+    // directly after its collect; other callers fall back to
     // ContextCleaner reclamation as before.
-    val cells = cellRows(e)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.engine.BuildPersists.register(cells)
+    val cells = graft.engine.Resolver(e.sparkSession).persistForBuild(cellRows(e))
     val bsum = cells.groupBy(col("m"), col("code"))
       .agg(array((1 to SubDims).map(j => sum(element_at(col("sv"), j))): _*).as("ssum"))
       .withColumn("nssum", expr("dot_i64(ssum, ssum)"))
@@ -152,32 +150,22 @@ object ProductQuantizer {
         col("med.sv").as("ent"), col("med.nsv").as("ent_nsq")), cells)
   }
 
-  /** Identity-keyed memo of collected codebooks — same rationale as
-    * CentroidAssign.collectCentroids's: one build/probe resolves the
-    * codebook to ONE frame (the engine read cache / a localCheckpoint)
-    * and collects it from several consumers; the array is immutable and
-    * generation-stable, weak keys keep retired frames collectable. */
-  private val collected = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, Codebook]())
-
   /** Collect a trained `(m, code, ent, ent_nsq)` table into the dense
     * driver-side [[Codebook]] (≤ M×256 entries ≈ 128 KB — the
-    * broadcast-state contract). PUBLIC CONTRACT: the returned Codebook
-    * is MEMOIZED and SHARED across callers — read-only (ADVICE r21). */
+    * broadcast-state contract), memoized as an artifact of a
+    * [[graft.engine.Resolver]]-served frame. */
   def collectCodebook(entries: DataFrame): Codebook = {
-    val hit = collected.get(entries)
-    if (hit != null) return hit
     val s = entries.sparkSession
     import s.implicits._
-    val ent = Array.fill(M, CodebookSize)(Array.fill(SubDims)(0L))
-    val nsq = Array.fill(M, CodebookSize)(0L)
-    entries.select(col("m"), col("code"), col("ent"), col("ent_nsq"))
-      .as[(Int, Int, Array[Long], Long)].collect().foreach {
-        case (m, c, sv, nsv) => ent(m)(c) = sv; nsq(m)(c) = nsv
-      }
-    val cb = Codebook(ent, nsq)
-    collected.put(entries, cb)
-    cb
+    graft.engine.Resolver(s).artifact(entries, "codebook") {
+      val ent = Array.fill(M, CodebookSize)(Array.fill(SubDims)(0L))
+      val nsq = Array.fill(M, CodebookSize)(0L)
+      entries.select(col("m"), col("code"), col("ent"), col("ent_nsq"))
+        .as[(Int, Int, Array[Long], Long)].collect().foreach {
+          case (m, c, sv, nsv) => ent(m)(c) = sv; nsq(m)(c) = nsv
+        }
+      Codebook(ent, nsq)
+    }
   }
 
   /** [[entriesDf]] + [[collectCodebook]] in one step; the cell-stream

@@ -270,11 +270,6 @@ object Streaming {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("cluster", "batch_id")
           .parquet(targetDir)
-        // direct-write sink: bump the read-cache epoch so concurrent/
-        // later ParquetReadCache readers (the search stream, the probe
-        // queries) never serve a frame whose pinned listing predates
-        // this batch — the documented write-site contract
-        graft.engine.ParquetReadCache.invalidate(targetDir)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -324,8 +319,6 @@ object Streaming {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("cluster", "batch_id")
           .parquet(targetDir)
-        // see vectorIndexStream: direct-write sinks invalidate
-        graft.engine.ParquetReadCache.invalidate(targetDir)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -385,7 +378,7 @@ object Streaming {
       tombstones: Option[DataFrame] = None,
       keepFrom: Long = Long.MaxValue): Long = {
     graft.engine.DirSwap.recover(targetDir) // heal a torn prior swap first
-    val all = graft.engine.ParquetReadCache.read(spark, targetDir)
+    val all = graft.engine.Resolver(spark).read(targetDir)
     val cur = tombstones.fold(all) { t =>
       all.join(broadcast(t.select(col("vec_id")).distinct()),
         Seq("vec_id"), "left_anti")
@@ -434,7 +427,7 @@ object Streaming {
       keepFrom: Long = Long.MaxValue): (Long, Array[(Int, Array[Long], Long)]) = {
     graft.engine.DirSwap.recover(targetDir)
     graft.functions.GraftFunctions.register(spark)
-    val all = graft.engine.ParquetReadCache.read(spark, targetDir)
+    val all = graft.engine.Resolver(spark).read(targetDir)
     // partition data vs null-q marker rows (mirroring the engine-side
     // retrain): the streaming layout stores no markers TODAY, but the
     // assignment kernel must never see a null vector, and any marker a
@@ -491,7 +484,7 @@ object Streaming {
     // restates) must not feed the drift aggregate — the same filter
     // retrainVectorIndex and IncrementalIvfIndex.retrainIfNeeded apply;
     // without it a marker's null label crashes the typed collect
-    val all = graft.engine.ParquetReadCache.read(spark, targetDir).filter(col("q").isNotNull)
+    val all = graft.engine.Resolver(spark).read(targetDir).filter(col("q").isNotNull)
     val updated = graft.similarity.CentroidAssign.collectCentroids(
       graft.similarity.IncrementalIvfIndex.centroids(
         all.select(col("vec_id"), col("cluster").cast("int").as("label"),
@@ -623,7 +616,7 @@ object Streaming {
         // concurrent with a RUNNING batch can still lose the race — that
         // batch fails and the restart replays it idempotently.)
         graft.engine.DirSwap.recover(indexDir)
-        val index = graft.engine.ParquetReadCache.read(batch.sparkSession, indexDir)
+        val index = graft.engine.Resolver(batch.sparkSession).read(indexDir)
         graft.similarity.IncrementalIvfIndex
           .searchTopKFor(index, batch, cents, topK, nprobe, candFilter)
           .withColumn("batch_id", lit(batchId))
@@ -631,8 +624,6 @@ object Streaming {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id")
           .parquet(targetDir)
-        // see vectorIndexStream: direct-write sinks invalidate
-        graft.engine.ParquetReadCache.invalidate(targetDir)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -689,7 +680,7 @@ object Streaming {
         // per-batch index resolution — same maintenance-concurrency
         // contract as [[vectorSearchStream]]'s foreachBatch
         graft.engine.DirSwap.recover(indexDir)
-        val index = graft.engine.ParquetReadCache.read(batch.sparkSession, indexDir)
+        val index = graft.engine.Resolver(batch.sparkSession).read(indexDir)
         graft.similarity.IncrementalIvfIndex
           .searchTopKPQFor(index, batch, cents, cb, means, topK, shortK,
             nprobe, candFilter)
@@ -698,8 +689,6 @@ object Streaming {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id")
           .parquet(targetDir)
-        // see vectorIndexStream: direct-write sinks invalidate
-        graft.engine.ParquetReadCache.invalidate(targetDir)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -88,9 +88,9 @@ object PqProbe {
       step(tag + "build2")(build(e))
       val probe = step(tag + "probe_construct")(
         graft.similarity.IncrementalIvfIndex.searchTopKPQResidual(
-          graft.engine.ParquetReadCache.read(spark, s"$wh/ivf_index"),
-          graft.engine.ParquetReadCache.read(spark, s"$wh/pq_codebook"),
-          graft.engine.ParquetReadCache.read(spark, s"$wh/ivf_means"),
+          graft.engine.Resolver(spark).read(s"$wh/ivf_index"),
+          graft.engine.Resolver(spark).read(s"$wh/pq_codebook"),
+          graft.engine.Resolver(spark).read(s"$wh/ivf_means"),
           5, 10, shortK = 30))
       step(tag + "probe_action")(consume(probe))
       // standalone codebook training action (modelsPQ's pq_codebook body)
