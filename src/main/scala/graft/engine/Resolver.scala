@@ -143,7 +143,7 @@ object Resolver {
 
   /** Listing fingerprint of `dir`: MD5 over the sorted (relative path,
     * length, mtime) of every file under it; "" when it cannot be listed. */
-  private[engine] def fingerprint(dir: String): String = {
+  private def fingerprint(dir: String): String = {
     val root = Paths.get(dir)
     val files = scala.collection.mutable.ArrayBuffer.empty[String]
     try {

@@ -1897,9 +1897,13 @@ object SimilarityQueries {
       val PQ = graft.similarity.ProductQuantizer
       val cents = graft.similarity.CentroidAssign.collectCentroids(
         graft.similarity.IncrementalIvfIndex.centroids(e, Dims))
-      val cbDf = PQ.entriesDf(
-        e.select(col("vec_id"), col("q"), col("nsq"))).localCheckpoint()
-      val cb = PQ.collectCodebook(cbDf)
+      val cb = PQ.collectCodebook(
+        PQ.entriesDf(e.select(col("vec_id"), col("q"), col("nsq"))))
+      // the probe below takes the codebook as a frame: re-emit the
+      // collected one as a local relation, so its collect runs no job
+      import s.implicits._
+      val cbDf = (for (m <- cb.ent.indices; c <- cb.ent(m).indices)
+        yield (m, c, cb.ent(m)(c).toSeq, cb.entNsq(m)(c))).toDF("m", "code", "ent", "ent_nsq")
       val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
       val mid = (b.getLong(0) + b.getLong(1)) / 2
       val tmp = graft.engine.Scratch.dir("graft_streamivfpq")
