@@ -1312,17 +1312,6 @@ final class Engine(
     }
   }
 
-  /** `dbt build`: topo-ordered materialize + inline tests; a node whose
-    * checks fail blocks its transitive downstream (SURVEY.md §3.2 step 5).
-    *
-    * `threads` > 1 dispatches INDEPENDENT DAG branches concurrently from
-    * the driver (dbt's `threads:`; the reference pins 1,
-    * `/root/reference/README.md:99`). Each node is still one distributed
-    * Spark job — concurrency here overlaps scheduling gaps and
-    * independent writes, which matters when a wide DAG of small models
-    * runs on a large cluster. Spark sessions are thread-safe for
-    * concurrent job submission.
-    */
   /** dbt-style node selection (`dbt build --select`): a plain name
     * selects one model, `+name` adds its transitive upstream, `name+`
     * its transitive downstream. `state:modified` selects models whose
@@ -1457,7 +1446,18 @@ final class Engine(
     else build(batchTs, threads, select = redo)
   }
 
-  /** `fullRefresh` = dbt's `--full-refresh` (reference `README.md:115`):
+  /** `dbt build`: topo-ordered materialize + inline tests; a node whose
+    * checks fail blocks its transitive downstream (SURVEY.md §3.2 step 5).
+    *
+    * `threads` > 1 dispatches INDEPENDENT DAG branches concurrently from
+    * the driver (dbt's `threads:`; the reference pins 1,
+    * `/root/reference/README.md:99`). Each node is still one distributed
+    * Spark job — concurrency here overlaps scheduling gaps and
+    * independent writes, which matters when a wide DAG of small models
+    * runs on a large cluster. Spark sessions are thread-safe for
+    * concurrent job submission.
+    *
+    * `fullRefresh` = dbt's `--full-refresh` (reference `README.md:115`):
     * incremental-append and delete+insert models ignore their persisted
     * state and rebuild from scratch; snapshots keep their history (dbt
     * exempts snapshots for the same reason — it is the one state a
@@ -1599,12 +1599,6 @@ final class Engine(
     report
   }
 
-  /** dbt writes `target/manifest.json` on every invocation — the project
-    * graph as a machine-readable artifact for docs, lineage tooling and
-    * CI diffing. The engine analogue: `warehouseDir/manifest.json` with
-    * the source names and every node in topological order carrying its
-    * deps, materialization and check names. Driver-side metadata only —
-    * building it runs no Spark job. */
   private def esc(s: String): String = s.flatMap {
     case '"'           => "\\\""
     case '\\'          => "\\\\"
@@ -1629,6 +1623,12 @@ final class Engine(
       .digest(text.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 
+  /** dbt writes `target/manifest.json` on every invocation — the project
+    * graph as a machine-readable artifact for docs, lineage tooling and
+    * CI diffing. The engine analogue: `warehouseDir/manifest.json` with
+    * the source names and every node in topological order carrying its
+    * deps, materialization and check names. Driver-side metadata only —
+    * building it runs no Spark job. */
   def manifestJson: String =
     manifestJson(models.map(_.name).toSet, Map.empty, Map.empty)
 

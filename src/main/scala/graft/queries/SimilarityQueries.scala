@@ -30,6 +30,7 @@ object SimilarityQueries {
 
   private val Dims = 64
   private val TopK = 10
+  private val ShortK = TopK * 3 // code-scored shortlist per query, re-ranked exactly
   private val NQueries = 5
   private val NProbe = 2 // clusters probed by the multi-probe IVF variant
   // filtered-search probe width: single-probe widened by the filter's
@@ -128,6 +129,160 @@ object SimilarityQueries {
       .select(col("query_id"), col("col.vec_id").as("vec_id"),
         (col("pos") + 1).cast("int").as("rnk"),
         round(col("col.cos"), 4).as("cos_sim"))
+
+  /** Element-wise integer sum per label = the unnormalized centroid `c`
+    * (cosine is scale-invariant, so sum ≡ mean and stays integer-exact),
+    * with its squared norm `ncsq`. */
+  private def centroids(e: DataFrame): DataFrame =
+    e.groupBy(col("label"))
+      .agg(array((1 to Dims).map(i => sum(element_at(col("q"), i))): _*).as("c"))
+      .withColumn("ncsq", expr("dot_i64(c, c)"))
+
+  /** Each query row of `qs` (`query_id`, `qq`, `nq`, …) once per probed
+    * cluster: the `label`s of its `n` nearest centroids, cosine DESC then
+    * lowest label. The rank filter is pushed below the shuffle as a
+    * WindowGroupLimit, so at most n rows per query cross it. */
+  private def probeLabels(qs: DataFrame, cent: DataFrame, n: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(cosine(dot("qq", "c"), col("nq"), col("ncsq")).desc, col("label"))
+    qs.crossJoin(broadcast(cent))
+      .withColumn("rnk", row_number().over(w))
+      .filter(if (n == 1) col("rnk") === 1 else col("rnk") <= n)
+      .select(qs.columns.map(col) :+ col("label"): _*)
+  }
+
+  /** SQ8 codes: `q` scaled by ONE global max|component|/127 (a
+    * driver-collected scalar, the same double math as the oracle's `s`
+    * CTE) into int8-range `c`, with its squared norm `ncsq8`. */
+  private def sq8Codes(e: DataFrame): DataFrame = {
+    val maxAbs = e.select(max(array_max(transform(col("q"), x => abs(x)))))
+      .first().getLong(0)
+    e.withColumn("c", transform(col("q"), x => round(x / lit(maxAbs / 127.0), 0).cast("long")))
+      .withColumn("ncsq8", expr("dot_i64(c, c)"))
+  }
+
+  /** The two-stage tail of every code-scored variant: `scored`
+    * (`query_id`, `vec_id`, `dot`, `nq`, `nc` on codes) collapses to
+    * [[ShortK]] candidates per query MAP-SIDE through the bounded
+    * topk_cos aggregate (a row_number window would shuffle every scored
+    * candidate into |Q| partitions: a hot cluster becomes one hot task).
+    * The shortlist's full vectors come back by a broadcast of the tiny id
+    * set against the corpus `e`, and the final window ranks ≤ ShortK rows
+    * per query on exact cosines against `queries`' `qq`/`nq`. */
+  private def shortlistRerank(e: DataFrame, scored: DataFrame, queries: DataFrame): DataFrame = {
+    val shortIds = scored.groupBy(col("query_id"))
+      .agg(expr(s"topk_cos(struct(vec_id, dot, nq, nc), $ShortK)").as("top"))
+      .select(col("query_id"), explode(col("top.vec_id")).as("vec_id"))
+      .join(broadcast(queries.select(col("query_id"), col("qq"), col("nq"))), "query_id")
+    val cosE = cosine(dot("qq", "q"), col("nq"), col("nsq"))
+    val w = Window.partitionBy(col("query_id")).orderBy(cosE.desc, col("vec_id"))
+    e.join(broadcast(shortIds), "vec_id")
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= TopK)
+      .select(col("query_id"), col("vec_id"), col("rnk"), round(cosE, 4).as("cos_sim"))
+  }
+
+  // ---- the IVF/PQ variant table: each `Ivf` row below is one board
+  // query, and ivfQ generates both its Spark plan and its DuckDB oracle
+  // from the row — a new variant is one more row, not another hand-wired
+  // plan and oracle pair.
+
+  /** How probed candidates are scored: exact integer cosine (`Flat`), or
+    * on codes — `Sq8` int8 codes, `Pq` product-quantization codes with
+    * ADC table-lookup scoring (Jégou et al.: M=8 codebook indices per
+    * vector, one M×256 dot table per query), or `PqResidual`, PQ of the
+    * residual v − m_c to the cluster's floor-divided integer mean (the
+    * IVFADC form, §IV-A: lower reconstruction error, pinned in
+    * SimilaritySpec) — then shortlisted and re-ranked exactly. Codebooks
+    * are trained deterministically (see ProductQuantizer), so both
+    * engines derive bit-identical codes and scores. */
+  private sealed trait Kind
+  private case object Flat extends Kind
+  private case object Sq8 extends Kind
+  private case object Pq extends Kind
+  private case object PqResidual extends Kind
+
+  /** Where the inverted file comes from. `AdHoc`: the raw label, in one
+    * query over the checkpointed corpus. `Built`: two `Engine.build`s
+    * (half the corpus, then all of it) accumulate the LEARNED index
+    * delta-only — each build assigns only its batch against centroids
+    * trained once on the fixed snapshot (~half the corpus crosses labels
+    * at sf0.01); see [[graft.similarity.IncrementalIvfIndex]].
+    * `Streamed`: the same layout from two real AvailableNow micro-batch
+    * runs of the index stream (kernel assignment against frozen
+    * centroids, idempotent sink, in-loop maintenance). Built and streamed
+    * rows hash-match a one-shot oracle: incremental ≡ batch, checked by
+    * the driver, not just the specs. */
+  private sealed trait Feed
+  private case object AdHoc extends Feed
+  private case object Built extends Feed
+  private case object Streamed extends Feed
+
+  /** How a query picks clusters: its `n` nearest centroids ranked on the
+    * driver (n = 1 is single probe; a larger n probes a superset, so
+    * recall dominates), the same ranking computed inside each query's
+    * scan task (`Kernel`: the streaming-safe path, checked against the
+    * SAME oracle, so the driver verifies the two ranking homes agree
+    * bit-for-bit), or no search at all (`Stats`: per-cluster row counts
+    * and id bounds of the built index — cluster skew is probe skew). */
+  private sealed trait Probe
+  private final case class Nearest(n: Int) extends Probe
+  private final case class Kernel(n: Int) extends Probe
+  private case object Stats extends Probe
+
+  /** An index lifecycle step. `Compact` rewrites the cluster-partitioned
+    * storage without the tombstones after the second build, after which
+    * the plain probe must give the corpus-minus-deleted result. `Retrain`
+    * runs one Lloyd step over the stored index between the builds; the
+    * swapped-in centroids are durable, so the second build assigns its
+    * arrivals against the retrained quantizer. */
+  private sealed trait Step
+  private case object Compact extends Step
+  private case object Retrain extends Step
+
+  /** One IVF/PQ board row. `filtered` pre-filters candidates on the
+    * `vec_id % 3 = 0` attribute predicate (it rides the candidate scan,
+    * so filtered search is cheaper, never a recall trade); `tombstones`
+    * removes [[deleteSet]] from the searched corpus — by an anti-join at
+    * probe time, or with `Compact` by rewriting storage. */
+  private final case class Ivf(
+      name: String, kind: Kind, feed: Feed, probe: Probe = Nearest(1),
+      filtered: Boolean = false, tombstones: Boolean = false,
+      step: Option[Step] = None)
+
+  /** Single-probe IVF over the raw labels: the board's timed similarity
+    * row, and the candidate arm of q_ann_recall_eval. */
+  private val IvfTopK = Ivf("q_ann_ivf_topk", Flat, AdHoc)
+
+  private val ivfVariants: Seq[Ivf] = Seq(
+    IvfTopK,
+    Ivf("q_ann_ivf_multiprobe", Flat, AdHoc, Nearest(NProbe)),
+    // a selective filter starves one probe: widen it by 1/selectivity
+    Ivf("q_ann_ivf_filtered", Flat, AdHoc, Nearest(FilteredProbe), filtered = true),
+    Ivf("q_ann_ivf_sq8", Sq8, AdHoc),
+    Ivf("q_ann_ivf_pq", Pq, AdHoc),
+    Ivf("q_ann_ivf_pq_residual", PqResidual, AdHoc),
+    Ivf("q_ann_ivf_incremental", Flat, Built),
+    Ivf("q_ann_ivf_incremental_multiprobe", Flat, Built, Nearest(NProbe)),
+    Ivf("q_ann_ivf_incremental_multiprobe_kernel", Flat, Built, Kernel(NProbe)),
+    Ivf("q_ann_ivf_incremental_filtered", Flat, Built, Nearest(FilteredProbe),
+      filtered = true),
+    Ivf("q_ann_ivf_stream_lifecycle", Flat, Streamed),
+    Ivf("q_ann_ivf_stream_lifecycle_pq", Pq, Streamed),
+    Ivf("q_ann_ivf_index_stats", Flat, Built, Stats),
+    // PQ codes stored IN the index: the probe scans (codes, npq) only
+    Ivf("q_ann_ivf_pq_incremental", Pq, Built),
+    Ivf("q_ann_ivf_pq_incremental_multiprobe", Pq, Built, Nearest(NProbe)),
+    Ivf("q_ann_ivf_pq_multiprobe_kernel", Pq, Built, Kernel(NProbe)),
+    // the complete production IVFADC configuration
+    Ivf("q_ann_ivf_pq_residual_incremental", PqResidual, Built),
+    Ivf("q_ann_ivf_pq_residual_incremental_multiprobe", PqResidual, Built, Nearest(NProbe)),
+    Ivf("q_ann_ivf_pq_residual_multiprobe_kernel", PqResidual, Built, Kernel(NProbe)),
+    // the two halves of the deletion lifecycle share one oracle
+    Ivf("q_ann_ivf_incremental_delete", Flat, Built, tombstones = true),
+    Ivf("q_ann_ivf_incremental_compact", Flat, Built, tombstones = true,
+      step = Some(Compact)),
+    Ivf("q_ann_ivf_incremental_retrain", Flat, Built, step = Some(Retrain)))
 
   val qs: Seq[Q] = Seq(
 
@@ -423,24 +578,20 @@ object SimilarityQueries {
     // probe lost) — pinned in SimilaritySpec.
     Q.sql(
       "q_ann_ivf_binary", {
-        val centroidSums = (1 to Dims).map(i => s"sum(q[$i])").mkString(", ")
         val shortN = TopK * 3
         s"""WITH $quantizedSql,
            |b AS (
            |  SELECT vec_id, label, q, nsq, ${packBitsDuck(0)} AS w1,
            |         ${packBitsDuck(32)} AS w2
            |  FROM e),
-           |cent AS (
-           |  SELECT label, [$centroidSums] AS cc,
-           |         list_sum(list_transform([$centroidSums], x -> x * x)) AS ncsq
-           |  FROM e GROUP BY label),
+           |${centSql("cent")},
            |qs AS (SELECT * FROM b WHERE vec_id < $NQueries),
            |assign AS (
            |  SELECT query_id, label FROM (
            |    SELECT qs.vec_id AS query_id, cent.label,
            |           row_number() OVER (PARTITION BY qs.vec_id
            |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-           |                        i -> qs.q[i] * cent.cc[i]))
+           |                        i -> qs.q[i] * cent.c[i]))
            |                      / sqrt(CAST(qs.nsq AS DOUBLE) * CAST(cent.ncsq AS DOUBLE)) DESC,
            |                      cent.label) AS rnk
            |    FROM qs CROSS JOIN cent) t WHERE rnk = 1),
@@ -478,16 +629,10 @@ object SimilarityQueries {
       val e = quantized(s, dir)
         .withColumn("w1", expr(packBitsSpark(0)))
         .withColumn("w2", expr(packBitsSpark(32)))
-      val cent = e.groupBy(col("label"))
-        .agg(array((1 to Dims).map(i => sum(element_at(col("q"), i))): _*).as("cc"))
-        .withColumn("ncsq", expr("dot_i64(cc, cc)"))
       val qs = e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("query_id"), col("q").as("qq"),
           col("nsq").as("nq"), col("w1").as("qw1"), col("w2").as("qw2"))
-      val wAssign = Window.partitionBy(col("query_id"))
-        .orderBy(cosine(dot("qq", "cc"), col("nq"), col("ncsq")).desc, col("label"))
-      val assign = qs.crossJoin(broadcast(cent))
-        .withColumn("rnk", row_number().over(wAssign)).filter(col("rnk") === 1)
+      val assign = probeLabels(qs, centroids(e), 1)
         .select(col("query_id"), col("qw1"), col("qw2"), col("label"))
       val shortIds = e.as("c").join(broadcast(assign.as("a")),
           col("c.label") === col("a.label") && col("c.vec_id") =!= col("a.query_id"))
@@ -637,17 +782,9 @@ object SimilarityQueries {
          |  FROM pairs) t
          |WHERE rnk <= 3""".stripMargin
     ) { (s, dir) =>
-      val e = quantized(s, dir)
-      val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val mid = (b.getLong(0) + b.getLong(1)) / 2
       val wh = graft.engine.Scratch.dir("graft_incknn")
-      def build(batch: DataFrame): Unit = {
-        val rpt = new graft.engine.Engine(s, wh, Map("vectors" -> batch),
-          graft.similarity.IncrementalKnnGraph.models("vectors")).build()
-        require(rpt.ok, rpt.results.mkString("; "))
-      }
-      build(e.filter(col("vec_id") <= mid))
-      build(e)
+      buildHalves(s, wh, quantized(s, dir),
+        graft.similarity.IncrementalKnnGraph.models("vectors"), batch => Map("vectors" -> batch))
       graft.engine.Resolver(s).read(s"$wh/knn_edges")
         .select(col("src_id"), col("nbr_id"), col("rnk"), col("cos_sim"),
           col("cluster").cast("int").as("cluster"))
@@ -835,65 +972,6 @@ object SimilarityQueries {
         .select(col("rnk"), col("doc_id"), round(col("mmr_score"), 4).as("mmr_score"))
     },
 
-    // ---- IVF: integer centroids per label, probe nearest cluster only
-    Q.sql(
-      "q_ann_ivf_topk", {
-        val centroidSums = (1 to Dims).map(i => s"sum(q[$i])").mkString(", ")
-        s"""WITH $quantizedSql,
-           |cent AS (
-           |  SELECT label, [$centroidSums] AS c,
-           |         list_sum(list_transform([$centroidSums], x -> x * x)) AS ncsq
-           |  FROM e GROUP BY label),
-           |qs AS (SELECT * FROM e WHERE vec_id < $NQueries),
-           |assign AS (
-           |  SELECT query_id, label FROM (
-           |    SELECT qs.vec_id AS query_id, cent.label,
-           |           row_number() OVER (PARTITION BY qs.vec_id
-           |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-           |                        i -> qs.q[i] * cent.c[i]))
-           |                      / sqrt(CAST(qs.nsq AS DOUBLE) * CAST(cent.ncsq AS DOUBLE)) DESC,
-           |                      cent.label) AS rnk
-           |    FROM qs CROSS JOIN cent) t WHERE rnk = 1),
-           |pairs AS (
-           |  SELECT qs.vec_id AS query_id, c.vec_id AS vec_id,
-           |         list_sum(list_transform(generate_series(1, $Dims),
-           |                  i -> qs.q[i] * c.q[i])) AS dot,
-           |         qs.nsq AS nq, c.nsq AS nc
-           |  FROM qs JOIN assign a ON qs.vec_id = a.query_id
-           |          JOIN e c ON c.label = a.label AND c.vec_id <> qs.vec_id)
-           |SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk, round(cos_raw, 4) AS cos_sim
-           |FROM (
-           |  SELECT query_id, vec_id,
-           |         dot / sqrt(CAST(nq AS DOUBLE) * CAST(nc AS DOUBLE)) AS cos_raw,
-           |         row_number() OVER (PARTITION BY query_id
-           |           ORDER BY dot / sqrt(CAST(nq AS DOUBLE) * CAST(nc AS DOUBLE)) DESC, vec_id) AS rnk
-           |  FROM pairs) t
-           |WHERE rnk <= $TopK""".stripMargin
-      }
-    ) { (s, dir) =>
-      // the quantized table feeds three subtrees (centroids, queries,
-      // candidates) — checkpoint it once instead of re-scanning parquet
-      // and re-quantizing per subtree
-      val e = quantized(s, dir).localCheckpoint()
-      // element-wise integer sum per label = unnormalized centroid
-      val cent = e.groupBy(col("label"))
-        .agg(array((1 to Dims).map(i => sum(element_at(col("q"), i))): _*).as("c"))
-        .withColumn("ncsq", expr("dot_i64(c, c)"))
-      val qs = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), col("q").as("qq"), col("nsq").as("nq"))
-      val wAssign = Window.partitionBy(col("query_id"))
-        .orderBy(cosine(dot("qq", "c"), col("nq"), col("ncsq")).desc, col("label"))
-      val assign = qs.crossJoin(broadcast(cent))
-        .withColumn("rnk", row_number().over(wAssign))
-        .filter(col("rnk") === 1)
-        .select(col("query_id"), col("qq"), col("nq"), col("label"))
-      val pairs = e.as("c").join(broadcast(assign.as("a")),
-          col("c.label") === col("a.label") && col("c.vec_id") =!= col("a.query_id"))
-        .select(col("query_id"), col("vec_id"),
-          dot("qq", "q").as("dot"), col("nq"), col("nsq").as("nc"))
-      topKReduce(pairs, TopK)
-    },
-
     // ---- index-quality evaluation: recall@k of the single-probe IVF
     // result against the exact brute-force truth, per query — the
     // metric every production vector platform reports continuously
@@ -905,52 +983,20 @@ object SimilarityQueries {
     // Integer-exact: hit counts are ints, recall = n_hit/k rounded.
     Q.sql(
       "q_ann_recall_eval", {
-        val centroidSums = (1 to Dims).map(i => s"sum(q[$i])").mkString(", ")
+        val (ivfCtes, ivfTop) = ivfOracleParts(IvfTopK)
         s"""WITH $quantizedSql,
-           |qs AS (SELECT * FROM e WHERE vec_id < $NQueries),
+           |${ivfCtes.mkString(",\n")},
+           |ivf_top AS (
+           |$ivfTop),
            |bfp AS (
-           |  SELECT qs.vec_id AS query_id, c.vec_id AS vec_id,
-           |         list_sum(list_transform(generate_series(1, $Dims),
-           |                  i -> qs.q[i] * c.q[i])) AS dot,
-           |         qs.nsq AS nq, c.nsq AS nc
-           |  FROM qs JOIN e c ON c.vec_id <> qs.vec_id),
+           |  SELECT q.vec_id AS query_id, c.vec_id AS vec_id, ${dotSql("q.q", "c.q")} AS dot,
+           |         q.nsq AS nq, c.nsq AS nc
+           |  FROM e q JOIN e c ON c.vec_id <> q.vec_id WHERE q.vec_id < $NQueries),
            |bf AS (
-           |  SELECT query_id, vec_id FROM (
-           |    SELECT query_id, vec_id,
-           |           row_number() OVER (PARTITION BY query_id
-           |             ORDER BY dot / sqrt(CAST(nq AS DOUBLE) * CAST(nc AS DOUBLE)) DESC,
-           |                      vec_id) AS rnk
-           |    FROM bfp) t WHERE rnk <= $TopK),
-           |cent AS (
-           |  SELECT label, [$centroidSums] AS c,
-           |         list_sum(list_transform([$centroidSums], x -> x * x)) AS ncsq
-           |  FROM e GROUP BY label),
-           |assign AS (
-           |  SELECT query_id, label FROM (
-           |    SELECT qs.vec_id AS query_id, cent.label,
-           |           row_number() OVER (PARTITION BY qs.vec_id
-           |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-           |                        i -> qs.q[i] * cent.c[i]))
-           |                      / sqrt(CAST(qs.nsq AS DOUBLE) * CAST(cent.ncsq AS DOUBLE)) DESC,
-           |                      cent.label) AS rnk
-           |    FROM qs CROSS JOIN cent) t WHERE rnk = 1),
-           |ivfp AS (
-           |  SELECT qs.vec_id AS query_id, c.vec_id AS vec_id,
-           |         list_sum(list_transform(generate_series(1, $Dims),
-           |                  i -> qs.q[i] * c.q[i])) AS dot,
-           |         qs.nsq AS nq, c.nsq AS nc
-           |  FROM qs JOIN assign a ON qs.vec_id = a.query_id
-           |          JOIN e c ON c.label = a.label AND c.vec_id <> qs.vec_id),
-           |ivf AS (
-           |  SELECT query_id, vec_id FROM (
-           |    SELECT query_id, vec_id,
-           |           row_number() OVER (PARTITION BY query_id
-           |             ORDER BY dot / sqrt(CAST(nq AS DOUBLE) * CAST(nc AS DOUBLE)) DESC,
-           |                      vec_id) AS rnk
-           |    FROM ivfp) t WHERE rnk <= $TopK),
+           |${rankedSql("query_id, vec_id", "query_id", s"$pairCosSql DESC, vec_id", "bfp", TopK)}),
            |hits AS (
            |  SELECT query_id, count(*) AS n_hit
-           |  FROM bf JOIN ivf USING (query_id, vec_id) GROUP BY 1)
+           |  FROM bf JOIN ivf_top USING (query_id, vec_id) GROUP BY 1)
            |SELECT q.query_id, CAST($TopK AS INT) AS k,
            |       CAST(coalesce(h.n_hit, 0) AS INT) AS n_hit,
            |       round(CAST(coalesce(h.n_hit, 0) AS DOUBLE) / $TopK, 4) AS recall_at_k
@@ -966,21 +1012,8 @@ object SimilarityQueries {
         .select(col("query_id"), col("vec_id"),
           dot("qq", "q").as("dot"), col("nq"), col("nsq").as("nc"))
       val bf = topKReduce(bfPairs, TopK).select(col("query_id"), col("vec_id"))
-      // candidate: single-probe IVF top-k (the q_ann_ivf_topk plan)
-      val cent = e.groupBy(col("label"))
-        .agg(array((1 to Dims).map(i => sum(element_at(col("q"), i))): _*).as("c"))
-        .withColumn("ncsq", expr("dot_i64(c, c)"))
-      val wAssign = Window.partitionBy(col("query_id"))
-        .orderBy(cosine(dot("qq", "c"), col("nq"), col("ncsq")).desc, col("label"))
-      val assign = qsq.crossJoin(broadcast(cent))
-        .withColumn("rnk", row_number().over(wAssign))
-        .filter(col("rnk") === 1)
-        .select(col("query_id"), col("qq"), col("nq"), col("label"))
-      val ivfPairs = e.as("c").join(broadcast(assign.as("a")),
-          col("c.label") === col("a.label") && col("c.vec_id") =!= col("a.query_id"))
-        .select(col("query_id"), col("vec_id"),
-          dot("qq", "q").as("dot"), col("nq"), col("nsq").as("nc"))
-      val ivf = topKReduce(ivfPairs, TopK).select(col("query_id"), col("vec_id"))
+      // candidate: the q_ann_ivf_topk plan over the same checkpoint
+      val ivf = probeAdHoc(IvfTopK, e).select(col("query_id"), col("vec_id"))
       val hits = bf.join(ivf, Seq("query_id", "vec_id"))
         .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
       bf.select(col("query_id")).distinct()
@@ -1008,12 +1041,8 @@ object SimilarityQueries {
     // rewrite after convergence is the existing compact/DirSwap path.
     Q.sql(
       "q_ann_ivf_retrain", {
-        val centroidSums = (1 to Dims).map(i => s"sum(q[$i])").mkString(", ")
         s"""WITH $quantizedSql,
-           |cent AS (
-           |  SELECT label, [$centroidSums] AS c,
-           |         list_sum(list_transform([$centroidSums], x -> x * x)) AS ncsq
-           |  FROM e GROUP BY label),
+           |${centSql("cent")},
            |assign AS (
            |  SELECT vec_id, old_label, new_label FROM (
            |    SELECT e.vec_id, e.label AS old_label, cent.label AS new_label,
@@ -1036,10 +1065,7 @@ object SimilarityQueries {
       }
     ) { (s, dir) =>
       val e = quantized(s, dir).localCheckpoint()
-      val cent = e.groupBy(col("label"))
-        .agg(array((1 to Dims).map(i => sum(element_at(col("q"), i))): _*).as("c"))
-        .withColumn("ncsq", expr("dot_i64(c, c)"))
-      val cents = graft.similarity.CentroidAssign.collectCentroids(cent)
+      val cents = graft.similarity.CentroidAssign.collectCentroids(centroids(e))
       val assigned = graft.similarity.CentroidAssign
         .kernel(e.select(col("vec_id"), col("q"), col("nsq")), cents)
         .select(col("vec_id"), col("cluster").as("new_label"))
@@ -1055,68 +1081,6 @@ object SimilarityQueries {
           coalesce(col("n_before"), lit(0L)).cast("int").as("n_before"),
           coalesce(col("n_after"), lit(0L)).cast("int").as("n_after"),
           coalesce(col("n_stay"), lit(0L)).cast("int").as("n_stay"))
-    },
-
-    // ---- multi-probe IVF (nprobe = 2): single-probe IVF recall is
-    // bounded by true neighbors living in the query's SECOND-nearest
-    // cluster — exactly the vectors a query near a centroid boundary
-    // loses. Probing the 2 nearest clusters doubles the candidate scan
-    // (2N/C per query, still ≪ N) and strictly dominates single-probe
-    // recall: the probed set is a superset. Same trade as
-    // q_ann_lsh_multiprobe, on the learned-centroid structure; recall
-    // vs brute-force truth measured in SimilaritySpec.
-    Q.sql(
-      "q_ann_ivf_multiprobe", {
-        val centroidSums = (1 to Dims).map(i => s"sum(q[$i])").mkString(", ")
-        s"""WITH $quantizedSql,
-           |cent AS (
-           |  SELECT label, [$centroidSums] AS c,
-           |         list_sum(list_transform([$centroidSums], x -> x * x)) AS ncsq
-           |  FROM e GROUP BY label),
-           |qs AS (SELECT * FROM e WHERE vec_id < $NQueries),
-           |assign AS (
-           |  SELECT query_id, label FROM (
-           |    SELECT qs.vec_id AS query_id, cent.label,
-           |           row_number() OVER (PARTITION BY qs.vec_id
-           |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-           |                        i -> qs.q[i] * cent.c[i]))
-           |                      / sqrt(CAST(qs.nsq AS DOUBLE) * CAST(cent.ncsq AS DOUBLE)) DESC,
-           |                      cent.label) AS rnk
-           |    FROM qs CROSS JOIN cent) t WHERE rnk <= $NProbe),
-           |pairs AS (
-           |  SELECT qs.vec_id AS query_id, c.vec_id AS vec_id,
-           |         list_sum(list_transform(generate_series(1, $Dims),
-           |                  i -> qs.q[i] * c.q[i])) AS dot,
-           |         qs.nsq AS nq, c.nsq AS nc
-           |  FROM qs JOIN assign a ON qs.vec_id = a.query_id
-           |          JOIN e c ON c.label = a.label AND c.vec_id <> qs.vec_id)
-           |SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk, round(cos_raw, 4) AS cos_sim
-           |FROM (
-           |  SELECT query_id, vec_id,
-           |         dot / sqrt(CAST(nq AS DOUBLE) * CAST(nc AS DOUBLE)) AS cos_raw,
-           |         row_number() OVER (PARTITION BY query_id
-           |           ORDER BY dot / sqrt(CAST(nq AS DOUBLE) * CAST(nc AS DOUBLE)) DESC, vec_id) AS rnk
-           |  FROM pairs) t
-           |WHERE rnk <= $TopK""".stripMargin
-      }
-    ) { (s, dir) =>
-      val e = quantized(s, dir).localCheckpoint()
-      val cent = e.groupBy(col("label"))
-        .agg(array((1 to Dims).map(i => sum(element_at(col("q"), i))): _*).as("c"))
-        .withColumn("ncsq", expr("dot_i64(c, c)"))
-      val qs = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), col("q").as("qq"), col("nsq").as("nq"))
-      val wAssign = Window.partitionBy(col("query_id"))
-        .orderBy(cosine(dot("qq", "c"), col("nq"), col("ncsq")).desc, col("label"))
-      val assign = qs.crossJoin(broadcast(cent))
-        .withColumn("rnk", row_number().over(wAssign))
-        .filter(col("rnk") <= NProbe) // the ONLY change vs single-probe
-        .select(col("query_id"), col("qq"), col("nq"), col("label"))
-      val pairs = e.as("c").join(broadcast(assign.as("a")),
-          col("c.label") === col("a.label") && col("c.vec_id") =!= col("a.query_id"))
-        .select(col("query_id"), col("vec_id"),
-          dot("qq", "q").as("dot"), col("nq"), col("nsq").as("nc"))
-      topKReduce(pairs, TopK)
     },
 
     // ---- FILTERED vector search (brute-force baseline): top-k among
@@ -1155,72 +1119,6 @@ object SimilarityQueries {
       // plain column filter, so it reaches the parquet reader
       val pairs = e.filter(col("vec_id") % 3 === 0)
         .join(broadcast(qs), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          dot("qq", "q").as("dot"), col("nq"), col("nsq").as("nc"))
-      topKReduce(pairs, TopK)
-    },
-
-    // ---- FILTERED IVF search: the predicate composed with the
-    // cluster-probe structure. A selective filter starves a single
-    // probe (its cluster holds ~sel·N/C qualifying rows — possibly
-    // < k), so the standard production rule widens the probe list by
-    // the filter's inverse selectivity: nprobe = 1/sel (= 3 here, the
-    // vec_id % 3 predicate) keeps the EXPECTED qualifying candidate
-    // count equal to the unfiltered single-probe scan. The filter
-    // rides the candidate scan (cluster partition + column predicate
-    // at 100 TB: partition pruning AND row-group skipping); recall vs
-    // the filtered brute-force truth is measured in SimilaritySpec.
-    Q.sql(
-      "q_ann_ivf_filtered", {
-        val centroidSums = (1 to Dims).map(i => s"sum(q[$i])").mkString(", ")
-        s"""WITH $quantizedSql,
-           |cent AS (
-           |  SELECT label, [$centroidSums] AS c,
-           |         list_sum(list_transform([$centroidSums], x -> x * x)) AS ncsq
-           |  FROM e GROUP BY label),
-           |qs AS (SELECT * FROM e WHERE vec_id < $NQueries),
-           |assign AS (
-           |  SELECT query_id, label FROM (
-           |    SELECT qs.vec_id AS query_id, cent.label,
-           |           row_number() OVER (PARTITION BY qs.vec_id
-           |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-           |                        i -> qs.q[i] * cent.c[i]))
-           |                      / sqrt(CAST(qs.nsq AS DOUBLE) * CAST(cent.ncsq AS DOUBLE)) DESC,
-           |                      cent.label) AS rnk
-           |    FROM qs CROSS JOIN cent) t WHERE rnk <= $FilteredProbe),
-           |pairs AS (
-           |  SELECT qs.vec_id AS query_id, c.vec_id AS vec_id,
-           |         list_sum(list_transform(generate_series(1, $Dims),
-           |                  i -> qs.q[i] * c.q[i])) AS dot,
-           |         qs.nsq AS nq, c.nsq AS nc
-           |  FROM qs JOIN assign a ON qs.vec_id = a.query_id
-           |          JOIN e c ON c.label = a.label AND c.vec_id <> qs.vec_id
-           |                   AND c.vec_id % 3 = 0)
-           |SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk, round(cos_raw, 4) AS cos_sim
-           |FROM (
-           |  SELECT query_id, vec_id,
-           |         dot / sqrt(CAST(nq AS DOUBLE) * CAST(nc AS DOUBLE)) AS cos_raw,
-           |         row_number() OVER (PARTITION BY query_id
-           |           ORDER BY dot / sqrt(CAST(nq AS DOUBLE) * CAST(nc AS DOUBLE)) DESC, vec_id) AS rnk
-           |  FROM pairs) t
-           |WHERE rnk <= $TopK""".stripMargin
-      }
-    ) { (s, dir) =>
-      val e = quantized(s, dir).localCheckpoint()
-      val cent = e.groupBy(col("label"))
-        .agg(array((1 to Dims).map(i => sum(element_at(col("q"), i))): _*).as("c"))
-        .withColumn("ncsq", expr("dot_i64(c, c)"))
-      val qs = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), col("q").as("qq"), col("nsq").as("nq"))
-      val wAssign = Window.partitionBy(col("query_id"))
-        .orderBy(cosine(dot("qq", "c"), col("nq"), col("ncsq")).desc, col("label"))
-      val assign = qs.crossJoin(broadcast(cent))
-        .withColumn("rnk", row_number().over(wAssign))
-        .filter(col("rnk") <= FilteredProbe) // widened by 1/selectivity
-        .select(col("query_id"), col("qq"), col("nq"), col("label"))
-      val pairs = e.filter(col("vec_id") % 3 === 0).as("c")
-        .join(broadcast(assign.as("a")),
-          col("c.label") === col("a.label") && col("c.vec_id") =!= col("a.query_id"))
         .select(col("query_id"), col("vec_id"),
           dot("qq", "q").as("dot"), col("nq"), col("nsq").as("nc"))
       topKReduce(pairs, TopK)
@@ -1417,840 +1315,15 @@ object SimilarityQueries {
       }
     ) { (s, dir) =>
       val e = quantized(s, dir).localCheckpoint()
-      // global scale: ONE driver-collected scalar (same bytes a scalar
-      // subquery moves); identical double math to the oracle's `s` CTE
-      val maxAbs = e.select(max(array_max(transform(col("q"), x => abs(x)))))
-        .first().getLong(0)
-      val sc = maxAbs / 127.0
-      val c8 = e.withColumn("c",
-          transform(col("q"), x => round(x / lit(sc), 0).cast("long")))
-        .withColumn("ncsq8", expr("dot_i64(c, c)"))
+      val c8 = sq8Codes(e)
       val qs = c8.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("query_id"), col("q").as("qq"),
           col("nsq").as("nq"), col("c").as("qc"), col("ncsq8").as("nq8"))
-      val short = TopK * 3
-      // skew-safe shortlist: the full-corpus code scan collapses to ≤3k
-      // candidates per query map-side via the TopKCos aggregate (the
-      // row_number form would shuffle all N scored rows into |Q|
-      // partitions); full vectors for the exact re-rank come back via a
-      // broadcast of the tiny shortlist against the corpus scan
-      val shortIds = c8.join(broadcast(qs), col("vec_id") =!= col("query_id"))
+      // the full-corpus code scan, shortlisted and re-ranked exactly
+      val scored = c8.join(broadcast(qs), col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"),
-          dot("qc", "c").as("dot8"), col("nq8"), col("ncsq8"))
-        .groupBy(col("query_id"))
-        .agg(expr(s"topk_cos(struct(vec_id, dot8, nq8, ncsq8), $short)").as("top"))
-        .select(col("query_id"), explode(col("top.vec_id")).as("vec_id"))
-        .join(broadcast(qs.select(col("query_id"), col("qq"), col("nq"))), "query_id")
-      val rerank = e.join(broadcast(shortIds), "vec_id")
-      val cosE = cosine(dot("qq", "q"), col("nq"), col("nsq"))
-      // final ordering over ≤3k rows per query — trivially small window
-      val w = Window.partitionBy(col("query_id")).orderBy(cosE.desc, col("vec_id"))
-      rerank
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= TopK)
-        .select(col("query_id"), col("vec_id"), col("rnk"),
-          round(cosE, 4).as("cos_sim"))
-    },
-
-    // ---- IVF probe + SQ8 code scoring composed: the full production
-    // probe economics in one query. A query (1) coarse-quantizes to its
-    // nearest cluster (IVF: candidates = N/C of the corpus — at 100 TB a
-    // partition-pruned scan, see IncrementalIvfIndex), (2) scores ONLY
-    // that cluster's members on int8 codes (8× less data touched per
-    // candidate at production layout), (3) exactly re-ranks the code
-    // shortlist on full vectors. Recall loss can come from either stage
-    // (cluster boundary, code boundary) — measured against brute-force
-    // truth in SimilaritySpec.
-    Q.sql(
-      "q_ann_ivf_sq8", {
-        val centroidSums = (1 to Dims).map(i => s"sum(q[$i])").mkString(", ")
-        val short = TopK * 3
-        s"""WITH $quantizedSql,
-           |s AS (SELECT max(list_max(list_transform(q, x -> abs(x)))) / 127.0 AS sc FROM e),
-           |c8 AS (
-           |  SELECT vec_id, label, nsq, q,
-           |         list_transform(q, x -> CAST(round(x / sc) AS BIGINT)) AS c
-           |  FROM e, s),
-           |n8 AS (SELECT vec_id, label, nsq, q, c,
-           |              list_sum(list_transform(c, x -> x * x)) AS ncsq8 FROM c8),
-           |cent AS (
-           |  SELECT label, [$centroidSums] AS cc,
-           |         list_sum(list_transform([$centroidSums], x -> x * x)) AS ncsq
-           |  FROM e GROUP BY label),
-           |qs AS (SELECT * FROM n8 WHERE vec_id < $NQueries),
-           |assign AS (
-           |  SELECT query_id, label FROM (
-           |    SELECT qs.vec_id AS query_id, cent.label,
-           |           row_number() OVER (PARTITION BY qs.vec_id
-           |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-           |                        i -> qs.q[i] * cent.cc[i]))
-           |                      / sqrt(CAST(qs.nsq AS DOUBLE) * CAST(cent.ncsq AS DOUBLE)) DESC,
-           |                      cent.label) AS rnk
-           |    FROM qs CROSS JOIN cent) t WHERE rnk = 1),
-           |shortlist AS (
-           |  SELECT query_id, vec_id, q, nsq, qq, nq FROM (
-           |    SELECT qs.vec_id AS query_id, c.vec_id AS vec_id, c.q, c.nsq,
-           |           qs.q AS qq, qs.nsq AS nq,
-           |           row_number() OVER (PARTITION BY qs.vec_id
-           |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-           |                        i -> qs.c[i] * c.c[i]))
-           |                      / sqrt(CAST(qs.ncsq8 AS DOUBLE) * CAST(c.ncsq8 AS DOUBLE)) DESC,
-           |                      c.vec_id) AS rnk8
-           |    FROM qs JOIN assign a ON qs.vec_id = a.query_id
-           |            JOIN n8 c ON c.label = a.label AND c.vec_id <> qs.vec_id) t
-           |  WHERE rnk8 <= $short),
-           |exact AS (
-           |  SELECT query_id, vec_id,
-           |         list_sum(list_transform(generate_series(1, $Dims),
-           |                  i -> qq[i] * q[i]))
-           |           / sqrt(CAST(nq AS DOUBLE) * CAST(nsq AS DOUBLE)) AS cos_raw
-           |  FROM shortlist)
-           |SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk, round(cos_raw, 4) AS cos_sim
-           |FROM (
-           |  SELECT query_id, vec_id, cos_raw,
-           |         row_number() OVER (PARTITION BY query_id
-           |           ORDER BY cos_raw DESC, vec_id) AS rnk
-           |  FROM exact) t
-           |WHERE rnk <= $TopK""".stripMargin
-      }
-    ) { (s, dir) =>
-      val e = quantized(s, dir).localCheckpoint()
-      val maxAbs = e.select(max(array_max(transform(col("q"), x => abs(x)))))
-        .first().getLong(0)
-      val sc = maxAbs / 127.0
-      val c8 = e.withColumn("c",
-          transform(col("q"), x => round(x / lit(sc), 0).cast("long")))
-        .withColumn("ncsq8", expr("dot_i64(c, c)"))
-      val cent = e.groupBy(col("label"))
-        .agg(array((1 to Dims).map(i => sum(element_at(col("q"), i))): _*).as("cc"))
-        .withColumn("ncsq", expr("dot_i64(cc, cc)"))
-      val qs = c8.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), col("q").as("qq"),
-          col("nsq").as("nq"), col("c").as("qc"), col("ncsq8").as("nq8"))
-      val wAssign = Window.partitionBy(col("query_id"))
-        .orderBy(cosine(dot("qq", "cc"), col("nq"), col("ncsq")).desc, col("label"))
-      val assign = qs.crossJoin(broadcast(cent))
-        .withColumn("rnk", row_number().over(wAssign))
-        .filter(col("rnk") === 1)
-        .select(col("query_id"), col("qq"), col("nq"), col("qc"), col("nq8"), col("label"))
-      val short = TopK * 3
-      // skew-safe shortlist (the q_ann_sq8_rerank idiom): the probed
-      // cluster's code scores collapse to ≤3k candidates per query
-      // MAP-SIDE via the TopKCos partial aggregate — the row_number
-      // form here would shuffle every scored candidate into |Q|
-      // partitions and sort there, the exact skew shape topk_cos was
-      // introduced to eliminate (a hot cluster = one hot task). Full
-      // vectors for the exact re-rank come back via a broadcast of the
-      // tiny shortlist against the corpus scan; ordering is
-      // bit-identical (same cos evidence, same vec_id tiebreak).
-      val shortIds = c8.as("c").join(broadcast(assign.as("a")),
-          col("c.label") === col("a.label") && col("c.vec_id") =!= col("a.query_id"))
-        .select(col("query_id"), col("c.vec_id").as("vec_id"),
-          dot("qc", "c").as("dot8"), col("nq8"), col("ncsq8"))
-        .groupBy(col("query_id"))
-        .agg(expr(s"topk_cos(struct(vec_id, dot8, nq8, ncsq8), $short)").as("top"))
-        .select(col("query_id"), explode(col("top.vec_id")).as("vec_id"))
-        .join(broadcast(qs.select(col("query_id"), col("qq"), col("nq"))), "query_id")
-      val rerank = e.join(broadcast(shortIds), "vec_id")
-      val cosE = cosine(dot("qq", "q"), col("nq"), col("nsq"))
-      // final ordering over ≤3k rows per query — trivially small window
-      val w = Window.partitionBy(col("query_id")).orderBy(cosE.desc, col("vec_id"))
-      rerank
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= TopK)
-        .select(col("query_id"), col("vec_id"), col("rnk"),
-          round(cosE, 4).as("cos_sim"))
-    },
-
-    // ---- IVF-PQ: product quantization + ADC table-lookup scoring —
-    // the full published probe economics (Jégou et al.). Vectors are
-    // coded as M=8 per-subspace codebook indices (M bytes at production
-    // layout vs 64×8 for the raw vector); a query (1) coarse-quantizes
-    // to its nearest cluster (candidates = N/C of the corpus), (2)
-    // precomputes ONE ADC table — its exact integer dot against every
-    // codebook entry, M×256 longs — and scores each candidate with M
-    // TABLE LOOKUPS + adds (zero per-candidate vector arithmetic: the
-    // scan touches only the M-byte code), (3) exactly re-ranks the
-    // code shortlist on full vectors. Codebooks are trained
-    // deterministically (LSH cells + exact cosine medoids — see
-    // ProductQuantizer), so both engines build bit-identical codebooks
-    // and the result hash-checks like every other ANN variant; recall
-    // vs brute-force truth measured in SimilaritySpec.
-    Q.sql(
-      "q_ann_ivf_pq",
-      ivfPqOracleSql
-    ) { (s, dir) =>
-      import s.implicits._
-      val PQ = graft.similarity.ProductQuantizer
-      val e = quantized(s, dir).localCheckpoint()
-      val cb = PQ.train(e)
-      val cent = e.groupBy(col("label"))
-        .agg(array((1 to Dims).map(i => sum(element_at(col("q"), i))): _*).as("cc"))
-        .withColumn("ncsq", expr("dot_i64(cc, cc)"))
-      val qs0 = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), col("q").as("qq"), col("nsq").as("nq"))
-      val wAssign = Window.partitionBy(col("query_id"))
-        .orderBy(cosine(dot("qq", "cc"), col("nq"), col("ncsq")).desc, col("label"))
-      // |Q| assigned query rows collected to the driver (the P8
-      // driver-collected-bound idiom) to precompute each query's ADC
-      // lookup table against the driver-resident codebook
-      val assigned = qs0.crossJoin(broadcast(cent))
-        .withColumn("rnk", row_number().over(wAssign))
-        .filter(col("rnk") === 1)
-        .select(col("query_id"), col("qq"), col("nq"), col("label"))
-        .collect()
-      val qDf = assigned.toSeq.map { r =>
-        val qq = r.getSeq[Long](1).toArray
-        (r.getLong(0), qq.toSeq, r.getLong(2), r.getInt(3), PQ.adcTable(qq, cb))
-      }.toDF("query_id", "qq", "nq", "cluster", "adc")
-      // candidates carry only their M-int code + reconstructed norm —
-      // both scan-local (plane-sign codegen + codebook-norm lookups)
-      val encoded = e
-        .withColumn("codes", PQ.codesCol)
-        .withColumn("npq", PQ.npqCol(cb))
-      val pairs = encoded.join(broadcast(qDf),
-          col("label") === col("cluster") && col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          PQ.adcDotCol.as("dot"), col("nq"), col("npq").as("nc"))
-      val short = TopK * 3
-      val shortIds = pairs.groupBy(col("query_id"))
-        .agg(expr(s"topk_cos(struct(vec_id, dot, nq, nc), $short)").as("top"))
-        .select(col("query_id"), explode(col("top.vec_id")).as("vec_id"))
-        .join(broadcast(qDf.select(col("query_id"), col("qq"), col("nq"))), "query_id")
-      val rerank = e.join(broadcast(shortIds), "vec_id")
-      val cosE = cosine(dot("qq", "q"), col("nq"), col("nsq"))
-      // final ordering over ≤3k rows per query — trivially small window
-      val w = Window.partitionBy(col("query_id")).orderBy(cosE.desc, col("vec_id"))
-      rerank
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= TopK)
-        .select(col("query_id"), col("vec_id"), col("rnk"),
-          round(cosE, 4).as("cos_sim"))
-    },
-
-    // ---- RESIDUAL product quantization — the published IVFADC
-    // formulation (Jégou et al. §IV-A: quantize v − m_c, the residual
-    // to the coarse centroid, not the raw vector): residuals center
-    // near zero, so the same 8×256-entry codebook budget spends its
-    // entries on a tighter distribution — measurably lower total
-    // reconstruction error than raw-vector PQ (pinned in
-    // SimilaritySpec). m_c is the cluster's floor-divided integer mean
-    // ((S − pmod(S, n)) div n — exact and engine-identical for
-    // negative sums too), so everything stays in the established
-    // integer-exactness contract. ADC keeps the zero-arithmetic scan:
-    // the numerator decomposes as dot(q, m_c) — one integer per
-    // (query, probed cluster), precomputed — plus residual-codebook
-    // table lookups, and the stored npq is |m_c + r̂|², an integer
-    // computed at ENCODE time (per-subspace reconstruction dots
-    // against the 128 KB entries literal). Hash-checks via the
-    // own-oracle idiom: both engines derive bit-identical means,
-    // codebooks, and scores.
-    Q.sql(
-      "q_ann_ivf_pq_residual",
-      ivfPqResidualOracleSql
-    ) { (s, dir) =>
-      import s.implicits._
-      val PQ = graft.similarity.ProductQuantizer
-      val e = quantized(s, dir).localCheckpoint()
-      val means = e.groupBy(col("label"))
-        .agg(array((1 to Dims).map(i => sum(element_at(col("q"), i))): _*).as("s"),
-          count(lit(1)).as("n"))
-        .select(col("label"),
-          expr("transform(s, x -> (x - pmod(x, n)) div n)").as("mc"))
-      val resid = e
-        .select(col("vec_id"), col("label"), col("q").as("qv"))
-        .join(broadcast(means), "label")
-        .withColumn("q", expr("zip_with(qv, mc, (a, b) -> a - b)"))
-        .withColumn("nsq", expr("dot_i64(q, q)"))
-      val cb = PQ.train(resid.select(col("vec_id"), col("q"), col("nsq")))
-      val cent = e.groupBy(col("label"))
-        .agg(array((1 to Dims).map(i => sum(element_at(col("q"), i))): _*).as("cc"))
-        .withColumn("ncsq", expr("dot_i64(cc, cc)"))
-      val qs0 = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), col("q").as("qq"), col("nsq").as("nq"))
-      val wAssign = Window.partitionBy(col("query_id"))
-        .orderBy(cosine(dot("qq", "cc"), col("nq"), col("ncsq")).desc, col("label"))
-      val assigned = qs0.crossJoin(broadcast(cent))
-        .withColumn("rnk", row_number().over(wAssign))
-        .filter(col("rnk") === 1)
-        .select(col("query_id"), col("qq"), col("nq"), col("label"))
-        .collect()
-      val meanByLabel = means.select(col("label"), col("mc"))
-        .as[(Int, Seq[Long])].collect().toMap
-      val qDf = assigned.toSeq.map { r =>
-        val qq = r.getSeq[Long](1).toArray
-        val lbl = r.getInt(3)
-        val mc = meanByLabel(lbl)
-        var qm = 0L
-        var i = 0
-        while (i < qq.length) { qm += qq(i) * mc(i); i += 1 }
-        (r.getLong(0), qq.toSeq, r.getLong(2), lbl, qm, PQ.adcTable(qq, cb))
-      }.toDF("query_id", "qq", "nq", "cluster", "qm", "adc")
-      val encoded = resid
-        .withColumn("codes", PQ.codesCol)
-        .withColumn("npq", PQ.npqResidualCol(cb))
-      val pairs = encoded.join(broadcast(qDf),
-          col("label") === col("cluster") && col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          (col("qm") + PQ.adcDotCol).as("dot"), col("nq"), col("npq").as("nc"))
-      val short = TopK * 3
-      val shortIds = pairs.groupBy(col("query_id"))
-        .agg(expr(s"topk_cos(struct(vec_id, dot, nq, nc), $short)").as("top"))
-        .select(col("query_id"), explode(col("top.vec_id")).as("vec_id"))
-        .join(broadcast(qDf.select(col("query_id"), col("qq"), col("nq"))), "query_id")
-      val rerank = e.join(broadcast(shortIds), "vec_id")
-      val cosE = cosine(dot("qq", "q"), col("nq"), col("nsq"))
-      val w = Window.partitionBy(col("query_id")).orderBy(cosE.desc, col("vec_id"))
-      rerank.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= TopK)
-        .select(col("query_id"), col("vec_id"), col("rnk"),
-          round(cosE, 4).as("cos_sim"))
-    },
-
-    // ---- incrementally-built IVF index: two engine builds (half the
-    // corpus, then all of it) accumulate `ivf_index` delta-only — each
-    // build assigns ONLY its batch against centroids trained once on
-    // the fixed snapshot — and probing the accumulated index must
-    // hash-match the one-shot oracle: incremental ≡ batch, checked by
-    // the driver, not just the spec. Unlike q_ann_ivf_topk (whose
-    // inverted file is the raw label), the index here is the LEARNED
-    // partition — every vector's nearest trained centroid (~half the
-    // corpus crosses labels at sf0.01). See
-    // [[graft.similarity.IncrementalIvfIndex]].
-    Q.sql(
-      "q_ann_ivf_incremental",
-      ivfIncrementalOracleSql
-    ) { (s, dir) =>
-      val e = quantized(s, dir)
-      val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val mid = (b.getLong(0) + b.getLong(1)) / 2
-      val wh = graft.engine.Scratch.dir("graft_incivf")
-      def build(batch: DataFrame): Unit = {
-        val rpt = new graft.engine.Engine(s, wh,
-          Map("vectors" -> batch, "vectors_training" -> e),
-          graft.similarity.IncrementalIvfIndex.models(
-            "vectors", "vectors_training", Dims)).build()
-        require(rpt.ok, rpt.results.mkString("; "))
-      }
-      build(e.filter(col("vec_id") <= mid))
-      build(e)
-      graft.similarity.IncrementalIvfIndex.searchTopK(
-        graft.engine.Resolver(s).read(s"$wh/ivf_index"), NQueries, TopK)
-    },
-
-    // ---- multi-probe over the SAME incrementally-built index: each
-    // query probes its NProbe nearest trained centroids instead of only
-    // its own cluster — the ad-hoc q_ann_ivf_multiprobe recall win
-    // wired through the index's partition-pruned read path. The probed
-    // cluster set is a driver-derived LITERAL isin on the
-    // cluster-partitioned storage, so the executed scan's
-    // PartitionFilters names exactly the probed directories (pinned in
-    // IncrementalIvfIndexSpec along with single ⊆ multi recall).
-    Q.sql(
-      "q_ann_ivf_incremental_multiprobe",
-      ivfIncrementalMultiProbeOracleSql
-    ) { (s, dir) =>
-      val e = quantized(s, dir)
-      val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val mid = (b.getLong(0) + b.getLong(1)) / 2
-      val wh = graft.engine.Scratch.dir("graft_incivfmp")
-      def build(batch: DataFrame): Unit = {
-        val rpt = new graft.engine.Engine(s, wh,
-          Map("vectors" -> batch, "vectors_training" -> e),
-          graft.similarity.IncrementalIvfIndex.models(
-            "vectors", "vectors_training", Dims)).build()
-        require(rpt.ok, rpt.results.mkString("; "))
-      }
-      build(e.filter(col("vec_id") <= mid))
-      build(e)
-      graft.similarity.IncrementalIvfIndex.searchTopKMultiProbe(
-        graft.engine.Resolver(s).read(s"$wh/ivf_index"),
-        graft.engine.Resolver(s).read(s"$wh/ivf_centroids"), NQueries, TopK, NProbe)
-    },
-
-    // ---- the SAME multi-probe search through the scan-local
-    // kernelTopN ranking (the streaming-safe path: probe lists
-    // computed inside each query's scan task, not on the driver) —
-    // hash-checked against the SAME oracle as the driver-ranked form,
-    // so the driver verifies the two ranking homes agree bit-for-bit
-    // on top of the spec's fixture pin.
-    Q.sql(
-      "q_ann_ivf_incremental_multiprobe_kernel",
-      ivfIncrementalMultiProbeOracleSql
-    ) { (s, dir) =>
-      val e = quantized(s, dir)
-      val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val mid = (b.getLong(0) + b.getLong(1)) / 2
-      val wh = graft.engine.Scratch.dir("graft_incivfmpk")
-      def build(batch: DataFrame): Unit = {
-        val rpt = new graft.engine.Engine(s, wh,
-          Map("vectors" -> batch, "vectors_training" -> e),
-          graft.similarity.IncrementalIvfIndex.models(
-            "vectors", "vectors_training", Dims)).build()
-        require(rpt.ok, rpt.results.mkString("; "))
-      }
-      build(e.filter(col("vec_id") <= mid))
-      build(e)
-      val index = graft.engine.Resolver(s).read(s"$wh/ivf_index")
-      graft.similarity.IncrementalIvfIndex.searchTopKFor(
-        index,
-        index.filter(col("vec_id") < NQueries)
-          .select(col("vec_id"), col("q"), col("nsq")),
-        graft.similarity.CentroidAssign.collectCentroids(
-          graft.engine.Resolver(s).read(s"$wh/ivf_centroids")),
-        TopK, nprobe = NProbe)
-    },
-
-    // ---- the STREAMING index lifecycle under the driver's hash gate:
-    // two REAL AvailableNow micro-batch runs of vectorIndexStream
-    // (kernel assignment against frozen centroids, idempotent
-    // (cluster, batch_id) sink, in-loop cadence-gated maintenance via
-    // maintenanceMaxFiles) build the cluster-partitioned layout, then
-    // the standard searchTopK probes it — and the result must
-    // hash-match the SAME one-shot oracle as the engine-built
-    // incremental index, because stream and engine share the
-    // assignment kernel and the layout contract. StreamingSpec pins
-    // the stream's exactly-once/restart semantics; THIS entry makes
-    // the whole lifecycle's output oracle-checked, not just spec'd.
-    Q.sql(
-      "q_ann_ivf_stream_lifecycle",
-      ivfIncrementalOracleSql
-    ) { (s, dir) =>
-      val e = quantized(s, dir).localCheckpoint()
-      val cents = graft.similarity.CentroidAssign.collectCentroids(
-        graft.similarity.IncrementalIvfIndex.centroids(e, Dims))
-      val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val mid = (b.getLong(0) + b.getLong(1)) / 2
-      val tmp = graft.engine.Scratch.dir("graft_streamivf")
-      val src = s"$tmp/src"; val idx = s"$tmp/idx"; val ckp = s"$tmp/ckp"
-      val vecs = e.select(col("vec_id"), col("q"), col("nsq"))
-      val schema = vecs.schema
-      vecs.filter(col("vec_id") <= mid).write.mode("append").parquet(src)
-      graft.streaming.Streaming.vectorIndexStream(
-        s, src, idx, ckp, schema, cents, maintenanceMaxFiles = Some(2))
-      vecs.filter(col("vec_id") > mid).write.mode("append").parquet(src)
-      graft.streaming.Streaming.vectorIndexStream(
-        s, src, idx, ckp, schema, cents, maintenanceMaxFiles = Some(2))
-      graft.similarity.IncrementalIvfIndex.searchTopK(
-        graft.engine.Resolver(s).read(idx), NQueries, TopK)
-    },
-
-    // ---- index BALANCE diagnostics: per-cluster row counts and id
-    // bounds over the incrementally-built index — the operational
-    // query an IVF deployment watches, because cluster skew IS probe
-    // skew (a probe reads its cluster's partition: the hottest cluster
-    // bounds tail latency, and a degenerate quantizer shows up here
-    // before it shows up in recall). Pure metadata aggregation over
-    // the cluster-partitioned layout: one partial-agg scan, no joins.
-    Q.sql(
-      "q_ann_ivf_index_stats", {
-        val centroidSums = (1 to Dims).map(i => s"sum(q[$i])").mkString(", ")
-        s"""WITH $quantizedSql,
-           |cent AS (
-           |  SELECT label, [$centroidSums] AS c,
-           |         list_sum(list_transform([$centroidSums], x -> x * x)) AS ncsq
-           |  FROM e GROUP BY label),
-           |assign AS (
-           |  SELECT vec_id, cluster FROM (
-           |    SELECT e.vec_id, cent.label AS cluster,
-           |           row_number() OVER (PARTITION BY e.vec_id
-           |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-           |                        i -> e.q[i] * cent.c[i]))
-           |                      / sqrt(CAST(e.nsq AS DOUBLE) * CAST(cent.ncsq AS DOUBLE)) DESC,
-           |                      cent.label) AS rnk
-           |    FROM e CROSS JOIN cent) t WHERE rnk = 1)
-           |SELECT cluster, count(*) AS n_vectors,
-           |       min(vec_id) AS min_vec_id, max(vec_id) AS max_vec_id
-           |FROM assign GROUP BY cluster""".stripMargin
-      }
-    ) { (s, dir) =>
-      val e = quantized(s, dir)
-      val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val mid = (b.getLong(0) + b.getLong(1)) / 2
-      val wh = graft.engine.Scratch.dir("graft_incivfstats")
-      def build(batch: DataFrame): Unit = {
-        val rpt = new graft.engine.Engine(s, wh,
-          Map("vectors" -> batch, "vectors_training" -> e),
-          graft.similarity.IncrementalIvfIndex.models(
-            "vectors", "vectors_training", Dims)).build()
-        require(rpt.ok, rpt.results.mkString("; "))
-      }
-      build(e.filter(col("vec_id") <= mid))
-      build(e)
-      graft.engine.Resolver(s).read(s"$wh/ivf_index")
-        .groupBy(col("cluster"))
-        .agg(count(lit(1)).as("n_vectors"),
-          min(col("vec_id")).as("min_vec_id"),
-          max(col("vec_id")).as("max_vec_id"))
-    },
-
-    // ---- the PQ (production-layout) streaming lifecycle under the
-    // same gate: vectorIndexStreamPQ encodes each arriving vector
-    // in-scan (cluster + PQ codes + reconstructed norm against the
-    // frozen codebook) across two real micro-batch runs with in-loop
-    // maintenance, and the ADC probe over the streamed directory must
-    // hash-match the engine-built PQ index's one-shot oracle.
-    Q.sql(
-      "q_ann_ivf_stream_lifecycle_pq",
-      ivfPqIncrementalOracleSql
-    ) { (s, dir) =>
-      val e = quantized(s, dir).localCheckpoint()
-      val PQ = graft.similarity.ProductQuantizer
-      val cents = graft.similarity.CentroidAssign.collectCentroids(
-        graft.similarity.IncrementalIvfIndex.centroids(e, Dims))
-      val cb = PQ.collectCodebook(
-        PQ.entriesDf(e.select(col("vec_id"), col("q"), col("nsq"))))
-      // the probe below takes the codebook as a frame: re-emit the
-      // collected one as a local relation, so its collect runs no job
-      import s.implicits._
-      val cbDf = (for (m <- cb.ent.indices; c <- cb.ent(m).indices)
-        yield (m, c, cb.ent(m)(c).toSeq, cb.entNsq(m)(c))).toDF("m", "code", "ent", "ent_nsq")
-      val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val mid = (b.getLong(0) + b.getLong(1)) / 2
-      val tmp = graft.engine.Scratch.dir("graft_streamivfpq")
-      val src = s"$tmp/src"; val idx = s"$tmp/idx"; val ckp = s"$tmp/ckp"
-      val vecs = e.select(col("vec_id"), col("q"), col("nsq"))
-      val schema = vecs.schema
-      vecs.filter(col("vec_id") <= mid).write.mode("append").parquet(src)
-      graft.streaming.Streaming.vectorIndexStreamPQ(
-        s, src, idx, ckp, schema, cents, cb, maintenanceMaxFiles = Some(2))
-      vecs.filter(col("vec_id") > mid).write.mode("append").parquet(src)
-      graft.streaming.Streaming.vectorIndexStreamPQ(
-        s, src, idx, ckp, schema, cents, cb, maintenanceMaxFiles = Some(2))
-      graft.similarity.IncrementalIvfIndex.searchTopKPQ(
-        graft.engine.Resolver(s).read(idx), cbDf, NQueries, TopK, shortK = TopK * 3)
-    },
-
-    // ---- FILTERED search over the SAME incrementally-built index:
-    // q_ann_ivf_filtered's metadata-predicate semantics wired through
-    // the index's partition-pruned read path. The predicate applies to
-    // the candidate scan only (cluster isin pruning + row predicate in
-    // one scan — at 100 TB: directory pruning AND row-group skipping),
-    // queries probe regardless, and the probe list is widened by the
-    // filter's inverse selectivity (nprobe = 3). Incremental build ≡
-    // one-shot filtered oracle, driver-checked.
-    Q.sql(
-      "q_ann_ivf_incremental_filtered",
-      ivfIncrementalFilteredOracleSql
-    ) { (s, dir) =>
-      val e = quantized(s, dir)
-      val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val mid = (b.getLong(0) + b.getLong(1)) / 2
-      val wh = graft.engine.Scratch.dir("graft_incivff")
-      def build(batch: DataFrame): Unit = {
-        val rpt = new graft.engine.Engine(s, wh,
-          Map("vectors" -> batch, "vectors_training" -> e),
-          graft.similarity.IncrementalIvfIndex.models(
-            "vectors", "vectors_training", Dims)).build()
-        require(rpt.ok, rpt.results.mkString("; "))
-      }
-      build(e.filter(col("vec_id") <= mid))
-      build(e)
-      graft.similarity.IncrementalIvfIndex.searchTopKMultiProbe(
-        graft.engine.Resolver(s).read(s"$wh/ivf_index"),
-        graft.engine.Resolver(s).read(s"$wh/ivf_centroids"), NQueries, TopK,
-        nprobe = FilteredProbe,
-        candFilter = Some(col("vec_id") % 3 === 0))
-    },
-
-    // ---- PQ codes stored IN the incremental index: the modelsPQ DAG
-    // adds a pq_codebook Table (trained once on the same fixed snapshot
-    // as the centroids — frozen-quantizer contract) and stores each
-    // vector's M-index PQ code + reconstructed norm beside its cluster.
-    // The probe is then the full production ADC economics over the
-    // index layout itself: a partition-pruned, COLUMN-PRUNED scan of
-    // (codes, npq) only — M bytes per candidate at production layout —
-    // ADC table-lookup scoring, and full vectors touched only for the
-    // shortlist re-rank. Incremental build ≡ one-shot oracle, checked
-    // by the driver like q_ann_ivf_incremental.
-    Q.sql(
-      "q_ann_ivf_pq_incremental",
-      ivfPqIncrementalOracleSql
-    ) { (s, dir) =>
-      val e = quantized(s, dir)
-      val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val mid = (b.getLong(0) + b.getLong(1)) / 2
-      val wh = graft.engine.Scratch.dir("graft_incivfpq")
-      def build(batch: DataFrame): Unit = {
-        val rpt = new graft.engine.Engine(s, wh,
-          Map("vectors" -> batch, "vectors_training" -> e),
-          graft.similarity.IncrementalIvfIndex.modelsPQ(
-            "vectors", "vectors_training", Dims)).build()
-        require(rpt.ok, rpt.results.mkString("; "))
-      }
-      build(e.filter(col("vec_id") <= mid))
-      build(e)
-      graft.similarity.IncrementalIvfIndex.searchTopKPQ(
-        graft.engine.Resolver(s).read(s"$wh/ivf_index"),
-        graft.engine.Resolver(s).read(s"$wh/pq_codebook"), NQueries, TopK, shortK = TopK * 3)
-    },
-
-    // ---- MULTI-PROBE over the PQ-coded incremental index — the
-    // production ANN configuration (IVFADC economics with nprobe>1):
-    // each query ADC-scores its NProbe nearest clusters' code columns
-    // (partition-pruned union isin, per-query array_contains match),
-    // exact re-rank on the shortlist. Candidate superset ⇒ recall
-    // dominates single-probe PQ (SimilaritySpec); incremental build ≡
-    // one-shot oracle, driver-checked.
-    Q.sql(
-      "q_ann_ivf_pq_incremental_multiprobe",
-      ivfPqIncrementalMultiProbeOracleSql
-    ) { (s, dir) =>
-      val e = quantized(s, dir)
-      val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val mid = (b.getLong(0) + b.getLong(1)) / 2
-      val wh = graft.engine.Scratch.dir("graft_incivfpqmp")
-      def build(batch: DataFrame): Unit = {
-        val rpt = new graft.engine.Engine(s, wh,
-          Map("vectors" -> batch, "vectors_training" -> e),
-          graft.similarity.IncrementalIvfIndex.modelsPQ(
-            "vectors", "vectors_training", Dims)).build()
-        require(rpt.ok, rpt.results.mkString("; "))
-      }
-      build(e.filter(col("vec_id") <= mid))
-      build(e)
-      graft.similarity.IncrementalIvfIndex.searchTopKPQMultiProbe(
-        graft.engine.Resolver(s).read(s"$wh/ivf_index"),
-        graft.engine.Resolver(s).read(s"$wh/pq_codebook"),
-        graft.engine.Resolver(s).read(s"$wh/ivf_centroids"),
-        NQueries, TopK, shortK = TopK * 3, nprobe = NProbe)
-    },
-
-    // ---- the full IVFADC index: residual PQ composed with the
-    // incremental cluster-partitioned layout. The modelsPQResidual DAG
-    // adds an `ivf_means` Table (the learned clusters' floor-divided
-    // integer means over the fixed snapshot, frozen with the
-    // centroids) and trains the codebook on the snapshot's RESIDUALS;
-    // every stored row carries residual codes + |m_c + r̂|². The probe
-    // is searchTopKPQ's partition-pruned, code-column-only scan with
-    // the IVFADC numerator decomposition dot(q,m_c) + ADC lookups.
-    // Incremental build ≡ one-shot oracle, driver-checked.
-    Q.sql(
-      "q_ann_ivf_pq_residual_incremental",
-      ivfPqResidualIncrementalOracleSql
-    ) { (s, dir) =>
-      val e = quantized(s, dir)
-      val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val mid = (b.getLong(0) + b.getLong(1)) / 2
-      val wh = graft.engine.Scratch.dir("graft_incivfpqr")
-      def build(batch: DataFrame): Unit = {
-        val rpt = new graft.engine.Engine(s, wh,
-          Map("vectors" -> batch, "vectors_training" -> e),
-          graft.similarity.IncrementalIvfIndex.modelsPQResidual(
-            "vectors", "vectors_training", Dims)).build()
-        require(rpt.ok, rpt.results.mkString("; "))
-      }
-      build(e.filter(col("vec_id") <= mid))
-      build(e)
-      graft.similarity.IncrementalIvfIndex.searchTopKPQResidual(
-        graft.engine.Resolver(s).read(s"$wh/ivf_index"),
-        graft.engine.Resolver(s).read(s"$wh/pq_codebook"),
-        graft.engine.Resolver(s).read(s"$wh/ivf_means"), NQueries, TopK, shortK = TopK * 3)
-    },
-
-    // ---- the COMPLETE production IVFADC configuration: residual
-    // codes AND nprobe>1 on the same incremental index. The ADC
-    // numerator's dot(q, m_c) term differs per probed cluster, so the
-    // broadcast query side carries one row per (query, probed cluster)
-    // with its own precomputed qm; everything else is the residual
-    // probe's partition-pruned, code-only economics. Incremental build
-    // ≡ one-shot oracle (the residual oracle generalized to a probe
-    // CTE), driver-checked.
-    Q.sql(
-      "q_ann_ivf_pq_residual_incremental_multiprobe",
-      ivfPqResidualIncrementalMultiProbeOracleSql
-    ) { (s, dir) =>
-      val e = quantized(s, dir)
-      val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val mid = (b.getLong(0) + b.getLong(1)) / 2
-      val wh = graft.engine.Scratch.dir("graft_incivfpqrmp")
-      def build(batch: DataFrame): Unit = {
-        val rpt = new graft.engine.Engine(s, wh,
-          Map("vectors" -> batch, "vectors_training" -> e),
-          graft.similarity.IncrementalIvfIndex.modelsPQResidual(
-            "vectors", "vectors_training", Dims)).build()
-        require(rpt.ok, rpt.results.mkString("; "))
-      }
-      build(e.filter(col("vec_id") <= mid))
-      build(e)
-      graft.similarity.IncrementalIvfIndex.searchTopKPQResidualMultiProbe(
-        graft.engine.Resolver(s).read(s"$wh/ivf_index"),
-        graft.engine.Resolver(s).read(s"$wh/pq_codebook"),
-        graft.engine.Resolver(s).read(s"$wh/ivf_means"),
-        graft.engine.Resolver(s).read(s"$wh/ivf_centroids"),
-        NQueries, TopK, shortK = TopK * 3, nprobe = NProbe)
-    },
-
-    // ---- the SAME multi-probe ADC search through the SCAN-LOCAL
-    // kernel (ProductQuantizer.adcProbeKernel): probe ranking AND the
-    // per-query ADC table computed inside each query's scan task — the
-    // streaming-safe path the driver-side tables of the ad-hoc probes
-    // can't take — hash-checked against the SAME oracle as the
-    // driver-ranked form, so the driver verifies the two ADC homes
-    // agree bit-for-bit (the q_ann_ivf_incremental_multiprobe_kernel
-    // idiom, completed for PQ scoring).
-    Q.sql(
-      "q_ann_ivf_pq_multiprobe_kernel",
-      ivfPqIncrementalMultiProbeOracleSql
-    ) { (s, dir) =>
-      val e = quantized(s, dir)
-      val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val mid = (b.getLong(0) + b.getLong(1)) / 2
-      val wh = graft.engine.Scratch.dir("graft_incivfpqk")
-      def build(batch: DataFrame): Unit = {
-        val rpt = new graft.engine.Engine(s, wh,
-          Map("vectors" -> batch, "vectors_training" -> e),
-          graft.similarity.IncrementalIvfIndex.modelsPQ(
-            "vectors", "vectors_training", Dims)).build()
-        require(rpt.ok, rpt.results.mkString("; "))
-      }
-      build(e.filter(col("vec_id") <= mid))
-      build(e)
-      val index = graft.engine.Resolver(s).read(s"$wh/ivf_index")
-      graft.similarity.IncrementalIvfIndex.searchTopKPQFor(
-        index,
-        index.filter(col("vec_id") < NQueries)
-          .select(col("vec_id"), col("q"), col("nsq")),
-        graft.similarity.CentroidAssign.collectCentroids(
-          graft.engine.Resolver(s).read(s"$wh/ivf_centroids")),
-        graft.similarity.ProductQuantizer.collectCodebook(
-          graft.engine.Resolver(s).read(s"$wh/pq_codebook")),
-        means = Map.empty,
-        TopK, shortK = TopK * 3, nprobe = NProbe)
-    },
-
-    // ---- and the COMPLETE production configuration through the same
-    // scan-local kernel: residual codes, nprobe>1, per-probe dot(q,m_c)
-    // numerator terms — all computed in-scan against the broadcast
-    // frozen centroids/codebook/means. Same oracle as the driver-ranked
-    // residual multi-probe ⇒ driver-verified bit-equal.
-    Q.sql(
-      "q_ann_ivf_pq_residual_multiprobe_kernel",
-      ivfPqResidualIncrementalMultiProbeOracleSql
-    ) { (s, dir) =>
-      val e = quantized(s, dir)
-      val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val mid = (b.getLong(0) + b.getLong(1)) / 2
-      val wh = graft.engine.Scratch.dir("graft_incivfpqrk")
-      def build(batch: DataFrame): Unit = {
-        val rpt = new graft.engine.Engine(s, wh,
-          Map("vectors" -> batch, "vectors_training" -> e),
-          graft.similarity.IncrementalIvfIndex.modelsPQResidual(
-            "vectors", "vectors_training", Dims)).build()
-        require(rpt.ok, rpt.results.mkString("; "))
-      }
-      build(e.filter(col("vec_id") <= mid))
-      build(e)
-      val index = graft.engine.Resolver(s).read(s"$wh/ivf_index")
-      graft.similarity.IncrementalIvfIndex.searchTopKPQFor(
-        index,
-        index.filter(col("vec_id") < NQueries)
-          .select(col("vec_id"), col("q"), col("nsq")),
-        graft.similarity.CentroidAssign.collectCentroids(
-          graft.engine.Resolver(s).read(s"$wh/ivf_centroids")),
-        graft.similarity.ProductQuantizer.collectCodebook(
-          graft.engine.Resolver(s).read(s"$wh/pq_codebook")),
-        graft.similarity.IncrementalIvfIndex.collectMeans(
-          graft.engine.Resolver(s).read(s"$wh/ivf_means")),
-        TopK, shortK = TopK * 3, nprobe = NProbe)
-    },
-
-    // ---- DELETION from the append-only index, probe-time half: a
-    // tombstone set (every 7th non-query vec_id) is anti-joined out of
-    // the index read in both roles — broadcast-sized by the
-    // compaction-cadence contract, so the anti-join rides the pruned
-    // probe scan as a BroadcastHashJoin with zero added exchanges. The
-    // oracle is the one-shot index over corpus-minus-deleted: deletion
-    // semantics, not just filter semantics, are what's hash-checked
-    // (the deleted vectors still sit in the stored layout here).
-    Q.sql(
-      "q_ann_ivf_incremental_delete",
-      ivfDeleteOracleSql
-    ) { (s, dir) =>
-      val e = quantized(s, dir)
-      val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val mid = (b.getLong(0) + b.getLong(1)) / 2
-      val wh = graft.engine.Scratch.dir("graft_incivfdel")
-      def build(batch: DataFrame): Unit = {
-        val rpt = new graft.engine.Engine(s, wh,
-          Map("vectors" -> batch, "vectors_training" -> e),
-          graft.similarity.IncrementalIvfIndex.models(
-            "vectors", "vectors_training", Dims)).build()
-        require(rpt.ok, rpt.results.mkString("; "))
-      }
-      build(e.filter(col("vec_id") <= mid))
-      build(e)
-      graft.similarity.IncrementalIvfIndex.searchTopKWithDeletes(
-        graft.engine.Resolver(s).read(s"$wh/ivf_index"), deleteSet(e), NQueries, TopK)
-    },
-
-    // ---- DELETION, compaction half: Engine.compact applies the same
-    // tombstones by REWRITING the cluster-partitioned storage (one
-    // shuffle on cluster, one file per cluster, frontier preserved via
-    // a marker row if the high-water-mark row was deleted), after which
-    // the plain probe — no tombstone join at all — must produce the
-    // same corpus-minus-deleted results. Same oracle as the probe-time
-    // half, so the driver hash-checks that the two halves of the
-    // deletion lifecycle agree with each other AND with the one-shot
-    // truth.
-    Q.sql(
-      "q_ann_ivf_incremental_compact",
-      ivfDeleteOracleSql
-    ) { (s, dir) =>
-      val e = quantized(s, dir)
-      val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val mid = (b.getLong(0) + b.getLong(1)) / 2
-      val wh = graft.engine.Scratch.dir("graft_incivfcmp")
-      val models = graft.similarity.IncrementalIvfIndex.models(
-        "vectors", "vectors_training", Dims)
-      def engine(batch: DataFrame): graft.engine.Engine =
-        new graft.engine.Engine(s, wh,
-          Map("vectors" -> batch, "vectors_training" -> e), models)
-      def build(batch: DataFrame): graft.engine.Engine = {
-        val eng = engine(batch)
-        val rpt = eng.build()
-        require(rpt.ok, rpt.results.mkString("; "))
-        eng
-      }
-      build(e.filter(col("vec_id") <= mid))
-      val eng = build(e)
-      eng.compact("ivf_index", Some(deleteSet(e)))
-      graft.similarity.IncrementalIvfIndex.searchTopK(
-        graft.engine.Resolver(s).read(s"$wh/ivf_index"), NQueries, TopK)
-    },
-
-    // ---- RETRAIN lifecycle: build half the corpus, run one Lloyd
-    // retrain step over the STORED index (centroid update from actual
-    // membership → kernel reassignment → cluster-partitioned rewrite +
-    // DirSwap, IncrementalIvfIndex.retrain), then build the REST of the
-    // corpus and probe. The post-retrain build assigns its arrivals
-    // against the retrained quantizer — because `ivf_centroids` is a
-    // train-once incremental model, the swapped-in centroids are
-    // durable state, not reverted by re-materialization — so the
-    // oracle's final assignment is simply EVERY vector against the
-    // Lloyd-updated centroids: batch-1 rows via the retrain rewrite,
-    // batch-2 arrivals via the stored quantizer. Hash-matching it
-    // checks retrain's reassignment, the swap, AND the durability in
-    // one query.
-    Q.sql(
-      "q_ann_ivf_incremental_retrain",
-      ivfRetrainLifecycleOracleSql
-    ) { (s, dir) =>
-      val e = quantized(s, dir)
-      val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val mid = (b.getLong(0) + b.getLong(1)) / 2
-      val wh = graft.engine.Scratch.dir("graft_incivfrt")
-      def build(batch: DataFrame): Unit = {
-        val rpt = new graft.engine.Engine(s, wh,
-          Map("vectors" -> batch, "vectors_training" -> e),
-          graft.similarity.IncrementalIvfIndex.models(
-            "vectors", "vectors_training", Dims)).build()
-        require(rpt.ok, rpt.results.mkString("; "))
-      }
-      build(e.filter(col("vec_id") <= mid))
-      graft.similarity.IncrementalIvfIndex.retrain(s, wh, Dims)
-      build(e)
-      graft.similarity.IncrementalIvfIndex.searchTopK(
-        graft.engine.Resolver(s).read(s"$wh/ivf_index"), NQueries, TopK)
+          dot("qc", "c").as("dot"), col("nq8").as("nq"), col("ncsq8").as("nc"))
+      shortlistRerank(e, scored, qs)
     },
 
     // ---- multi-vector MaxSim late interaction (Khattab & Zaharia
@@ -2318,7 +1391,7 @@ object SimilarityQueries {
           (col("pos") + 1).cast("int").as("rnk"),
           col("col.cos").cast("long").as("score"))
     }
-  )
+  ) ++ ivfVariants.map(ivfQ)
 
   /** The deterministic tombstone set both deletion queries share: every
     * [[DeleteMod]]-th vec_id, restricted to non-query rows so every
@@ -2330,23 +1403,354 @@ object SimilarityQueries {
         col("vec_id") >= NQueries)
       .select(col("vec_id"))
 
-  /** Own-oracle for IVF-PQ (the q_dedup_semantic_probed idiom — both
-    * engines compute the same approximation bit-for-bit): derive the
-    * SAME deterministic codebooks (LSH cells from the inlined subspace
-    * planes, exact cosine-to-cell-sum medoids, ties lowest vec_id),
-    * code every vector, ADC-score the query's coarse cluster with exact
-    * integer dots against entries, shortlist, exact re-rank. */
-  /** Shared PQ-codebook CTE block (assumes `e` is already defined):
-    * per-(vector, subspace) cells with LSH codes, cell sums, exact
-    * medoid entries, and each vector's reconstructed norm — the
-    * bit-identical mirror of [[graft.similarity.ProductQuantizer]]'s
-    * training + encoding. */
-  private lazy val pqCodebookCtesSql: String = pqCodebookCtesSqlFrom("e")
+  /** The vec_id midpoint of `e`: the two-batch feeds split there. */
+  private def midId(e: DataFrame): Long = {
+    val b = e.agg(min(col("vec_id")), max(col("vec_id"))).first()
+    (b.getLong(0) + b.getLong(1)) / 2
+  }
 
-  /** [[pqCodebookCtesSql]] over an arbitrary `(vec_id, label, q)`
-    * relation — the residual-PQ oracle trains the same codebook
-    * machinery on the residual frame instead of the raw vectors. */
-  private def pqCodebookCtesSqlFrom(rel: String): String = {
+  /** Two `Engine.build`s of `models` into `wh`, fed by `inputs(batch)`:
+    * first `e`'s lower half (vec_id ≤ [[midId]]), then all of `e`, with
+    * `between` run after the first. Returns the second build's engine. */
+  private def buildHalves(s: SparkSession, wh: String, e: DataFrame,
+      models: Seq[graft.engine.Model], inputs: DataFrame => Map[String, DataFrame],
+      between: () => Unit = () => ()): graft.engine.Engine = {
+    def build(batch: DataFrame): graft.engine.Engine = {
+      val eng = new graft.engine.Engine(s, wh, inputs(batch), models)
+      val rpt = eng.build()
+      require(rpt.ok, rpt.results.mkString("; "))
+      eng
+    }
+    build(e.filter(col("vec_id") <= midId(e)))
+    between()
+    build(e)
+  }
+
+  /** One [[Ivf]] row as a board query: its Spark plan and its oracle. */
+  private def ivfQ(v: Ivf): Q =
+    Q.sql(v.name, ivfOracle(v)) { (s, dir) =>
+      // ad hoc: the quantized table feeds centroids, queries and
+      // candidates — checkpoint it once instead of re-scanning parquet
+      // and re-quantizing per subtree
+      if (v.feed == AdHoc) probeAdHoc(v, quantized(s, dir).localCheckpoint())
+      else probeIndex(v, s, dir)
+    }
+
+  /** An ad hoc variant over the checkpointed corpus `e`: the queries
+    * probe their nearest label centroids, and only those clusters'
+    * members are scored (N/C of the corpus per probe; at production
+    * layout a partition-pruned scan). */
+  private def probeAdHoc(v: Ivf, e: DataFrame): DataFrame = {
+    val n = v.probe match {
+      case Nearest(n) => n
+      case p => throw new IllegalArgumentException(s"${v.name}: no ad hoc $p probe")
+    }
+    require(v.kind == Flat || n == 1, s"${v.name}: code-scored ad hoc rows probe one cluster")
+    val qs = e.filter(col("vec_id") < NQueries)
+      .select(col("vec_id").as("query_id"), col("q").as("qq"), col("nsq").as("nq"))
+    v.kind match {
+      case Flat =>
+        // the filter rides the candidate scan, before scoring
+        val cand = if (v.filtered) e.filter(col("vec_id") % 3 === 0) else e
+        val pairs = cand.as("c").join(broadcast(probeLabels(qs, centroids(e), n).as("a")),
+            col("c.label") === col("a.label") && col("c.vec_id") =!= col("a.query_id"))
+          .select(col("query_id"), col("vec_id"),
+            dot("qq", "q").as("dot"), col("nq"), col("nsq").as("nc"))
+        topKReduce(pairs, TopK)
+      case Sq8 =>
+        val c8 = sq8Codes(e)
+        val qs8 = c8.filter(col("vec_id") < NQueries)
+          .select(col("vec_id").as("query_id"), col("q").as("qq"),
+            col("nsq").as("nq"), col("c").as("qc"), col("ncsq8").as("nq8"))
+        val scored = c8.as("c").join(broadcast(probeLabels(qs8, centroids(e), 1).as("a")),
+            col("c.label") === col("a.label") && col("c.vec_id") =!= col("a.query_id"))
+          .select(col("query_id"), col("c.vec_id").as("vec_id"),
+            dot("qc", "c").as("dot"), col("nq8").as("nq"), col("ncsq8").as("nc"))
+        shortlistRerank(e, scored, qs8)
+      case Pq | PqResidual =>
+        val s = e.sparkSession
+        import s.implicits._
+        val PQ = graft.similarity.ProductQuantizer
+        val residual = v.kind == PqResidual
+        // m_c: each label's floor-divided integer mean ((S − pmod(S, n))
+        // div n — exact and engine-identical for negative sums too)
+        val means = e.groupBy(col("label"))
+          .agg(array((1 to Dims).map(i => sum(element_at(col("q"), i))): _*).as("s"),
+            count(lit(1)).as("n"))
+          .select(col("label"), expr("transform(s, x -> (x - pmod(x, n)) div n)").as("mc"))
+        val coded = if (!residual) e else e
+          .select(col("vec_id"), col("label"), col("q").as("qv"))
+          .join(broadcast(means), "label")
+          .withColumn("q", expr("zip_with(qv, mc, (a, b) -> a - b)"))
+          .withColumn("nsq", expr("dot_i64(q, q)"))
+        val cb = PQ.train(if (residual) coded.select(col("vec_id"), col("q"), col("nsq")) else e)
+        // |Q| probed query rows collected to the driver to precompute each
+        // query's ADC table against the driver-resident codebook, and the
+        // IVFADC numerator's dot(q, m_c) term (0 for raw-vector codes)
+        val meanByLabel =
+          if (residual) means.as[(Int, Seq[Long])].collect().toMap else Map.empty[Int, Seq[Long]]
+        val qDf = probeLabels(qs, centroids(e), 1).collect().toSeq.map { r =>
+          val qq = r.getSeq[Long](1).toArray
+          val label = r.getInt(3)
+          val qm = meanByLabel.get(label).fold(0L)(mc => qq.indices.map(i => qq(i) * mc(i)).sum)
+          (r.getLong(0), qq.toSeq, r.getLong(2), label, qm, PQ.adcTable(qq, cb))
+        }.toDF("query_id", "qq", "nq", "cluster", "qm", "adc")
+        // candidates carry only their M-int code + reconstructed norm —
+        // both scan-local (plane-sign codegen + codebook-norm lookups)
+        val encoded = coded.withColumn("codes", PQ.codesCol)
+          .withColumn("npq", if (residual) PQ.npqResidualCol(cb) else PQ.npqCol(cb))
+        val adcDot = if (residual) col("qm") + PQ.adcDotCol else PQ.adcDotCol
+        val scored = encoded.join(broadcast(qDf),
+            col("label") === col("cluster") && col("vec_id") =!= col("query_id"))
+          .select(col("query_id"), col("vec_id"), adcDot.as("dot"), col("nq"), col("npq").as("nc"))
+        shortlistRerank(e, scored, qDf)
+    }
+  }
+
+  /** A built or streamed variant: feed the learned index at
+    * `<scratch>/ivf_index` from two halves of the corpus, with the row's
+    * lifecycle step, then probe it through the matching
+    * [[graft.similarity.IncrementalIvfIndex]] search. */
+  private def probeIndex(v: Ivf, s: SparkSession, dir: String): DataFrame = {
+    val IIX = graft.similarity.IncrementalIvfIndex
+    val PQ = graft.similarity.ProductQuantizer
+    val e = if (v.feed == Streamed) quantized(s, dir).localCheckpoint() else quantized(s, dir)
+    val wh = graft.engine.Scratch.dir(v.name)
+    def read(table: String): DataFrame = graft.engine.Resolver(s).read(s"$wh/$table")
+    val codebook: () => DataFrame = v.feed match {
+      case Streamed =>
+        val cents = graft.similarity.CentroidAssign.collectCentroids(IIX.centroids(e, Dims))
+        val vecs = e.select(col("vec_id"), col("q"), col("nsq"))
+        lazy val cb = PQ.collectCodebook(PQ.entriesDf(vecs))
+        val (src, ckp, mid) = (s"$wh/src", s"$wh/ckp", midId(e))
+        for (half <- Seq(col("vec_id") <= mid, col("vec_id") > mid)) {
+          vecs.filter(half).write.mode("append").parquet(src)
+          if (v.kind == Flat) graft.streaming.Streaming.vectorIndexStream(
+            s, src, s"$wh/ivf_index", ckp, vecs.schema, cents, maintenanceMaxFiles = Some(2))
+          else graft.streaming.Streaming.vectorIndexStreamPQ(
+            s, src, s"$wh/ivf_index", ckp, vecs.schema, cents, cb, maintenanceMaxFiles = Some(2))
+        }
+        // the probe takes the codebook as a frame: re-emit the collected
+        // one as a local relation, so its collect runs no job
+        () => {
+          import s.implicits._
+          (for (m <- cb.ent.indices; c <- cb.ent(m).indices)
+            yield (m, c, cb.ent(m)(c).toSeq, cb.entNsq(m)(c))).toDF("m", "code", "ent", "ent_nsq")
+        }
+      case _ =>
+        val models = v.kind match {
+          case Flat => IIX.models("vectors", "vectors_training", Dims)
+          case Pq => IIX.modelsPQ("vectors", "vectors_training", Dims)
+          case _ => IIX.modelsPQResidual("vectors", "vectors_training", Dims)
+        }
+        val last = buildHalves(s, wh, e, models,
+          batch => Map("vectors" -> batch, "vectors_training" -> e),
+          between = () => if (v.step.contains(Retrain)) IIX.retrain(s, wh, Dims))
+        if (v.step.contains(Compact)) last.compact("ivf_index", Some(deleteSet(e)))
+        () => read("pq_codebook")
+    }
+    val index = read("ivf_index")
+    def queries = index.filter(col("vec_id") < NQueries).select(col("vec_id"), col("q"), col("nsq"))
+    def cents = graft.similarity.CentroidAssign.collectCentroids(read("ivf_centroids"))
+    def codes = PQ.collectCodebook(codebook())
+    (v.kind, v.probe) match {
+      case (_, Stats) =>
+        index.groupBy(col("cluster")).agg(count(lit(1)).as("n_vectors"),
+          min(col("vec_id")).as("min_vec_id"), max(col("vec_id")).as("max_vec_id"))
+      case (Flat, Nearest(1)) if v.tombstones && !v.step.contains(Compact) =>
+        IIX.searchTopKWithDeletes(index, deleteSet(e), NQueries, TopK)
+      case (Flat, Nearest(1)) => IIX.searchTopK(index, NQueries, TopK)
+      case (Flat, Nearest(n)) =>
+        IIX.searchTopKMultiProbe(index, read("ivf_centroids"), NQueries, TopK, n,
+          if (v.filtered) Some(col("vec_id") % 3 === 0) else None)
+      case (Flat, Kernel(n)) => IIX.searchTopKFor(index, queries, cents, TopK, n)
+      case (Pq, Nearest(1)) => IIX.searchTopKPQ(index, codebook(), NQueries, TopK, ShortK)
+      case (Pq, Nearest(n)) => IIX.searchTopKPQMultiProbe(
+        index, codebook(), read("ivf_centroids"), NQueries, TopK, ShortK, n)
+      case (Pq, Kernel(n)) =>
+        IIX.searchTopKPQFor(index, queries, cents, codes, Map.empty, TopK, ShortK, n)
+      case (PqResidual, Nearest(1)) => IIX.searchTopKPQResidual(
+        index, codebook(), read("ivf_means"), NQueries, TopK, ShortK)
+      case (PqResidual, Nearest(n)) => IIX.searchTopKPQResidualMultiProbe(index, codebook(),
+        read("ivf_means"), read("ivf_centroids"), NQueries, TopK, ShortK, n)
+      case (PqResidual, Kernel(n)) => IIX.searchTopKPQFor(index, queries, cents, codes,
+        IIX.collectMeans(read("ivf_means")), TopK, ShortK, n)
+      case other => throw new IllegalArgumentException(s"${v.name}: no index probe for $other")
+    }
+  }
+
+  // ---- DuckDB builders the IVF oracles are composed from
+
+  private def dotSql(a: String, b: String): String =
+    s"list_sum(list_transform(generate_series(1, $Dims), i -> $a[i] * $b[i]))"
+
+  private def cosSql(dot: String, na: String, nb: String): String =
+    s"$dot / sqrt(CAST($na AS DOUBLE) * CAST($nb AS DOUBLE))"
+
+  /** Cosine of a `(dot, nq, nc)` pair row. */
+  private def pairCosSql: String = cosSql("dot", "nq", "nc")
+
+  /** Element-wise `e.q` sums: the integer centroid / mean numerators. */
+  private def sumsSql: String = (1 to Dims).map(i => s"sum(e.q[$i])").mkString("[", ", ", "]")
+
+  /** The one row_number shape of the IVF oracles: `from`'s rows as
+    * `sel`, numbered per `part` in `order`, the first `k` kept and
+    * returned as `out`. */
+  private def rankedSql(sel: String, part: String, order: String, from: String, k: Int,
+      out: String = "* EXCLUDE (rnk)"): String =
+    s"""SELECT $out FROM (
+       |  SELECT $sel,
+       |         row_number() OVER (PARTITION BY $part ORDER BY $order) AS rnk
+       |  FROM $from) t
+       |WHERE rnk <= $k""".stripMargin
+
+  /** `name(label, c, ncsq)`: integer member sums per `key` over `from` —
+    * the [[centroids]] mirror. */
+  private def centSql(name: String, from: String = "e", key: String = "e.label"): String =
+    s"""$name AS (
+       |  SELECT $key AS label, $sumsSql AS c,
+       |         list_sum(list_transform($sumsSql, x -> x * x)) AS ncsq
+       |  FROM $from GROUP BY $key)""".stripMargin
+
+  /** `name(vec_id, cluster)`: each `e` row passing `where` with its `k`
+    * nearest `cent` centroids, cosine DESC then lowest label — the order
+    * of the [[probeLabels]] window and of the CentroidAssign kernels
+    * (their max-of-struct(sim, −label)). */
+  private def nearestSql(name: String, cent: String, k: Int, where: String = ""): String =
+    s"$name AS (\n" + rankedSql(s"e.vec_id, $cent.label AS cluster", "e.vec_id",
+      s"${cosSql(dotSql("e.q", s"$cent.c"), "e.nsq", s"$cent.ncsq")} DESC, $cent.label",
+      s"e CROSS JOIN $cent$where", k) + ")"
+
+  /** Top-k per query over `pairs(query_id, vec_id, dot, nq, nc)`, cosine
+    * DESC then vec_id: the [[topKReduce]] output. */
+  private def topKSql(pairs: String): String =
+    rankedSql(s"query_id, vec_id, $pairCosSql AS cos_raw", "query_id",
+      s"$pairCosSql DESC, vec_id", pairs, TopK,
+      out = "query_id, vec_id, CAST(rnk AS INT) AS rnk, round(cos_raw, 4) AS cos_sim")
+
+  /** A variant's one-shot oracle. */
+  private def ivfOracle(v: Ivf): String = {
+    val (ctes, select) = ivfOracleParts(v)
+    (quantizedSql +: ctes).mkString("WITH ", ",\n", "\n") + select
+  }
+
+  /** The CTEs after `e` and the final SELECT of a variant's oracle:
+    * centroids over the full fixed snapshot, the inverted file
+    * `ivf(vec_id, cluster)` (the raw label ad hoc; every vector's
+    * nearest trained centroid for built and streamed indexes), each
+    * query's `probe`d clusters, then the kind's scoring of those
+    * clusters' members. Every vector sits in exactly one cluster, so a
+    * multi-probe candidate set is duplicate-free. */
+  private def ivfOracleParts(v: Ivf): (Seq[String], String) = {
+    import graft.similarity.ProductQuantizer.SubDims
+    // the retrain lifecycle's quantizer: one Lloyd update of the snapshot
+    // centroids from batch-1 membership, then every vector against it —
+    // batch 1 via retrain's rewrite, batch 2 via the stored quantizer
+    val retrain = v.step.contains(Retrain)
+    val quantizer = if (retrain) "cent2" else "cent"
+    val index = Seq(centSql("cent")) ++ (if (!retrain) Nil else Seq(
+      "mid AS (SELECT (min(vec_id) + max(vec_id)) // 2 AS m FROM e)",
+      nearestSql("assign1", "cent", 1, " WHERE e.vec_id <= (SELECT m FROM mid)"),
+      centSql("cent2", "e JOIN assign1 a ON a.vec_id = e.vec_id", "a.cluster"))) :+
+      (if (v.feed == AdHoc) "ivf AS (SELECT vec_id, label AS cluster FROM e)"
+       else nearestSql("ivf", quantizer, 1))
+    val n = v.probe match { case Nearest(n) => n; case Kernel(n) => n; case Stats => 1 }
+    val probe = nearestSql("probe", quantizer, n, s" WHERE e.vec_id < $NQueries")
+    def qs(rel: String) =
+      s"qs AS (SELECT x.*, p.cluster AS pcluster FROM $rel x JOIN probe p ON p.vec_id = x.vec_id)"
+    val members = "qs JOIN ivf ca ON ca.cluster = qs.pcluster AND ca.vec_id <> qs.vec_id" +
+      (if (v.filtered) " AND ca.vec_id % 3 = 0" else "") +
+      (if (v.tombstones) s" AND NOT (ca.vec_id % $DeleteMod = $DeleteRem AND ca.vec_id >= $NQueries)"
+       else "")
+    // the code-scored tail: ShortK per query on codes, exact re-rank
+    val rerank = Seq(
+      s"sl AS (\n${rankedSql("query_id, vec_id", "query_id", s"$pairCosSql DESC, vec_id", "scored", ShortK)})",
+      s"""exact AS (
+         |  SELECT s.query_id, s.vec_id, ${dotSql("q1.q", "c.q")} AS dot, q1.nsq AS nq, c.nsq AS nc
+         |  FROM sl s JOIN e q1 ON q1.vec_id = s.query_id JOIN e c ON c.vec_id = s.vec_id)""".stripMargin)
+    (v.kind, v.probe) match {
+      case (_, Stats) => (index,
+        """SELECT cluster, count(*) AS n_vectors,
+          |       min(vec_id) AS min_vec_id, max(vec_id) AS max_vec_id
+          |FROM ivf GROUP BY cluster""".stripMargin)
+      case (Flat, _) => (index ++ Seq(probe, qs("e"),
+        s"""pairs AS (
+           |  SELECT qs.vec_id AS query_id, c.vec_id AS vec_id, ${dotSql("qs.q", "c.q")} AS dot,
+           |         qs.nsq AS nq, c.nsq AS nc
+           |  FROM $members JOIN e c ON c.vec_id = ca.vec_id)""".stripMargin), topKSql("pairs"))
+      case (Sq8, _) => (index ++ Seq(probe,
+        "s AS (SELECT max(list_max(list_transform(q, x -> abs(x)))) / 127.0 AS sc FROM e)",
+        """n8 AS (
+          |  SELECT vec_id, nsq, q, c, list_sum(list_transform(c, x -> x * x)) AS ncsq8 FROM (
+          |    SELECT vec_id, nsq, q, list_transform(q, x -> CAST(round(x / sc) AS BIGINT)) AS c
+          |    FROM e, s) t)""".stripMargin,
+        qs("n8"),
+        s"""scored AS (
+           |  SELECT qs.vec_id AS query_id, c.vec_id AS vec_id, ${dotSql("qs.c", "c.c")} AS dot,
+           |         qs.ncsq8 AS nq, c.ncsq8 AS nc
+           |  FROM $members JOIN n8 c ON c.vec_id = ca.vec_id)""".stripMargin) ++ rerank,
+        topKSql("exact"))
+      case (kind, _) =>
+        val residual = kind == PqResidual
+        // codebook + each vector's reconstructed norm: |v̂|² from the
+        // entries' norms, or |m_c + r̂|² for residual codes
+        val codes = if (!residual) Seq(pqCodebookSql("e"),
+          """enc AS (
+            |  SELECT c.vec_id, sum(en.ent_nsq) AS npq
+            |  FROM cells c JOIN entries en ON en.m = c.m AND en.code = c.code
+            |  GROUP BY c.vec_id)""".stripMargin)
+        else Seq(
+          s"""meanst AS (
+             |  SELECT ca.cluster, $sumsSql AS s, count(*) AS n
+             |  FROM e JOIN ivf ca ON ca.vec_id = e.vec_id GROUP BY ca.cluster)""".stripMargin,
+          """means AS (
+            |  SELECT cluster, list_transform(s, x -> (x - (((x % n) + n) % n)) // n) AS mc
+            |  FROM meanst)""".stripMargin,
+          s"""resid AS (
+             |  SELECT e.vec_id, ca.cluster AS label,
+             |         list_transform(generate_series(1, $Dims), i -> e.q[i] - m.mc[i]) AS q
+             |  FROM e JOIN ivf ca ON ca.vec_id = e.vec_id JOIN means m ON m.cluster = ca.cluster)""".stripMargin,
+          pqCodebookSql("resid"),
+          s"""enc AS (
+             |  SELECT c.vec_id, sum(list_sum(list_transform(generate_series(1, $SubDims),
+             |           j -> (m.mc[c.m * $SubDims + j] + en.ent[j])
+             |              * (m.mc[c.m * $SubDims + j] + en.ent[j])))) AS npq
+             |  FROM cells c
+             |  JOIN entries en ON en.m = c.m AND en.code = c.code
+             |  JOIN means m ON m.cluster = c.label
+             |  GROUP BY c.vec_id)""".stripMargin)
+        // the IVFADC numerator: dot(q, m_c) per (query, probed cluster)
+        // plus the per-subspace dots against the code's entries
+        val qm = if (!residual) Nil else Seq(
+          s"""qmt AS (
+             |  SELECT qs.vec_id AS query_id, qs.pcluster, ${dotSql("qs.q", "m.mc")} AS qm
+             |  FROM qs JOIN means m ON m.cluster = qs.pcluster)""".stripMargin)
+        val (qmTerm, qmJoin, qmKey) =
+          if (!residual) ("", "", "")
+          else ("qmt.qm + ", "\n  JOIN qmt ON qmt.query_id = qs.vec_id AND qmt.pcluster = qs.pcluster",
+            ", qmt.qm")
+        val adc = Seq(
+          s"""adc AS (
+             |  SELECT qs.vec_id AS query_id, cr.vec_id AS vec_id, qs.nsq AS nq,
+             |         ${qmTerm}sum(list_sum(list_transform(generate_series(1, $SubDims),
+             |             j -> qs.q[cr.m * $SubDims + j] * en.ent[j]))) AS dot
+             |  FROM $members$qmJoin
+             |  JOIN cells cr ON cr.vec_id = ca.vec_id
+             |  JOIN entries en ON en.m = cr.m AND en.code = cr.code
+             |  GROUP BY qs.vec_id, cr.vec_id, qs.nsq$qmKey)""".stripMargin,
+          """scored AS (
+            |  SELECT adc.query_id, adc.vec_id, adc.dot, adc.nq, ec.npq AS nc
+            |  FROM adc JOIN enc ec ON ec.vec_id = adc.vec_id)""".stripMargin)
+        (index ++ codes ++ Seq(probe, qs("e")) ++ qm ++ adc ++ rerank, topKSql("exact"))
+    }
+  }
+
+  /** The PQ codebook as CTEs over a `(vec_id, label, q)` relation `rel`:
+    * per-(vector, subspace) cells with LSH codes, cell sums, and the
+    * exact cosine-to-cell-sum medoid entries (ties lowest vec_id) — the
+    * bit-identical mirror of [[graft.similarity.ProductQuantizer]]'s
+    * training and encoding. Residual PQ trains it on the residuals. */
+  private def pqCodebookSql(rel: String): String = {
     import graft.similarity.ProductQuantizer.{M, PlanesPerSub, SubDims, SubPlanes}
     // per-plane-index literal: planes of ALL M subspaces for bit i,
     // indexed [m+1][j] inside the cell-code CASE terms
@@ -2378,493 +1782,6 @@ object SimilarityQueries {
        |               / sqrt(CAST(c.nsv AS DOUBLE) * CAST(b.nssum AS DOUBLE)) DESC,
        |             c.vec_id) AS rnk
        |    FROM cells c JOIN bs2 b ON b.m = c.m AND b.code = c.code) t
-       |  WHERE rnk = 1),
-       |enc AS (
-       |  SELECT c.vec_id, sum(en.ent_nsq) AS npq
-       |  FROM cells c JOIN entries en ON en.m = c.m AND en.code = c.code
-       |  GROUP BY c.vec_id)""".stripMargin
-  }
-
-  private lazy val ivfPqOracleSql: String = {
-    import graft.similarity.ProductQuantizer.SubDims
-    val centroidSums = (1 to Dims).map(i => s"sum(q[$i])").mkString(", ")
-    val shortN = TopK * 3
-    s"""WITH $quantizedSql,
-       |$pqCodebookCtesSql,
-       |cent AS (
-       |  SELECT label, [$centroidSums] AS cc,
-       |         list_sum(list_transform([$centroidSums], x -> x * x)) AS ncsq
-       |  FROM e GROUP BY label),
-       |qs AS (SELECT * FROM e WHERE vec_id < $NQueries),
-       |assign AS (
-       |  SELECT query_id, label FROM (
-       |    SELECT qs.vec_id AS query_id, cent.label,
-       |           row_number() OVER (PARTITION BY qs.vec_id
-       |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-       |                        i -> qs.q[i] * cent.cc[i]))
-       |                      / sqrt(CAST(qs.nsq AS DOUBLE) * CAST(cent.ncsq AS DOUBLE)) DESC,
-       |                      cent.label) AS rnk
-       |    FROM qs CROSS JOIN cent) t WHERE rnk = 1),
-       |adc AS (
-       |  SELECT qs.vec_id AS query_id, cr.vec_id AS vec_id, qs.nsq AS nq,
-       |         sum(list_sum(list_transform(generate_series(1, $SubDims),
-       |             j -> qs.q[cr.m * $SubDims + j] * en.ent[j]))) AS dot
-       |  FROM qs
-       |  JOIN assign a ON a.query_id = qs.vec_id
-       |  JOIN cells cr ON cr.label = a.label AND cr.vec_id <> qs.vec_id
-       |  JOIN entries en ON en.m = cr.m AND en.code = cr.code
-       |  GROUP BY qs.vec_id, cr.vec_id, qs.nsq),
-       |sl AS (
-       |  SELECT query_id, vec_id FROM (
-       |    SELECT adc.query_id, adc.vec_id,
-       |           row_number() OVER (PARTITION BY adc.query_id ORDER BY
-       |             adc.dot / sqrt(CAST(adc.nq AS DOUBLE) * CAST(ec.npq AS DOUBLE)) DESC,
-       |             adc.vec_id) AS rnk8
-       |    FROM adc JOIN enc ec ON ec.vec_id = adc.vec_id) t
-       |  WHERE rnk8 <= $shortN),
-       |exact AS (
-       |  SELECT s.query_id, s.vec_id,
-       |         list_sum(list_transform(generate_series(1, $Dims), i -> q1.q[i] * c.q[i]))
-       |           / sqrt(CAST(q1.nsq AS DOUBLE) * CAST(c.nsq AS DOUBLE)) AS cos_raw
-       |  FROM sl s JOIN e q1 ON q1.vec_id = s.query_id JOIN e c ON c.vec_id = s.vec_id)
-       |SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk, round(cos_raw, 4) AS cos_sim
-       |FROM (
-       |  SELECT query_id, vec_id, cos_raw,
-       |         row_number() OVER (PARTITION BY query_id
-       |           ORDER BY cos_raw DESC, vec_id) AS rnk
-       |  FROM exact) t
-       |WHERE rnk <= $TopK""".stripMargin
-  }
-
-  /** Own-oracle for RESIDUAL PQ (IVFADC): integer cluster means by
-    * floor division, the [[pqCodebookCtesSqlFrom]] codebook machinery
-    * over the residual frame, encode-time |m_c + r̂|² norms, and ADC
-    * scoring whose numerator is dot(q, m_c) + residual-codebook
-    * lookups — the bit-identical mirror of the Spark side. */
-  private lazy val ivfPqResidualOracleSql: String = {
-    import graft.similarity.ProductQuantizer.SubDims
-    val centroidSums = (1 to Dims).map(i => s"sum(q[$i])").mkString(", ")
-    val shortN = TopK * 3
-    s"""WITH $quantizedSql,
-       |meanst AS (
-       |  SELECT label, [$centroidSums] AS s, count(*) AS n FROM e GROUP BY label),
-       |means AS (
-       |  SELECT label,
-       |         list_transform(s, x -> (x - (((x % n) + n) % n)) // n) AS mc
-       |  FROM meanst),
-       |resid AS (
-       |  SELECT e.vec_id, e.label,
-       |         list_transform(generate_series(1, $Dims), i -> e.q[i] - m.mc[i]) AS q
-       |  FROM e JOIN means m ON m.label = e.label),
-       |${pqCodebookCtesSqlFrom("resid")},
-       |encr AS (
-       |  SELECT c.vec_id, sum(list_sum(list_transform(generate_series(1, $SubDims),
-       |           j -> (m.mc[c.m * $SubDims + j] + en.ent[j])
-       |              * (m.mc[c.m * $SubDims + j] + en.ent[j])))) AS npq
-       |  FROM cells c
-       |  JOIN entries en ON en.m = c.m AND en.code = c.code
-       |  JOIN means m ON m.label = c.label
-       |  GROUP BY c.vec_id),
-       |cent AS (
-       |  SELECT label, [$centroidSums] AS cc,
-       |         list_sum(list_transform([$centroidSums], x -> x * x)) AS ncsq
-       |  FROM e GROUP BY label),
-       |qs AS (SELECT * FROM e WHERE vec_id < $NQueries),
-       |assign AS (
-       |  SELECT query_id, label FROM (
-       |    SELECT qs.vec_id AS query_id, cent.label,
-       |           row_number() OVER (PARTITION BY qs.vec_id
-       |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-       |                        i -> qs.q[i] * cent.cc[i]))
-       |                      / sqrt(CAST(qs.nsq AS DOUBLE) * CAST(cent.ncsq AS DOUBLE)) DESC,
-       |                      cent.label) AS rnk
-       |    FROM qs CROSS JOIN cent) t WHERE rnk = 1),
-       |qmt AS (
-       |  SELECT a.query_id,
-       |         list_sum(list_transform(generate_series(1, $Dims),
-       |           i -> q1.q[i] * m.mc[i])) AS qm
-       |  FROM assign a
-       |  JOIN e q1 ON q1.vec_id = a.query_id
-       |  JOIN means m ON m.label = a.label),
-       |adc AS (
-       |  SELECT qs.vec_id AS query_id, cr.vec_id AS vec_id, qs.nsq AS nq,
-       |         qmt.qm + sum(list_sum(list_transform(generate_series(1, $SubDims),
-       |             j -> qs.q[cr.m * $SubDims + j] * en.ent[j]))) AS dot
-       |  FROM qs
-       |  JOIN assign a ON a.query_id = qs.vec_id
-       |  JOIN qmt ON qmt.query_id = qs.vec_id
-       |  JOIN cells cr ON cr.label = a.label AND cr.vec_id <> qs.vec_id
-       |  JOIN entries en ON en.m = cr.m AND en.code = cr.code
-       |  GROUP BY qs.vec_id, cr.vec_id, qs.nsq, qmt.qm),
-       |sl AS (
-       |  SELECT query_id, vec_id FROM (
-       |    SELECT adc.query_id, adc.vec_id,
-       |           row_number() OVER (PARTITION BY adc.query_id ORDER BY
-       |             adc.dot / sqrt(CAST(adc.nq AS DOUBLE) * CAST(ec.npq AS DOUBLE)) DESC,
-       |             adc.vec_id) AS rnk8
-       |    FROM adc JOIN encr ec ON ec.vec_id = adc.vec_id) t
-       |  WHERE rnk8 <= $shortN),
-       |exact AS (
-       |  SELECT s.query_id, s.vec_id,
-       |         list_sum(list_transform(generate_series(1, $Dims), i -> q1.q[i] * c.q[i]))
-       |           / sqrt(CAST(q1.nsq AS DOUBLE) * CAST(c.nsq AS DOUBLE)) AS cos_raw
-       |  FROM sl s JOIN e q1 ON q1.vec_id = s.query_id JOIN e c ON c.vec_id = s.vec_id)
-       |SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk, round(cos_raw, 4) AS cos_sim
-       |FROM (
-       |  SELECT query_id, vec_id, cos_raw,
-       |         row_number() OVER (PARTITION BY query_id
-       |           ORDER BY cos_raw DESC, vec_id) AS rnk
-       |  FROM exact) t
-       |WHERE rnk <= $TopK""".stripMargin
-  }
-
-  /** One-shot oracle for the PQ-coded incremental index
-    * (`q_ann_ivf_pq_incremental`): the [[pqCodebookCtesSql]] codebook
-    * over the full fixed snapshot, every vector LEARNED-assigned to its
-    * nearest centroid (the [[ivfIncrementalOracleSql]] inverted file,
-    * not the raw label), queries ADC-score their own cluster's members
-    * on codes, shortlist, exact re-rank. nprobe=1's probe CTE top-1 is
-    * exactly the query's assigned cluster (identical ranking), so one
-    * core serves both the single- and multi-probe entries. */
-  private lazy val ivfPqIncrementalOracleSql: String =
-    ivfPqIncrementalOracleSqlCore(1)
-
-  private lazy val ivfPqIncrementalMultiProbeOracleSql: String =
-    ivfPqIncrementalOracleSqlCore(NProbe)
-
-  private def ivfPqIncrementalOracleSqlCore(nprobe: Int): String = {
-    import graft.similarity.ProductQuantizer.SubDims
-    val centroidSums = (1 to Dims).map(i => s"sum(q[$i])").mkString(", ")
-    val shortN = TopK * 3
-    s"""WITH $quantizedSql,
-       |$pqCodebookCtesSql,
-       |cent AS (
-       |  SELECT label, [$centroidSums] AS c,
-       |         list_sum(list_transform([$centroidSums], x -> x * x)) AS ncsq
-       |  FROM e GROUP BY label),
-       |assignall AS (
-       |  SELECT vec_id, cluster FROM (
-       |    SELECT e.vec_id, cent.label AS cluster,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-       |                        i -> e.q[i] * cent.c[i]))
-       |                      / sqrt(CAST(e.nsq AS DOUBLE) * CAST(cent.ncsq AS DOUBLE)) DESC,
-       |                      cent.label) AS rnk
-       |    FROM e CROSS JOIN cent) t WHERE rnk = 1),
-       |probe AS (
-       |  SELECT vec_id, pcluster FROM (
-       |    SELECT e.vec_id, cent.label AS pcluster,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-       |                        i -> e.q[i] * cent.c[i]))
-       |                      / sqrt(CAST(e.nsq AS DOUBLE) * CAST(cent.ncsq AS DOUBLE)) DESC,
-       |                      cent.label) AS rnk
-       |    FROM e CROSS JOIN cent WHERE e.vec_id < $NQueries) t WHERE rnk <= $nprobe),
-       |qs AS (
-       |  SELECT e.vec_id, e.q, e.nsq, p.pcluster FROM e
-       |  JOIN probe p ON p.vec_id = e.vec_id),
-       |adc AS (
-       |  SELECT qs.vec_id AS query_id, cr.vec_id AS vec_id, qs.nsq AS nq,
-       |         sum(list_sum(list_transform(generate_series(1, $SubDims),
-       |             j -> qs.q[cr.m * $SubDims + j] * en.ent[j]))) AS dot
-       |  FROM qs
-       |  JOIN assignall ca ON ca.cluster = qs.pcluster AND ca.vec_id <> qs.vec_id
-       |  JOIN cells cr ON cr.vec_id = ca.vec_id
-       |  JOIN entries en ON en.m = cr.m AND en.code = cr.code
-       |  GROUP BY qs.vec_id, cr.vec_id, qs.nsq),
-       |sl AS (
-       |  SELECT query_id, vec_id FROM (
-       |    SELECT adc.query_id, adc.vec_id,
-       |           row_number() OVER (PARTITION BY adc.query_id ORDER BY
-       |             adc.dot / sqrt(CAST(adc.nq AS DOUBLE) * CAST(ec.npq AS DOUBLE)) DESC,
-       |             adc.vec_id) AS rnk8
-       |    FROM adc JOIN enc ec ON ec.vec_id = adc.vec_id) t
-       |  WHERE rnk8 <= $shortN),
-       |exact AS (
-       |  SELECT s.query_id, s.vec_id,
-       |         list_sum(list_transform(generate_series(1, $Dims), i -> q1.q[i] * c.q[i]))
-       |           / sqrt(CAST(q1.nsq AS DOUBLE) * CAST(c.nsq AS DOUBLE)) AS cos_raw
-       |  FROM sl s JOIN e q1 ON q1.vec_id = s.query_id JOIN e c ON c.vec_id = s.vec_id)
-       |SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk, round(cos_raw, 4) AS cos_sim
-       |FROM (
-       |  SELECT query_id, vec_id, cos_raw,
-       |         row_number() OVER (PARTITION BY query_id
-       |           ORDER BY cos_raw DESC, vec_id) AS rnk
-       |  FROM exact) t
-       |WHERE rnk <= $TopK""".stripMargin
-  }
-
-  /** One-shot oracle for the RESIDUAL-PQ incremental index
-    * (`q_ann_ivf_pq_residual_incremental`): learned assignment of
-    * every vector, floor-divided integer means per learned cluster,
-    * the codebook machinery over residuals, encode-time |m_c + r̂|²
-    * norms, IVFADC-decomposed ADC scoring, shortlist, exact re-rank. */
-  private lazy val ivfPqResidualIncrementalOracleSql: String =
-    ivfPqResidualIncrementalOracleSqlCore(1)
-
-  private lazy val ivfPqResidualIncrementalMultiProbeOracleSql: String =
-    ivfPqResidualIncrementalOracleSqlCore(NProbe)
-
-  private def ivfPqResidualIncrementalOracleSqlCore(nprobe: Int): String = {
-    import graft.similarity.ProductQuantizer.SubDims
-    val centroidSums = (1 to Dims).map(i => s"sum(q[$i])").mkString(", ")
-    val residSums = (1 to Dims).map(i => s"sum(e.q[$i])").mkString(", ")
-    val shortN = TopK * 3
-    s"""WITH $quantizedSql,
-       |cent AS (
-       |  SELECT label, [$centroidSums] AS c,
-       |         list_sum(list_transform([$centroidSums], x -> x * x)) AS ncsq
-       |  FROM e GROUP BY label),
-       |assignall AS (
-       |  SELECT vec_id, cluster FROM (
-       |    SELECT e.vec_id, cent.label AS cluster,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-       |                        i -> e.q[i] * cent.c[i]))
-       |                      / sqrt(CAST(e.nsq AS DOUBLE) * CAST(cent.ncsq AS DOUBLE)) DESC,
-       |                      cent.label) AS rnk
-       |    FROM e CROSS JOIN cent) t WHERE rnk = 1),
-       |meanst AS (
-       |  SELECT a.cluster, [$residSums] AS s, count(*) AS n
-       |  FROM e JOIN assignall a ON a.vec_id = e.vec_id GROUP BY a.cluster),
-       |means AS (
-       |  SELECT cluster,
-       |         list_transform(s, x -> (x - (((x % n) + n) % n)) // n) AS mc
-       |  FROM meanst),
-       |resid AS (
-       |  SELECT e.vec_id, a.cluster AS label,
-       |         list_transform(generate_series(1, $Dims), i -> e.q[i] - m.mc[i]) AS q
-       |  FROM e
-       |  JOIN assignall a ON a.vec_id = e.vec_id
-       |  JOIN means m ON m.cluster = a.cluster),
-       |${pqCodebookCtesSqlFrom("resid")},
-       |encr AS (
-       |  SELECT c.vec_id, sum(list_sum(list_transform(generate_series(1, $SubDims),
-       |           j -> (m.mc[c.m * $SubDims + j] + en.ent[j])
-       |              * (m.mc[c.m * $SubDims + j] + en.ent[j])))) AS npq
-       |  FROM cells c
-       |  JOIN entries en ON en.m = c.m AND en.code = c.code
-       |  JOIN means m ON m.cluster = c.label
-       |  GROUP BY c.vec_id),
-       |probe AS (
-       |  SELECT vec_id, pcluster FROM (
-       |    SELECT e.vec_id, cent.label AS pcluster,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-       |                        i -> e.q[i] * cent.c[i]))
-       |                      / sqrt(CAST(e.nsq AS DOUBLE) * CAST(cent.ncsq AS DOUBLE)) DESC,
-       |                      cent.label) AS rnk
-       |    FROM e CROSS JOIN cent WHERE e.vec_id < $NQueries) t WHERE rnk <= $nprobe),
-       |qs AS (
-       |  SELECT e.vec_id, e.q, e.nsq, p.pcluster FROM e
-       |  JOIN probe p ON p.vec_id = e.vec_id),
-       |qmt AS (
-       |  SELECT qs.vec_id AS query_id, qs.pcluster,
-       |         list_sum(list_transform(generate_series(1, $Dims),
-       |           i -> qs.q[i] * m.mc[i])) AS qm
-       |  FROM qs JOIN means m ON m.cluster = qs.pcluster),
-       |adc AS (
-       |  SELECT qs.vec_id AS query_id, cr.vec_id AS vec_id, qs.nsq AS nq,
-       |         qmt.qm + sum(list_sum(list_transform(generate_series(1, $SubDims),
-       |             j -> qs.q[cr.m * $SubDims + j] * en.ent[j]))) AS dot
-       |  FROM qs
-       |  JOIN qmt ON qmt.query_id = qs.vec_id AND qmt.pcluster = qs.pcluster
-       |  JOIN assignall ca ON ca.cluster = qs.pcluster AND ca.vec_id <> qs.vec_id
-       |  JOIN cells cr ON cr.vec_id = ca.vec_id
-       |  JOIN entries en ON en.m = cr.m AND en.code = cr.code
-       |  GROUP BY qs.vec_id, cr.vec_id, qs.nsq, qmt.qm),
-       |sl AS (
-       |  SELECT query_id, vec_id FROM (
-       |    SELECT adc.query_id, adc.vec_id,
-       |           row_number() OVER (PARTITION BY adc.query_id ORDER BY
-       |             adc.dot / sqrt(CAST(adc.nq AS DOUBLE) * CAST(ec.npq AS DOUBLE)) DESC,
-       |             adc.vec_id) AS rnk8
-       |    FROM adc JOIN encr ec ON ec.vec_id = adc.vec_id) t
-       |  WHERE rnk8 <= $shortN),
-       |exact AS (
-       |  SELECT s.query_id, s.vec_id,
-       |         list_sum(list_transform(generate_series(1, $Dims), i -> q1.q[i] * c.q[i]))
-       |           / sqrt(CAST(q1.nsq AS DOUBLE) * CAST(c.nsq AS DOUBLE)) AS cos_raw
-       |  FROM sl s JOIN e q1 ON q1.vec_id = s.query_id JOIN e c ON c.vec_id = s.vec_id)
-       |SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk, round(cos_raw, 4) AS cos_sim
-       |FROM (
-       |  SELECT query_id, vec_id, cos_raw,
-       |         row_number() OVER (PARTITION BY query_id
-       |           ORDER BY cos_raw DESC, vec_id) AS rnk
-       |  FROM exact) t
-       |WHERE rnk <= $TopK""".stripMargin
-  }
-
-  /** Multi-probe variant of [[ivfIncrementalOracleSql]]: same one-shot
-    * assignment, but each query probes its [[NProbe]] nearest trained
-    * centroids ((cos DESC, label ASC) rank ≤ NProbe) and candidates are
-    * the union of those clusters' ASSIGNED members — each vector has
-    * exactly one assigned cluster, so the union is duplicate-free. */
-  private lazy val ivfIncrementalMultiProbeOracleSql: String =
-    ivfIncrementalMultiProbeOracleSqlCore(NProbe, "")
-
-  /** [[ivfIncrementalMultiProbeOracleSqlCore]] with the filtered-search
-    * predicate on the candidate side and the 1/sel-widened probe width
-    * — the one-shot truth `q_ann_ivf_incremental_filtered` must match. */
-  private lazy val ivfIncrementalFilteredOracleSql: String =
-    ivfIncrementalMultiProbeOracleSqlCore(
-      FilteredProbe, " AND ca.vec_id % 3 = 0")
-
-  private def ivfIncrementalMultiProbeOracleSqlCore(
-      nprobe: Int, candFilter: String): String = {
-    val centroidSums = (1 to Dims).map(i => s"sum(q[$i])").mkString(", ")
-    s"""WITH $quantizedSql,
-       |cent AS (
-       |  SELECT label, [$centroidSums] AS c,
-       |         list_sum(list_transform([$centroidSums], x -> x * x)) AS ncsq
-       |  FROM e GROUP BY label),
-       |assign AS (
-       |  SELECT vec_id, cluster FROM (
-       |    SELECT e.vec_id, cent.label AS cluster,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-       |                        i -> e.q[i] * cent.c[i]))
-       |                      / sqrt(CAST(e.nsq AS DOUBLE) * CAST(cent.ncsq AS DOUBLE)) DESC,
-       |                      cent.label) AS rnk
-       |    FROM e CROSS JOIN cent) t WHERE rnk = 1),
-       |probe AS (
-       |  SELECT vec_id, pcluster FROM (
-       |    SELECT e.vec_id, cent.label AS pcluster,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-       |                        i -> e.q[i] * cent.c[i]))
-       |                      / sqrt(CAST(e.nsq AS DOUBLE) * CAST(cent.ncsq AS DOUBLE)) DESC,
-       |                      cent.label) AS rnk
-       |    FROM e CROSS JOIN cent WHERE e.vec_id < $NQueries) t WHERE rnk <= $nprobe),
-       |qs AS (
-       |  SELECT e.vec_id, e.q, e.nsq, p.pcluster FROM e
-       |  JOIN probe p ON p.vec_id = e.vec_id),
-       |pairs AS (
-       |  SELECT qs.vec_id AS query_id, c.vec_id AS vec_id,
-       |         list_sum(list_transform(generate_series(1, $Dims),
-       |                  i -> qs.q[i] * c.q[i])) AS dot,
-       |         qs.nsq AS nq, c.nsq AS nc
-       |  FROM qs JOIN assign ca ON ca.cluster = qs.pcluster AND ca.vec_id <> qs.vec_id$candFilter
-       |          JOIN e c ON c.vec_id = ca.vec_id)
-       |SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk, round(cos_raw, 4) AS cos_sim
-       |FROM (
-       |  SELECT query_id, vec_id,
-       |         dot / sqrt(CAST(nq AS DOUBLE) * CAST(nc AS DOUBLE)) AS cos_raw,
-       |         row_number() OVER (PARTITION BY query_id
-       |           ORDER BY dot / sqrt(CAST(nq AS DOUBLE) * CAST(nc AS DOUBLE)) DESC, vec_id) AS rnk
-       |  FROM pairs) t
-       |WHERE rnk <= $TopK""".stripMargin
-  }
-
-  /** One-shot oracle for the incrementally-built IVF index: centroids
-    * over the full (fixed) snapshot, EVERY vector assigned to its
-    * nearest centroid (`ORDER BY sim DESC, label` ties to the lowest
-    * label — the Spark side's max-of-struct(sim, −label) mirror), then
-    * each query probes its own cluster. */
-  private lazy val ivfIncrementalOracleSql: String = ivfIncrementalOracleSqlCore("")
-
-  /** [[ivfIncrementalOracleSqlCore]] with the [[deleteSet]] tombstones
-    * filtered out of the candidate (inverted-file) side — the one-shot
-    * truth over corpus-minus-deleted that both deletion-lifecycle
-    * queries must match. */
-  private lazy val ivfDeleteOracleSql: String = ivfIncrementalOracleSqlCore(
-    s" AND NOT (ca.vec_id % $DeleteMod = $DeleteRem AND ca.vec_id >= $NQueries)")
-
-  /** One-shot oracle for the retrain lifecycle
-    * (`q_ann_ivf_incremental_retrain`): snapshot-trained centroids,
-    * batch 1 (vec_id ≤ mid) assigned against them, ONE Lloyd update
-    * from batch-1 membership (element-wise integer member sums — the
-    * exact arithmetic [[graft.similarity.IncrementalIvfIndex.retrain]]
-    * runs), then EVERY vector assigned against the updated centroids:
-    * batch-1 rows because retrain reassigned the stored layout, batch-2
-    * arrivals because the train-once centroid table serves the
-    * retrained quantizer to the post-retrain build. Probe = each
-    * query's own retrained cluster. */
-  private lazy val ivfRetrainLifecycleOracleSql: String = {
-    val centroidSums = (1 to Dims).map(i => s"sum(q[$i])").mkString(", ")
-    val memberSums = (1 to Dims).map(i => s"sum(e.q[$i])").mkString(", ")
-    s"""WITH $quantizedSql,
-       |mid AS (SELECT (min(vec_id) + max(vec_id)) // 2 AS m FROM e),
-       |cent AS (
-       |  SELECT label, [$centroidSums] AS c,
-       |         list_sum(list_transform([$centroidSums], x -> x * x)) AS ncsq
-       |  FROM e GROUP BY label),
-       |assign1 AS (
-       |  SELECT vec_id, cluster FROM (
-       |    SELECT e.vec_id, cent.label AS cluster,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-       |                        i -> e.q[i] * cent.c[i]))
-       |                      / sqrt(CAST(e.nsq AS DOUBLE) * CAST(cent.ncsq AS DOUBLE)) DESC,
-       |                      cent.label) AS rnk
-       |    FROM e CROSS JOIN cent WHERE e.vec_id <= (SELECT m FROM mid)) t
-       |  WHERE rnk = 1),
-       |cent2 AS (
-       |  SELECT a.cluster AS label, [$memberSums] AS c,
-       |         list_sum(list_transform([$memberSums], x -> x * x)) AS ncsq
-       |  FROM e JOIN assign1 a ON a.vec_id = e.vec_id GROUP BY a.cluster),
-       |assign AS (
-       |  SELECT vec_id, cluster FROM (
-       |    SELECT e.vec_id, cent2.label AS cluster,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-       |                        i -> e.q[i] * cent2.c[i]))
-       |                      / sqrt(CAST(e.nsq AS DOUBLE) * CAST(cent2.ncsq AS DOUBLE)) DESC,
-       |                      cent2.label) AS rnk
-       |    FROM e CROSS JOIN cent2) t WHERE rnk = 1),
-       |qs AS (
-       |  SELECT e.vec_id, e.q, e.nsq, a.cluster FROM e
-       |  JOIN assign a ON a.vec_id = e.vec_id WHERE e.vec_id < $NQueries),
-       |pairs AS (
-       |  SELECT qs.vec_id AS query_id, c.vec_id AS vec_id,
-       |         list_sum(list_transform(generate_series(1, $Dims),
-       |                  i -> qs.q[i] * c.q[i])) AS dot,
-       |         qs.nsq AS nq, c.nsq AS nc
-       |  FROM qs JOIN assign ca ON ca.cluster = qs.cluster AND ca.vec_id <> qs.vec_id
-       |          JOIN e c ON c.vec_id = ca.vec_id)
-       |SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk, round(cos_raw, 4) AS cos_sim
-       |FROM (
-       |  SELECT query_id, vec_id,
-       |         dot / sqrt(CAST(nq AS DOUBLE) * CAST(nc AS DOUBLE)) AS cos_raw,
-       |         row_number() OVER (PARTITION BY query_id
-       |           ORDER BY dot / sqrt(CAST(nq AS DOUBLE) * CAST(nc AS DOUBLE)) DESC, vec_id) AS rnk
-       |  FROM pairs) t
-       |WHERE rnk <= $TopK""".stripMargin
-  }
-
-  private def ivfIncrementalOracleSqlCore(candFilter: String): String = {
-    val centroidSums = (1 to Dims).map(i => s"sum(q[$i])").mkString(", ")
-    s"""WITH $quantizedSql,
-       |cent AS (
-       |  SELECT label, [$centroidSums] AS c,
-       |         list_sum(list_transform([$centroidSums], x -> x * x)) AS ncsq
-       |  FROM e GROUP BY label),
-       |assign AS (
-       |  SELECT vec_id, cluster FROM (
-       |    SELECT e.vec_id, cent.label AS cluster,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY list_sum(list_transform(generate_series(1, $Dims),
-       |                        i -> e.q[i] * cent.c[i]))
-       |                      / sqrt(CAST(e.nsq AS DOUBLE) * CAST(cent.ncsq AS DOUBLE)) DESC,
-       |                      cent.label) AS rnk
-       |    FROM e CROSS JOIN cent) t WHERE rnk = 1),
-       |qs AS (
-       |  SELECT e.vec_id, e.q, e.nsq, a.cluster FROM e
-       |  JOIN assign a ON a.vec_id = e.vec_id WHERE e.vec_id < $NQueries),
-       |pairs AS (
-       |  SELECT qs.vec_id AS query_id, c.vec_id AS vec_id,
-       |         list_sum(list_transform(generate_series(1, $Dims),
-       |                  i -> qs.q[i] * c.q[i])) AS dot,
-       |         qs.nsq AS nq, c.nsq AS nc
-       |  FROM qs JOIN assign ca ON ca.cluster = qs.cluster AND ca.vec_id <> qs.vec_id$candFilter
-       |          JOIN e c ON c.vec_id = ca.vec_id)
-       |SELECT query_id, vec_id, CAST(rnk AS INT) AS rnk, round(cos_raw, 4) AS cos_sim
-       |FROM (
-       |  SELECT query_id, vec_id,
-       |         dot / sqrt(CAST(nq AS DOUBLE) * CAST(nc AS DOUBLE)) AS cos_raw,
-       |         row_number() OVER (PARTITION BY query_id
-       |           ORDER BY dot / sqrt(CAST(nq AS DOUBLE) * CAST(nc AS DOUBLE)) DESC, vec_id) AS rnk
-       |  FROM pairs) t
-       |WHERE rnk <= $TopK""".stripMargin
+       |  WHERE rnk = 1)""".stripMargin
   }
 }

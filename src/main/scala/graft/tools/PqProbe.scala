@@ -3,10 +3,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Build-phase attribution for the PQ/IVFADC bench family (the
-  * StageProbe idiom applied to CONSTRUCTION): the r20 phases map shows
-  * q_ann_ivf_pq_residual_incremental spending 9.5 s of its 9.9 s median
-  * in the build phase at sf0.1 — yet the embeddings table is 2,000
+/** Build-phase attribution for the PQ/IVFADC bench family (per-step
+  * wall time and Spark job counts, applied to CONSTRUCTION): the r20
+  * phases map shows q_ann_ivf_pq_residual_incremental spending 9.5 s of
+  * its 9.9 s median in the build phase at sf0.1 — yet the embeddings table is 2,000
   * rows, so the time is fixed per-step overhead (Spark jobs, exchanges,
   * write/read round-trips), not data. This probe times each sub-step of
   * one rep and counts the Spark JOBS it launches, so a job-count

@@ -328,6 +328,20 @@ class PlanSpec extends SparkSpec {
       assert(m.start < lastTake, s"window over un-limited input:\n$p"))
   }
 
+  test("IVF top-k: partial topk_cos reduce, WindowGroupLimit-pushed assignment, broadcast probe side") {
+    val p = plan("q_ann_ivf_topk").split("== Initial Plan ==")(0)
+    // candidates collapse map-side through the bounded aggregate; the
+    // only window is the centroid assignment (rnk = 1 over |C| centroid
+    // rows per query, pushed below its exchange as a WindowGroupLimit);
+    // the corpus scan joins the broadcast probed-query side, never a
+    // sort-merge shuffle of candidates
+    assert(p.toLowerCase.contains("partial_topk_cos"), p)
+    assert(p.contains("WindowGroupLimit"), p)
+    assert("Window \\[".r.findAllIn(p).size == 1, p)
+    assert(p.contains("BroadcastHashJoin") && p.contains("BroadcastExchange"), p)
+    assert(!p.contains("SortMergeJoin"), p)
+  }
+
   test("recall eval: both retrieval arms reduce via partial topk_cos") {
     val p = plan("q_ann_recall_eval")
     // exact arm AND ivf arm both collapse candidates map-side via the
