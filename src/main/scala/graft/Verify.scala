@@ -1,15 +1,32 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+/** A Verify row list names rows that [[SparkEntry.queries]] lacks. */
+final class UnknownRowException(val names: Seq[String])
+  extends IllegalArgumentException(
+    s"unknown row name(s): ${names.map(n => s"'$n'").mkString(", ")}")
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The optional comma-separated row list as a name set. Every name must
+    * be a row: a typo would otherwise just drop that row from the dump and
+    * its oracle_sql.json, and read as one pass fewer, not as an error. */
+  def selectRows(list: String, known: Set[String]): Set[String] = {
+    val names = list.split(",").toSet
+    val unknown = (names -- known).toSeq.sorted
+    if (unknown.nonEmpty) throw new UnknownRowException(unknown)
+    names
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query names (local iteration only;
-    // the driver always passes two args = full surface)
+    // optional 3rd arg: comma-separated query names (local iteration
+    // only; two args dump the full surface), checked before the session
+    // starts or any table is read
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+      if (args.length > 2) Some(selectRows(args(2), SparkEntry.queries.keySet))
+      else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

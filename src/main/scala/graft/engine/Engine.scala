@@ -19,11 +19,13 @@ final class UnknownRefException(val refName: String)
   *   "one exchange" claim in the model scaladocs: a bucketed-input
   *   consumer should show ~0 here while the bucketed write upstream
   *   pays the shuffle once.
-  * @param maxFilesPerPartition small-files debt of an IncrementalAppend
-  *   model's storage AFTER this build ([[Engine.maxFilesPerPartition]]
-  *   ≈ builds-since-last-compaction) — surfaced per build so CI watches
-  *   layout debt from the artifact instead of re-listing the store; −1
-  *   for every other materialization. */
+  * @param maxFilesPerPartition small-files debt of a partitioned
+  *   model's storage (IncrementalAppend, DeleteInsert, Microbatch,
+  *   MergeUpsert) AFTER this build ([[Engine.maxFilesPerPartition]]; for
+  *   an append-only model ≈ builds-since-last-compaction, for the
+  *   rewrite kinds 1 under the write-layout rule) — surfaced per build
+  *   so CI watches layout debt from the artifact instead of re-listing
+  *   the store; −1 for every other materialization. */
 final case class NodeResult(
     name: String,
     status: String, // "ok" | "test_failed" | "unit_test_failed" | "skipped_upstream" | "error"
@@ -504,21 +506,21 @@ final class Engine(
             (if (f.name == wm) lit(oldHwm) else lit(null).cast(f.dataType)).as(f.name)
           }: _*))
       else kept
-    val shaped =
-      if (pcols.nonEmpty) out.repartition(pcols.map(col): _*) else out
     val tmp = path(name) + ".compact"
-    val w = shaped.write.mode("overwrite")
-    (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w).parquet(tmp)
+    writePartitioned(out, pcols, tmp)
     replaceDir(tmp, path(name))
     if (viewsRegistered) registerViews() // refresh pinned file listings
     stat.getLong(1)
   }
 
-  /** Small-files debt of an append-only model's storage: the MAX data
-    * file count across its leaf partition directories (the whole dir for
-    * an unpartitioned model). Every incremental build appends one file
-    * per touched partition, so this is ≈ builds-since-last-compaction —
-    * the number that decides when [[compact]] is due. Local-fs listing
+  /** Small-files debt of a model's storage: the MAX data file count
+    * across its leaf partition directories (the whole dir for an
+    * unpartitioned model). Every incremental build appends one file
+    * per touched partition, so for an append-only model this is ≈
+    * builds-since-last-compaction — the number that decides when
+    * [[compact]] is due. A rewrite kind (delete+insert, microbatch,
+    * merge) reads 1 under [[writePartitioned]]'s layout rule; more
+    * means layout inherited from an older writer. Local-fs listing
     * here; on HDFS/object stores this is the same listing the planner
     * already performs, and table formats expose it as manifest
     * statistics. */
@@ -668,6 +670,30 @@ final class Engine(
     obs.get("rows").asInstanceOf[Long]
   }
 
+  /** The engine's write-layout rule: every partitioned write goes
+    * through here and lands ONE file per written partition value.
+    * Without it each upstream task writes one file per value it holds
+    * (a 32-bucket input gives 32 files per value), and every later scan,
+    * listing and check pays per file. An AQE `rebalance` on the
+    * partition columns sends each value to one write task before
+    * `partitionBy`. `rebalance`, not `repartition`: at scale AQE splits
+    * an oversized value into advisory-size files and merges tiny tasks
+    * instead of pinning one task per value. No plan inspection: an input
+    * already clustered on the columns pays one more small exchange,
+    * which measured within noise. Unpartitioned writes (`pcols` empty) keep
+    * their layout and pay no exchange. `overwriteMode` is the per-writer
+    * `partitionOverwriteMode` (see the DeleteInsert case); None keeps
+    * the session's. Returns the rows written ([[writeCounted]]). */
+  private def writePartitioned(df: DataFrame, pcols: Seq[String], dest: String,
+      mode: String = "overwrite", overwriteMode: Option[String] = None): Long = {
+    val shaped = if (pcols.isEmpty) df else df.hint("rebalance", pcols.map(col): _*)
+    writeCounted(shaped, { d =>
+      val w = overwriteMode.foldLeft(d.write.mode(mode))(
+        _.option("partitionOverwriteMode", _))
+      (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w).parquet(dest)
+    })
+  }
+
   /** Materialize one model per its strategy; returns the rows WRITTEN by
     * this build (dbt's "rows affected": appended rows for incremental
     * append, the restated window for delete+insert, open+newly-closed for
@@ -762,13 +788,8 @@ final class Engine(
             .option("path", path(m.name)).mode("overwrite")
             .saveAsTable(bucketTable(m.name)))
       case Materialization.IncrementalAppend(wm, pcols, policy, schemaPolicy) =>
-        def write(d: DataFrame, mode: String): Long = writeCounted(d, { x =>
-          val w = x.write.mode(mode)
-          (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w)
-            .parquet(path(m.name))
-        })
         if (fullRefresh || !exists(m.name)) {
-          val n = write(df, "overwrite")
+          val n = writePartitioned(df, pcols, path(m.name))
           recordSeed(seed, df.schema, pcols)
           n
         } else {
@@ -779,7 +800,7 @@ final class Engine(
           val delta =
             if (prev.isNullAt(0)) df else df.filter(col(wm) > lit(prev.get(0)))
           val aligned = alignSchema(m.name, delta, schemaPolicy, wm +: pcols, pcols)
-          val n = write(aligned, "append")
+          val n = writePartitioned(aligned, pcols, path(m.name), "append")
           recordSeed(seed, aligned.schema, pcols)
           // engine-owned compaction cadence (the streaming loops'
           // maintenanceMaxFiles twin): listing-only until the debt
@@ -806,9 +827,8 @@ final class Engine(
         val aligned =
           if (fullRefresh || !exists(m.name)) df
           else alignSchema(m.name, df, schemaPolicy, Seq(pcol), Seq(pcol))
-        val n = writeCounted(aligned, _.write.mode("overwrite")
-          .option("partitionOverwriteMode", mode)
-          .partitionBy(pcol).parquet(path(m.name)))
+        val n = writePartitioned(aligned, Seq(pcol), path(m.name),
+          overwriteMode = Some(mode))
         recordSeed(seed, aligned.schema, Seq(pcol))
         n
       case Materialization.Microbatch(ev, grain, lookback, schemaPolicy) =>
@@ -820,29 +840,24 @@ final class Engine(
           s"${m.name}: microbatch output lacks event_time column '$ev'")
         def withBatch(d: DataFrame) =
           d.withColumn(pcol, date_trunc(grain, col(ev)).cast("date"))
-        if (fullRefresh || !exists(m.name)) {
-          // initial load / --full-refresh: one static overwrite is
-          // output-equivalent to replaying every historical batch
+        // initial load / --full-refresh: one static overwrite is
+        // output-equivalent to replaying every historical batch
+        def initialLoad(): Long = {
           val w = withBatch(df)
-          val n = writeCounted(w, _.write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy(pcol).parquet(path(m.name)))
+          val n = writePartitioned(w, Seq(pcol), path(m.name),
+            overwriteMode = Some("static"))
           recordSeed(seed, w.schema, Seq(pcol))
           n
-        } else {
+        }
+        if (fullRefresh || !exists(m.name)) initialLoad()
+        else {
           // frontier = newest stored batch; a partition-column max is a
           // directory-listing read, no data scan. A stored target with
           // ZERO batches (first build saw no rows) has no frontier —
           // everything is "new", same as the initial load.
           val fRow = readEvolved(m.name).agg(max(col(pcol))).first()
-          if (fRow.isNullAt(0)) {
-            val w = withBatch(df)
-            val n = writeCounted(w, _.write.mode("overwrite")
-              .option("partitionOverwriteMode", "static")
-              .partitionBy(pcol).parquet(path(m.name)))
-            recordSeed(seed, w.schema, Seq(pcol))
-            n
-          } else {
+          if (fRow.isNullAt(0)) initialLoad()
+          else {
             val frontier = fRow.getDate(0).toLocalDate
             val cutoff = java.sql.Date.valueOf(
               if (grain == "month") frontier.minusMonths(lookback.toLong)
@@ -854,8 +869,8 @@ final class Engine(
             // re-running the model's upstream plan per batch (dbt's
             // per-batch input filter, paid as one window-sized write)
             val staging = path(m.name) + ".win"
-            aligned.filter(col(pcol) >= lit(cutoff))
-              .write.mode("overwrite").partitionBy(pcol).parquet(staging)
+            writePartitioned(aligned.filter(col(pcol) >= lit(cutoff)),
+              Seq(pcol), staging)
             try {
               val win = spark.read.parquet(staging)
               // batches to (re)process: every batch the source has in
@@ -870,6 +885,8 @@ final class Engine(
                 .select(col(pcol)).distinct()
                 .filter(col(pcol) >= lit(cutoff)).collect().map(_.getDate(0))
               val batches = (srcBatches ++ storedBatches).distinct.sortBy(_.getTime)
+              // each batch write reads ONE staged partition, already one
+              // file by the layout rule: no second exchange
               val total = batches.map { b =>
                 val n = writeCounted(win.filter(col(pcol) === lit(b)),
                   _.write.mode("overwrite")
@@ -897,9 +914,8 @@ final class Engine(
         if (fullRefresh || !exists(m.name))
           // create-table-as (dbt's first build / --full-refresh): static
           // overwrite so a refresh drops buckets absent from the rebuild
-          writeCounted(bucketed, _.write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy(bcol).parquet(path(m.name)))
+          writePartitioned(bucketed, Seq(bcol), path(m.name),
+            overwriteMode = Some("static"))
         else {
           val aligned = alignSchema(m.name, bucketed, schemaPolicy,
             Seq(key, bcol), Seq(bcol))
@@ -972,8 +988,7 @@ final class Engine(
             // read/build — the same torn-swap contract compact/replace
             // already honor.
             val mergeStage = path(m.name) + ".merge"
-            val n = writeCounted(out, _.write.mode("overwrite")
-              .partitionBy(bcol).parquet(mergeStage))
+            val n = writePartitioned(out, Seq(bcol), mergeStage)
             try {
               Option(new java.io.File(mergeStage).listFiles())
                 .getOrElse(Array.empty)
@@ -1291,10 +1306,12 @@ final class Engine(
           historyLine(name, cn, "data", !bad, nViol, wall, batchTs)
         })
       val failed = checkRecords.filter(_._2).map(_._1)
-      // layout-debt reading for append-only storage: a local-fs listing
+      // layout-debt reading for partitioned storage: a local-fs listing
       // here; manifest statistics on a real table format
       val debt = m.materialization match {
-        case _: Materialization.IncrementalAppend => maxFilesPerPartition(name)
+        case _: Materialization.IncrementalAppend | _: Materialization.DeleteInsert |
+            _: Materialization.Microbatch | _: Materialization.MergeUpsert =>
+          maxFilesPerPartition(name)
         case _ => -1
       }
       if (failed.nonEmpty) {

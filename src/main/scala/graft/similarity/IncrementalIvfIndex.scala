@@ -27,9 +27,9 @@ import graft.engine.{Incremental, Materialization, Model}
   *    centroid. Assignment is the scan-local [[CentroidAssign.kernel]]
   *    over a BROADCAST centroid array — ZERO assignment exchanges (the
   *    same kernel the semantic-dedup assignment uses); the only exchange
-  *    is the `repartition(cluster)` paid once at write time so each
-  *    build emits exactly one file per cluster into the
-  *    cluster-partitioned layout. With centroids frozen, an assignment
+  *    is the engine's write-layout rebalance on `cluster`, paid once at
+  *    write time, so each build emits exactly one file per cluster into
+  *    the cluster-partitioned layout. With centroids frozen, an assignment
   *    is immutable: every arriving vector emits exactly one index row,
   *    so the data rows ARE the scan frontier — no marker row (the
   *    emission-watermark trap cannot arise).
@@ -100,13 +100,9 @@ object IncrementalIvfIndex {
       // their rows belong to
       Materialization.IncrementalAppend("vec_id", Seq("cluster"))) { (_, r, prior) =>
       val hwm = Incremental.hwm(prior, "vec_id")
+      // one file per cluster per build: the engine rebalances every
+      // partitioned write on its partition columns
       assign(r(vectorsRef).filter(col("vec_id") > hwm), r("ivf_centroids"))
-        // co-locate each cluster in one write task before the hive
-        // partitioned write: without this every scan task fans out one
-        // file per cluster it touches (tasks × k tiny files at 64×
-        // scale); with it the batch writes exactly one file per cluster
-        // per build — one N-row exchange, paid once at write time
-        .repartition(col("cluster"))
     })
 
   /** The train-once coarse-quantizer model shared by [[models]] and
@@ -138,8 +134,9 @@ object IncrementalIvfIndex {
     *     [[CentroidAssign.kernel]] (broadcast centroids, zero
     *     assignment exchanges);
     *  3. layout swap: the reassigned rows rewritten cluster-partitioned
-    *     (one `repartition(cluster)` exchange, one file per cluster —
-    *     the [[graft.engine.Engine.compact]] write shape) and swapped
+    *     (one exchange on `cluster`, one file per cluster — the layout
+    *     the engine's builds and [[graft.engine.Engine.compact]] write;
+    *     retrain writes outside the engine, so it shuffles itself) and swapped
     *     in via [[graft.engine.DirSwap]]; then the retrained centroid
     *     table swapped over `ivf_centroids`.
     *
@@ -298,7 +295,7 @@ object IncrementalIvfIndex {
     * row. Code assignment is scan-local (plane-sign codegen +
     * codebook-norm lookups against the collected ≈128 KB codebook), so
     * the incremental build's shape is unchanged: kernel assign → encode
-    * → one repartition(cluster) write exchange. */
+    * → the engine's one write exchange on `cluster`. */
   def modelsPQ(vectorsRef: String, trainingRef: String, dims: Int): Seq[Model] = Seq(
     trainOnceCentroids(trainingRef, dims),
     // frozen-quantizer contract made material: the codebook is trained
@@ -316,7 +313,6 @@ object IncrementalIvfIndex {
       assign(r(vectorsRef).filter(col("vec_id") > hwm), r("ivf_centroids"))
         .withColumn("codes", ProductQuantizer.codesCol)
         .withColumn("npq", ProductQuantizer.npqCol(cb))
-        .repartition(col("cluster"))
     })
 
   /** The RESIDUAL-PQ index DAG — the full published IVFADC lifecycle
@@ -337,8 +333,8 @@ object IncrementalIvfIndex {
     *    against the broadcast means join, coded scan-locally, and the
     *    stored `npq` is |m_c + r̂|² — integer at encode time via
     *    [[ProductQuantizer.npqResidualCol]]. Build shape unchanged:
-    *    kernel assign → broadcast means join → encode → one
-    *    repartition(cluster) write exchange. */
+    *    kernel assign → broadcast means join → encode → the engine's
+    *    one write exchange on `cluster`. */
   def modelsPQResidual(
       vectorsRef: String, trainingRef: String, dims: Int): Seq[Model] = {
     // ONE kernel-assignment pass over the training snapshot per build:
@@ -408,7 +404,6 @@ object IncrementalIvfIndex {
           .withColumn("npq", ProductQuantizer.npqResidualCol(cb))
           .select(col("vec_id"), col("cluster"), col("q"), col("nsq"),
             col("codes"), col("npq"))
-          .repartition(col("cluster"))
       })
   }
 

@@ -16,4 +16,14 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
       s"rows without an oracle: ${SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet}")
   }
+
+  test("Verify's row list: an unknown name fails by name before any read") {
+    val known = SparkEntry.queries.keySet
+    assert(Verify.selectRows("q_ann_ivf_topk", known) == Set("q_ann_ivf_topk"))
+    val e = intercept[UnknownRowException](
+      Verify.selectRows("q_ann_ivf_topk,q_nope,q_ann_ivf_topkk", known))
+    assert(e.names == Seq("q_ann_ivf_topkk", "q_nope"))
+    assert(e.getMessage.contains("'q_nope'") && e.getMessage.contains("'q_ann_ivf_topkk'"),
+      e.getMessage)
+  }
 }

@@ -1428,6 +1428,62 @@ class EngineSpec extends SparkSpec {
     assert(!raw.matches("""(?s).*"name":"tbl"[^}]*"max_files_per_partition".*"""), raw)
   }
 
+  test("write-layout rule: every partitioned kind writes 1 file per partition value (≡ full refresh)") {
+    val dir = tmpDir("englayout")
+    // every buildFn spreads its rows over 8 tasks, so without the rule
+    // each partition value lands as one file per task holding it
+    def row(id: Long, k: String, month: Int, v: Long) = (id, k,
+      f"2024-$month%02d-01", Timestamp.valueOf(f"2024-01-$month%02d 12:00:00"), v)
+    var src = (1L to 24L).map(i => row(i, s"k${i % 3}", 1 + (i % 4).toInt, 1L))
+    def spread = src.toDF("id", "k", "month", "ts", "v").repartition(8)
+    // delete+insert restates months 3+; the merge delta is the same rows
+    def window(prior: Option[org.apache.spark.sql.DataFrame]) =
+      if (prior.isEmpty) spread else spread.filter($"month" >= "2024-03-01")
+    val models = Seq(
+      // append sees only new ids (its history is immutable by contract)
+      Model("app", Seq(), Materialization.IncrementalAppend("id", Seq("k")))(
+        (_, _) => spread.drop("v")),
+      Model.incremental("di", Seq(), Materialization.DeleteInsert("month"))(
+        (_, _, prior) => window(prior)),
+      // frontier Jan 4, lookback 1 day: Jan 3+ is restated
+      Model("mb", Seq(), Materialization.Microbatch("ts", "day", 1))((_, _) => spread),
+      Model.incremental("mu", Seq(), Materialization.MergeUpsert("id", 4))(
+        (_, _, prior) => window(prior)))
+    val e = new Engine(spark, dir, Map.empty, models)
+    def assertLayout(rpt: BuildReport): Unit = {
+      assert(rpt.ok, rpt.results.mkString("; "))
+      def leaves(d: java.io.File): Seq[(String, Int)] = {
+        val (dirs, files) = d.listFiles.toSeq.partition(_.isDirectory)
+        if (dirs.isEmpty) Seq(d.getName -> files.count(_.getName.endsWith(".parquet")))
+        else dirs.flatMap(leaves)
+      }
+      val raw = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, "run_results.json")), "UTF-8")
+      models.map(_.name).foreach { n =>
+        val ls = leaves(new java.io.File(s"$dir/$n"))
+        assert(ls.size >= 3 && ls.forall(_._2 == 1), s"$n: $ls")
+        val mf = s""""name":"$n"[^}]*"max_files_per_partition":(\\d+)""".r
+          .findFirstMatchIn(raw).map(_.group(1).toInt)
+        assert(mf.contains(1), s"$n: $raw")
+      }
+    }
+    def contents = models.map(_.name).map { n =>
+      val df = e.ref(n)
+      n -> df.select(df.columns.sorted.map(col): _*).collect().toSet
+    }.toMap
+    assertLayout(e.build())
+    // batch 2: months 3-4 corrected (v = 2) plus a late month-4 row, and
+    // new ids in a new month / day / k values
+    src = src.map { case r @ (id, k, m, ts, _) =>
+      if (m >= "2024-03-01") (id, k, m, ts, 2L) else r } ++
+      (25L to 36L).map(i => row(i, s"n${i % 3}", 5, 1L)) :+ row(37L, "n1", 4, 1L)
+    assertLayout(e.build())
+    val incremental = contents
+    assert(incremental("di").size == 37 && incremental("mu").size == 37)
+    assertLayout(e.build(fullRefresh = true))
+    assert(contents == incremental)
+  }
+
   test("delete+insert restates only the window's partitions (≡ full refresh)") {
     val dir = tmpDir("eng")
     def fact(rows: Seq[(Long, String, Double)]) = rows.toDF("id", "month", "v")
