@@ -1,10 +1,13 @@
 package graft.engine
 
-/** Local-fs directory write-swap shared by [[Engine]]'s snapshot /
-  * compaction rewrites and the streaming index maintenance
-  * ([[graft.streaming.Streaming.compactVectorIndex]]); on HDFS/object
-  * stores the analogue is `FileSystem.rename` / a transactional table
-  * format's metadata swap.
+/** Local-fs directory swap under [[Engine.rewrite]], the one
+  * rewrite-and-swap every maintenance rewrite goes through (the
+  * engine's compaction, retention and snapshot slices, and the IVF
+  * index's compaction and retrain for both the engine-built and the
+  * stream-built layout); the merge materialization swaps its touched
+  * bucket dirs with [[replace]] directly. On HDFS/object stores the
+  * analogue is `FileSystem.rename` / a transactional table format's
+  * metadata swap.
   *
   * Swap order is crash-safe at every point: the old target is renamed
   * ASIDE (`target.old`) before the staging dir renames into place, and

@@ -91,6 +91,8 @@ final class Engine(
       * that participate in selection (`[+]exposure:name`). */
     val exposures: Seq[Exposure] = Nil) {
 
+  import Engine.{rewrite, writeCounted, writePartitioned}
+
   private val byName: Map[String, Model] = models.map(m => m.name -> m).toMap
   require(byName.size == models.size, "duplicate model names")
   exposures.foreach { e =>
@@ -213,7 +215,7 @@ final class Engine(
   private def openPath(name: String): String = s"${path(name)}/open"
   private def closedPath(name: String): String = s"${path(name)}/closed"
   private def snapExists(name: String): Boolean = {
-    // open/ is swap-managed (writeSwap); heal a torn swap before the
+    // open/ is swap-managed (rewrite); heal a torn swap before the
     // marker check — see exists() for the hazard chain
     DirSwap.recover(openPath(name))
     Files.exists(Paths.get(openPath(name), "_SUCCESS"))
@@ -228,7 +230,7 @@ final class Engine(
     // recreate closed/ from just its own batch's rows, after which the
     // next expire's .old cleanup destroys the real history forever
     // (closed history is accumulated state, NOT rebuildable from
-    // sources). Same contract for open/ (writeSwap-managed).
+    // sources). Same contract for open/ (swap-managed by rewrite).
     DirSwap.recover(openPath(name))
     DirSwap.recover(closedPath(name))
     val open = spark.read.parquet(openPath(name))
@@ -364,21 +366,6 @@ final class Engine(
       case None => throw new UnknownRefException(name)
     }
 
-  /** Atomically replace a target dir whose new content READS the old
-    * content (snapshot open-slice merge): write to a tmp dir, then swap.
-    * Local-fs rename here; on HDFS/object stores this is
-    * `FileSystem.rename` / a transactional table format. */
-  private def writeSwap(df: DataFrame, target: String): Unit = {
-    val tmp = target + ".tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    replaceDir(tmp, target)
-  }
-
-  /** Replace `target` with the committed contents of `tmp` — the shared
-    * crash-safe rename-aside swap ([[DirSwap.replace]]). */
-  private def replaceDir(tmp: String, target: String): Unit =
-    DirSwap.replace(tmp, target)
-
   /** COMPACT an [[Materialization.IncrementalAppend]] model's storage —
     * the maintenance rewrite append-only layouts need at streaming
     * cadence. Every build (or micro-batch, for the streaming writers)
@@ -506,9 +493,11 @@ final class Engine(
             (if (f.name == wm) lit(oldHwm) else lit(null).cast(f.dataType)).as(f.name)
           }: _*))
       else kept
-    val tmp = path(name) + ".compact"
-    writePartitioned(out, pcols, tmp)
-    replaceDir(tmp, path(name))
+    // an unpartitioned model is ONE partition value: a column-less
+    // rebalance lets AQE pack it into advisory-size files instead of
+    // writing one file per read split, which can stay past the debt
+    // threshold and trip a compaction on every later build
+    rewrite(if (pcols.isEmpty) out.hint("rebalance") else out, pcols, path(name))
     if (viewsRegistered) registerViews() // refresh pinned file listings
     stat.getLong(1)
   }
@@ -581,12 +570,8 @@ final class Engine(
     // answer "no history" and skip the heal entirely
     DirSwap.recover(dir)
     if (!Files.exists(Paths.get(dir))) return 0L
-    val kept = spark.read.parquet(dir)
-      .filter(col(Snapshot.ValidTo) >= lit(cutoff))
-    val n = kept.count()
-    val tmp = dir + ".retain"
-    kept.write.mode("overwrite").parquet(tmp)
-    DirSwap.replace(tmp, dir)
+    val n = rewrite(
+      spark.read.parquet(dir).filter(col(Snapshot.ValidTo) >= lit(cutoff)), Nil, dir)
     if (viewsRegistered) registerViews()
     n
   }
@@ -656,42 +641,6 @@ final class Engine(
           if (batchCols(f.name)) col(f.name)
           else lit(null).cast(f.dataType).as(f.name)) ++ newCols.map(col)): _*)
     }
-  }
-
-  /** Run `write` on `df` and return the row count the write actually
-    * produced, harvested from an observed metric ON the write plan itself
-    * — dbt's "rows affected", at zero extra cost. The alternative
-    * (post-write `count()` re-scan) pays a parquet footer scan of the
-    * WHOLE target per model per build — metadata-cheap in the sandbox, a
-    * full-table footer pass at 100 TB. */
-  private def writeCounted(df: DataFrame, write: DataFrame => Unit): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    write(df.observe(obs, count(lit(1)).as("rows")))
-    obs.get("rows").asInstanceOf[Long]
-  }
-
-  /** The engine's write-layout rule: every partitioned write goes
-    * through here and lands ONE file per written partition value.
-    * Without it each upstream task writes one file per value it holds
-    * (a 32-bucket input gives 32 files per value), and every later scan,
-    * listing and check pays per file. An AQE `rebalance` on the
-    * partition columns sends each value to one write task before
-    * `partitionBy`. `rebalance`, not `repartition`: at scale AQE splits
-    * an oversized value into advisory-size files and merges tiny tasks
-    * instead of pinning one task per value. No plan inspection: an input
-    * already clustered on the columns pays one more small exchange,
-    * which measured within noise. Unpartitioned writes (`pcols` empty) keep
-    * their layout and pay no exchange. `overwriteMode` is the per-writer
-    * `partitionOverwriteMode` (see the DeleteInsert case); None keeps
-    * the session's. Returns the rows written ([[writeCounted]]). */
-  private def writePartitioned(df: DataFrame, pcols: Seq[String], dest: String,
-      mode: String = "overwrite", overwriteMode: Option[String] = None): Long = {
-    val shaped = if (pcols.isEmpty) df else df.hint("rebalance", pcols.map(col): _*)
-    writeCounted(shaped, { d =>
-      val w = overwriteMode.foldLeft(d.write.mode(mode))(
-        _.option("partitionOverwriteMode", _))
-      (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w).parquet(dest)
-    })
   }
 
   /** Materialize one model per its strategy; returns the rows WRITTEN by
@@ -1060,17 +1009,17 @@ final class Engine(
                   newlyClosed0.select(col(key), col(Snapshot.ValidFrom)))
               if (!closedPrior.join(rederived, Seq(key, Snapshot.ValidFrom),
                   "left_semi").isEmpty)
-                writeSwap(
+                rewrite(
                   closedPrior.join(rederived, Seq(key, Snapshot.ValidFrom),
                     "left_anti"),
-                  closedPath(m.name))
+                  Nil, closedPath(m.name))
               newlyClosed0
             } else newlyClosed0
           Files.createDirectories(Paths.get(path(m.name)))
           Files.write(marker, Array.emptyByteArray)
           val nClosed = writeCounted(newlyClosed,
             _.write.mode("append").parquet(closedPath(m.name)))
-          val nOpen = writeCounted(openOut, writeSwap(_, openPath(m.name)))
+          val nOpen = rewrite(openOut, Nil, openPath(m.name))
           Files.deleteIfExists(marker)
           nClosed + nOpen
         }
@@ -1770,6 +1719,57 @@ object Engine {
   private val lastSeq = new java.util.concurrent.atomic.AtomicLong(0L)
   private[engine] def nextSeq(): Long =
     lastSeq.updateAndGet(prev => math.max(prev + 1, System.currentTimeMillis()))
+
+  /** Run `write` on `df` and return the row count the write actually
+    * produced, harvested from an observed metric ON the write plan itself
+    * — dbt's "rows affected", at zero extra cost. The alternative
+    * (post-write `count()` re-scan) pays a parquet footer scan of the
+    * WHOLE target per model per build — metadata-cheap in the sandbox, a
+    * full-table footer pass at 100 TB. */
+  private[graft] def writeCounted(df: DataFrame, write: DataFrame => Unit): Long = {
+    val obs = org.apache.spark.sql.Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")))
+    obs.get("rows").asInstanceOf[Long]
+  }
+
+  /** The engine's write-layout rule: every partitioned write goes
+    * through here and lands ONE file per written partition value.
+    * Without it each upstream task writes one file per value it holds
+    * (a 32-bucket input gives 32 files per value), and every later scan,
+    * listing and check pays per file. An AQE `rebalance` on the
+    * partition columns sends each value to one write task before
+    * `partitionBy`. `rebalance`, not `repartition`: at scale AQE splits
+    * an oversized value into advisory-size files and merges tiny tasks
+    * instead of pinning one task per value. No plan inspection: an input
+    * already clustered on the columns pays one more small exchange,
+    * which measured within noise. Unpartitioned writes (`pcols` empty) keep
+    * their layout and pay no exchange. `overwriteMode` is the per-writer
+    * `partitionOverwriteMode` (see the DeleteInsert case); None keeps
+    * the session's. Returns the rows written ([[writeCounted]]). */
+  private[graft] def writePartitioned(df: DataFrame, pcols: Seq[String], dest: String,
+      mode: String = "overwrite", overwriteMode: Option[String] = None): Long = {
+    val shaped = if (pcols.isEmpty) df else df.hint("rebalance", pcols.map(col): _*)
+    writeCounted(shaped, { d =>
+      val w = overwriteMode.foldLeft(d.write.mode(mode))(
+        _.option("partitionOverwriteMode", _))
+      (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w).parquet(dest)
+    })
+  }
+
+  /** Rewrite `dir` as `df` under the write-layout rule and swap it in —
+    * the one rewrite-and-swap every maintenance action shares (append
+    * compaction and retention, snapshot slices, the IVF index's
+    * compaction and retrain). The write lands in the staging sibling
+    * `<dir>.rewrite` and [[DirSwap.replace]] renames it over `dir` only
+    * after it committed, so `df` may read `dir` itself and a crash at
+    * any point leaves a readable generation. Returns the rows written,
+    * off the write's observed metric. */
+  private[graft] def rewrite(df: DataFrame, partitionCols: Seq[String], dir: String): Long = {
+    val staging = dir + ".rewrite"
+    val n = writePartitioned(df, partitionCols, staging)
+    DirSwap.replace(staging, dir)
+    n
+  }
 }
 
 /** dbt source-freshness config (`loaded_at_field` + `warn_after` /

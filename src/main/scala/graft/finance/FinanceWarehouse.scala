@@ -64,9 +64,11 @@ object FinanceWarehouse {
   def models(vars: Vars): Seq[Model] = Seq(
 
     // ---- staging: defensive casts + content hash, incremental append
-    // (stg_accounts.sql — full reference column set)
+    // (stg_accounts.sql — full reference column set). Each build appends
+    // one file; past 4 the engine compacts them back to one, so the
+    // daily build's reads never pay an unbounded file list
     Model("stg_accounts", Seq("raw_accounts"),
-      Materialization.IncrementalAppend("ingested_at"),
+      Materialization.IncrementalAppend("ingested_at", compactAfterFiles = Some(4)),
       checks = Seq(Checks.notNull("account_id", "signup_date")))((_, r) => {
       val a = r("raw_accounts")
       val cleaned = a.select(
@@ -90,9 +92,10 @@ object FinanceWarehouse {
         hashText(col("churn_flag")))))
     }),
 
-    // stg_subscriptions.sql — raw + cleaned money, all flags
+    // stg_subscriptions.sql — raw + cleaned money, all flags (same
+    // compaction bound as stg_accounts)
     Model("stg_subscriptions", Seq("raw_subscriptions", "stg_accounts"),
-      Materialization.IncrementalAppend("ingested_at"),
+      Materialization.IncrementalAppend("ingested_at", compactAfterFiles = Some(4)),
       checks = Seq(
         Checks.notNull("subscription_id", "account_id"),
         Checks.acceptedValues("billing_frequency", Seq("monthly", "annual")),

@@ -1525,10 +1525,9 @@ object SimilarityQueries {
         val (src, ckp, mid) = (s"$wh/src", s"$wh/ckp", midId(e))
         for (half <- Seq(col("vec_id") <= mid, col("vec_id") > mid)) {
           vecs.filter(half).write.mode("append").parquet(src)
-          if (v.kind == Flat) graft.streaming.Streaming.vectorIndexStream(
-            s, src, s"$wh/ivf_index", ckp, vecs.schema, cents, maintenanceMaxFiles = Some(2))
-          else graft.streaming.Streaming.vectorIndexStreamPQ(
-            s, src, s"$wh/ivf_index", ckp, vecs.schema, cents, cb, maintenanceMaxFiles = Some(2))
+          graft.streaming.Streaming.vectorIndexStream(
+            s, src, s"$wh/ivf_index", ckp, vecs.schema, cents, maintenanceMaxFiles = Some(2),
+            codebook = if (v.kind == Flat) None else Some(cb))
         }
         // the probe takes the codebook as a frame: re-emit the collected
         // one as a local relation, so its collect runs no job

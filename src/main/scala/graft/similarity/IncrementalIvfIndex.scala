@@ -134,11 +134,11 @@ object IncrementalIvfIndex {
     *     [[CentroidAssign.kernel]] (broadcast centroids, zero
     *     assignment exchanges);
     *  3. layout swap: the reassigned rows rewritten cluster-partitioned
-    *     (one exchange on `cluster`, one file per cluster — the layout
-    *     the engine's builds and [[graft.engine.Engine.compact]] write;
-    *     retrain writes outside the engine, so it shuffles itself) and swapped
-    *     in via [[graft.engine.DirSwap]]; then the retrained centroid
-    *     table swapped over `ivf_centroids`.
+    *     through [[graft.engine.Engine.rewrite]] (the engine's write-layout
+    *     rule: one exchange on `cluster`, one file per cluster — the
+    *     layout the engine's builds and [[graft.engine.Engine.compact]]
+    *     write) and swapped in via [[graft.engine.DirSwap]]; then the
+    *     retrained centroid table swapped over `ivf_centroids`.
     *
     * Because `ivf_centroids` is train-once by construction, subsequent
     * engine builds READ the retrained quantizer and assign new arrivals
@@ -166,68 +166,144 @@ object IncrementalIvfIndex {
       warehouse: String, dims: Int): Retrained =
     retrainWith(spark, warehouse, dims, None)
 
-  /** [[retrain]] with the centroid-update aggregate optionally
-    * PRECOMPUTED: [[retrainIfNeeded]]'s detect pass already collected
-    * the updated centroids over the whole index, and re-deriving the
-    * identical k-row aggregate here would scan the corpus twice per
-    * triggered retrain. */
+  /** [[retrain]] with the centroid update optionally handed over by a
+    * drift check's detect pass ([[retrainLayout]]'s `updated`). The index
+    * swaps first: a torn window between the swaps leaves stale RANKING,
+    * never an unreachable row. */
   private def retrainWith(spark: org.apache.spark.sql.SparkSession,
       warehouse: String, dims: Int,
-      precomputed: Option[Array[(Int, Array[Long], Long)]]): Retrained = {
-    val idxDir = s"$warehouse/ivf_index"
+      updated: Option[Array[(Int, Array[Long], Long)]]): Retrained = {
     val centDir = s"$warehouse/ivf_centroids"
-    graft.engine.DirSwap.recover(idxDir)
     graft.engine.DirSwap.recover(centDir)
-    val rows = graft.engine.Resolver(spark).read(idxDir)
+    val (report, cents) = retrainLayout(spark, s"$warehouse/ivf_index", dims,
+      Seq("cluster"), identity, updated)
+    // the centroid table is rebuilt from the COLLECTED array, not the
+    // centroid-update plan: that plan reads the index, which the swap
+    // above just replaced — re-executing it would sum the NEW
+    // assignment (the next Lloyd update), not the centroids the rows
+    // were assigned to
+    import spark.implicits._
+    graft.engine.Engine.rewrite(
+      cents.toSeq.map { case (l, c, n) => (l, c.toSeq, n) }.toDF("label", "c", "ncsq"),
+      Nil, centDir)
+    report
+  }
+
+  /** The retrain core of both index feeds — the engine-built index
+    * ([[retrain]], layout `cluster`) and the stream-built one
+    * ([[graft.streaming.Streaming.retrainVectorIndex]], layout
+    * `(cluster, batch_id)`) — over the index at `dir`:
+    *
+    *  1. centroid update from stored membership, one k-row aggregate —
+    *     skipped when `updated` is given: a drift check's detect pass
+    *     ([[retrainIfDrifted]]) already collected it, and re-deriving it
+    *     would scan the corpus twice per triggered retrain;
+    *  2. every stored vector reassigned through the scan-local
+    *     [[CentroidAssign.kernel]];
+    *  3. ONE join carrying the prior cluster (for the `moved`
+    *     diagnostic) and every non-core column — PQ codes/npq, which are
+    *     cluster-independent by [[retrain]]'s scope contract, and the
+    *     stream layout's `batch_id`;
+    *  4. union with the null-q marker rows, verbatim (the kernel must
+    *     never see a null vector; a frontier marker must survive);
+    *  5. `keepFrom` folds the result (identity for the engine layout;
+    *     the stream's generation fold), then [[graft.engine.Engine.rewrite]]
+    *     on `partitionCols`.
+    *
+    * Rows and moved ride the rewrite as observed metrics on the
+    * reassigned branch (markers excluded): a separate count or moved-join
+    * would re-run the kernel over the corpus. Returns the report and
+    * the centroids the rows were assigned to. */
+  private[graft] def retrainLayout(spark: org.apache.spark.sql.SparkSession,
+      dir: String, dims: Int, partitionCols: Seq[String],
+      keepFrom: DataFrame => DataFrame,
+      updated: Option[Array[(Int, Array[Long], Long)]]
+  ): (Retrained, Array[(Int, Array[Long], Long)]) = {
+    graft.engine.DirSwap.recover(dir)
+    graft.functions.GraftFunctions.register(spark)
+    val rows = graft.engine.Resolver(spark).read(dir)
     val data = rows.filter(col("q").isNotNull)
     val markers = rows.filter(col("q").isNull)
-    // 1. centroid update from stored membership (eager, k rows)
-    val cents = precomputed.getOrElse(CentroidAssign.collectCentroids(centroids(
-      data.select(col("vec_id"), col("cluster").cast("int").as("label"),
-        col("q"), col("nsq")), dims)))
-    // 2. reassign every stored vector; non-core columns (PQ codes/npq)
-    // are cluster-independent by the scope contract and ride along
-    val core = Set("vec_id", "cluster", "q", "nsq")
-    val extra = rows.columns.filterNot(core)
-    val reassigned0 = CentroidAssign
+    val cents = updated.getOrElse(memberCentroids(data, dims))
+    val extra = rows.columns.filterNot(Set("vec_id", "cluster", "q", "nsq"))
+    val reassigned = CentroidAssign
       .kernel(data.select(col("vec_id"), col("q"), col("nsq")), cents)
       .select(col("vec_id"), col("cluster"), col("q"), col("nsq"))
-    // ONE join carries both the ride-along extras and the prior cluster
-    // (for the moved diagnostic); total/moved ride the rewrite as
-    // observed metrics — the previous separate moved-join + count()
-    // re-ran the assignment kernel and rescanned the corpus, tripling
-    // a triggered retrain's reads
-    val reassigned = reassigned0.join(
-      data.select(
+      .join(data.select(
         (col("vec_id") +: col("cluster").as("_old") +: extra.map(col)): _*),
-      Seq("vec_id"))
+        Seq("vec_id"))
     val obs = org.apache.spark.sql.Observation()
     val observed = reassigned.observe(obs,
         count(lit(1)).as("total"),
         coalesce(sum(when(col("cluster") =!= col("_old"), 1L).otherwise(0L)),
           lit(0L)).as("moved"))
       .drop("_old")
-    // 3. rewrite + swap (index first: a torn window between the swaps
-    // leaves stale RANKING, never an unreachable row)
-    val tmpIdx = idxDir + ".retrain"
-    observed.unionByName(markers.select(observed.columns.map(col): _*))
-      .repartition(col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(tmpIdx)
-    val total = obs.get("total").asInstanceOf[Long]
-    val moved = obs.get("moved").asInstanceOf[Long]
-    graft.engine.DirSwap.replace(tmpIdx, idxDir)
-    // the centroid table is rebuilt from the COLLECTED array, not the
-    // centroid-update plan: that plan reads idxDir, which the swap
-    // above just replaced — re-executing it would sum the NEW
-    // assignment (the next Lloyd update), not the centroids the rows
-    // were assigned to
-    val tmpCent = centDir + ".retrain"
-    import spark.implicits._
-    cents.toSeq.map { case (l, c, n) => (l, c.toSeq, n) }
-      .toDF("label", "c", "ncsq")
-      .write.mode("overwrite").parquet(tmpCent)
-    graft.engine.DirSwap.replace(tmpCent, centDir)
-    Retrained(total, moved, cents.length)
+    graft.engine.Engine.rewrite(
+      keepFrom(observed.unionByName(markers.select(observed.columns.map(col): _*))),
+      partitionCols, dir)
+    (Retrained(obs.get("total").asInstanceOf[Long], obs.get("moved").asInstanceOf[Long],
+      cents.length), cents)
+  }
+
+  /** The Lloyd centroid update over an index's data rows: per current
+    * cluster, the element-wise integer sum of its members — k rows,
+    * collected. */
+  private def memberCentroids(data: DataFrame, dims: Int): Array[(Int, Array[Long], Long)] =
+    CentroidAssign.collectCentroids(centroids(
+      data.select(col("vec_id"), col("cluster").cast("int").as("label"),
+        col("q"), col("nsq")), dims))
+
+  /** Quantizer drift: the worst cosine between a stored centroid and the
+    * same cluster's updated one. Clusters empty in the index carry no
+    * drift evidence; with none left the answer is 1.0 (no drift). At the
+    * Lloyd fixed point the two arrays are equal and this is exactly 1.0. */
+  private[graft] def minSelfCosine(stored: Array[(Int, Array[Long], Long)],
+      updated: Array[(Int, Array[Long], Long)]): Double = {
+    val upMap = updated.map(c => c._1 -> c).toMap
+    val selfCos = stored.flatMap { case (l, c, n) =>
+      upMap.get(l).map { case (_, c2, n2) =>
+        var d = 0L; var i = 0
+        while (i < c.length) { d += c(i) * c2(i); i += 1 }
+        d / math.sqrt(n.toDouble * n2.toDouble)
+      }
+    }
+    if (selfCos.isEmpty) 1.0 else selfCos.min
+  }
+
+  /** Append one JSON line to the index's SIDECAR maintenance log
+    * `<dir>.maintenance.jsonl` — outside the swap-managed dir, so it
+    * survives every rewrite; CI reads quantizer drift and compaction
+    * cadence from it instead of re-scanning the index. */
+  private[graft] def logMaintenance(dir: String, json: String): Unit = {
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(dir + ".maintenance.jsonl"), json + "\n",
+      java.nio.file.StandardOpenOption.CREATE,
+      java.nio.file.StandardOpenOption.APPEND)
+    ()
+  }
+
+  /** The drift policy of both index feeds ([[retrainIfNeeded]] and
+    * [[graft.streaming.Streaming.retrainVectorIndexIfNeeded]]): detect
+    * with one k-row centroid update over the index at `dir` and
+    * [[minSelfCosine]] against the `stored` quantizer; only below
+    * `minSelfCos` does `retrainFn` run, handed the detect pass's
+    * centroids so the corpus is scanned for the update once. Logs one
+    * `retrain_check` line per call ([[logMaintenance]]). Returns the
+    * report and the updated centroids when a retrain ran. */
+  private[graft] def retrainIfDrifted(spark: org.apache.spark.sql.SparkSession,
+      dir: String, stored: Array[(Int, Array[Long], Long)], dims: Int, minSelfCos: Double)(
+      retrainFn: Array[(Int, Array[Long], Long)] => Retrained
+  ): Option[(Retrained, Array[(Int, Array[Long], Long)])] = {
+    graft.engine.DirSwap.recover(dir)
+    val updated = memberCentroids(
+      graft.engine.Resolver(spark).read(dir).filter(col("q").isNotNull), dims)
+    val minCos = minSelfCosine(stored, updated)
+    val due = minCos < minSelfCos
+    val res = if (due) Some((retrainFn(updated), updated)) else None
+    logMaintenance(dir, f"""{"event":"retrain_check","min_self_cos":$minCos%.6f,""" +
+      f""""threshold":$minSelfCos%.6f,"due":$due""" +
+      res.fold("")(r => s""","rows":${r._1.rows},"moved":${r._1.moved}""") + "}")
+    res
   }
 
   /** DRIFT-POLICY retrain (the retrain twin of
@@ -246,45 +322,14 @@ object IncrementalIvfIndex {
     * converges to a no-op — repeated calls cannot oscillate.
     *
     * Every check appends one JSON line to the sidecar
-    * `<warehouse>/ivf_index.maintenance.jsonl` (outside both
-    * swap-managed dirs, so it survives rewrites) — same observability
-    * contract as compaction cadence: CI watches quantizer drift from
-    * the artifact instead of re-scanning the index. */
+    * `<warehouse>/ivf_index.maintenance.jsonl` ([[retrainIfDrifted]]). */
   def retrainIfNeeded(spark: org.apache.spark.sql.SparkSession,
       warehouse: String, dims: Int, minSelfCos: Double): Option[Retrained] = {
-    val idxDir = s"$warehouse/ivf_index"
     val centDir = s"$warehouse/ivf_centroids"
-    graft.engine.DirSwap.recover(idxDir)
     graft.engine.DirSwap.recover(centDir)
     val stored = CentroidAssign.collectCentroids(graft.engine.Resolver(spark).read(centDir))
-    val data = graft.engine.Resolver(spark).read(idxDir).filter(col("q").isNotNull)
-    val updated = CentroidAssign.collectCentroids(centroids(
-      data.select(col("vec_id"), col("cluster").cast("int").as("label"),
-        col("q"), col("nsq")), dims))
-    val upMap = updated.map(c => c._1 -> c).toMap
-    // clusters currently empty in the index carry no drift evidence
-    val selfCos = stored.flatMap { case (l, c, n) =>
-      upMap.get(l).map { case (_, c2, n2) =>
-        var d = 0L; var i = 0
-        while (i < c.length) { d += c(i) * c2(i); i += 1 }
-        d / math.sqrt(n.toDouble * n2.toDouble)
-      }
-    }
-    val minCos = if (selfCos.isEmpty) 1.0 else selfCos.min
-    val due = minCos < minSelfCos
-    // the detect pass's `updated` IS retrain's step-1 aggregate — hand
-    // it over so a triggered retrain scans the corpus once, not twice
-    val res =
-      if (due) Some(retrainWith(spark, warehouse, dims, Some(updated)))
-      else None
-    val line = f"""{"event":"retrain_check","min_self_cos":$minCos%.6f,""" +
-      f""""threshold":$minSelfCos%.6f,"due":$due""" +
-      res.fold("")(r => s""","rows":${r.rows},"moved":${r.moved}""") + "}\n"
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(idxDir + ".maintenance.jsonl"), line,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    res
+    retrainIfDrifted(spark, s"$warehouse/ivf_index", stored, dims, minSelfCos)(
+      up => retrainWith(spark, warehouse, dims, Some(up))).map(_._1)
   }
 
   /** The PQ-coded index DAG: [[models]] plus (a) a `pq_codebook` Table

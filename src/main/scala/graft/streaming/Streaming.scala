@@ -185,13 +185,9 @@ object Streaming {
       schema: org.apache.spark.sql.types.StructType,
       key: String,
       seqCol: String,
-      buckets: Int = 8): Unit = {
-    val q = spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+      buckets: Int = 8): Unit =
+    availableNow(spark.readStream.schema(schema).parquet(sourceDir), checkpointDir) {
+      (batch, _) =>
         val delta = batch
           .withColumn("_rn", row_number().over(
             org.apache.spark.sql.expressions.Window
@@ -203,12 +199,32 @@ object Streaming {
               graft.engine.Materialization.MergeUpsert(key, buckets))(
               (_, r) => r("cdc_delta")))).build()
         require(rpt.ok, rpt.results.mkString("; "))
-        ()
-      }
+    }
+
+  /** The one AvailableNow `foreachBatch` runner behind every stream
+    * here: drain everything `source` has not yet committed to
+    * `checkpointDir`, one `perBatch(batch, batchId)` call per
+    * micro-batch, then stop. */
+  private def availableNow(source: DataFrame, checkpointDir: String)(
+      perBatch: (DataFrame, Long) => Unit): Unit =
+    source.writeStream
+      .foreachBatch(perBatch)
+      .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-  }
+      .awaitTermination()
+
+  /** The idempotent micro-batch sink: `df` lands under its own
+    * `batch_id` partition with dynamic partition overwrite, so a
+    * replayed batch replaces its earlier attempt instead of doubling
+    * it. */
+  private def overwriteBatch(df: DataFrame, batchId: Long, partitionCols: Seq[String],
+      dir: String): Unit =
+    df.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*)
+      .parquet(dir)
 
   /** The IVF index's maintenance loop as a STREAM: arriving vector
     * batches flow through the same scan-local nearest-centroid kernel
@@ -244,7 +260,20 @@ object Streaming {
     * job — and a threshold trip folds every COMMITTED generation into
     * `batch_id = -1` before the batch appends (`keepFrom = batchId`
     * keeps a torn earlier attempt of THIS batch replay-safe; see
-    * [[compactVectorIndex]]). */
+    * [[compactVectorIndex]]).
+    *
+    * `codebook` selects the PRODUCTION layout: each arriving vector is
+    * also PQ-encoded in the same scan — codes from the frozen
+    * codebook's plane signs (whole-stage codegen), reconstructed norm
+    * from the ≈128 KB codebook-norm literal — so the stream maintains
+    * exactly the [[graft.similarity.IncrementalIvfIndex.modelsPQ]]
+    * index shape and [[graft.similarity.IncrementalIvfIndex.searchTopKPQ]]
+    * probes the accumulated directory directly (code-column scan +
+    * shortlist re-rank). Both quantizers (centroids AND codebook) are
+    * frozen training-snapshot artifacts by the same contract as the
+    * engine DAG; encoding is stateless per row, which keeps it legal
+    * inside the streaming plan. StreamingSpec pins stream-built ≡
+    * engine-built, row-for-row and through the ADC probe. */
   def vectorIndexStream(
       spark: SparkSession,
       sourceDir: String,
@@ -252,86 +281,44 @@ object Streaming {
       checkpointDir: String,
       schema: org.apache.spark.sql.types.StructType,
       cents: Array[(Int, Array[Long], Long)],
-      maintenanceMaxFiles: Option[Int] = None): Unit = {
-    val assigned = graft.similarity.CentroidAssign.kernel(
-      spark.readStream.schema(schema).parquet(sourceDir), cents)
-      .select("vec_id", "cluster", "q", "nsq")
-    val q = assigned.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // recover-before-write: recreating a missing swap-managed dir on
-        // top of a torn compaction would orphan the .old generation
-        graft.engine.DirSwap.recover(targetDir)
-        maintenanceMaxFiles.foreach { mf =>
-          compactVectorIndexIfNeeded(batch.sparkSession, targetDir, mf,
-            keepFrom = batchId)
-        }
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cluster", "batch_id")
-          .parquet(targetDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** [[vectorIndexStream]] writing the PRODUCTION layout: each arriving
-    * vector is kernel-assigned its cluster AND PQ-encoded in the same
-    * scan — codes from the frozen codebook's plane signs (whole-stage
-    * codegen), reconstructed norm from the ≈128 KB codebook-norm
-    * literal — so the stream maintains exactly the
-    * [[graft.similarity.IncrementalIvfIndex.modelsPQ]] index shape and
-    * [[graft.similarity.IncrementalIvfIndex.searchTopKPQ]] probes the
-    * accumulated directory directly (code-column scan + shortlist
-    * re-rank). Both the quantizers (centroids AND codebook) are frozen
-    * training-snapshot artifacts by the same contract as the engine
-    * DAG; encoding is stateless per row, which keeps it legal inside
-    * the streaming plan. Same idempotent (cluster, batch_id) sink and
-    * the same `maintenanceMaxFiles` cadence-gated compaction as
-    * [[vectorIndexStream]]. StreamingSpec pins stream-built ≡
-    * engine-built, row-for-row and through the ADC probe. */
-  def vectorIndexStreamPQ(
-      spark: SparkSession,
-      sourceDir: String,
-      targetDir: String,
-      checkpointDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      cents: Array[(Int, Array[Long], Long)],
-      cb: graft.similarity.ProductQuantizer.Codebook,
-      maintenanceMaxFiles: Option[Int] = None): Unit = {
+      maintenanceMaxFiles: Option[Int] = None,
+      codebook: Option[graft.similarity.ProductQuantizer.Codebook] = None): Unit = {
     val PQ = graft.similarity.ProductQuantizer
     val assigned = graft.similarity.CentroidAssign.kernel(
       spark.readStream.schema(schema).parquet(sourceDir), cents)
       .select("vec_id", "cluster", "q", "nsq")
-      .withColumn("codes", PQ.codesCol)
-      .withColumn("npq", PQ.npqCol(cb))
-    val q = assigned.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.engine.DirSwap.recover(targetDir) // see vectorIndexStream
-        maintenanceMaxFiles.foreach { mf =>
-          compactVectorIndexIfNeeded(batch.sparkSession, targetDir, mf,
-            keepFrom = batchId)
-        }
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cluster", "batch_id")
-          .parquet(targetDir)
+    val rows = codebook.fold(assigned)(cb =>
+      assigned.withColumn("codes", PQ.codesCol).withColumn("npq", PQ.npqCol(cb)))
+    availableNow(rows, checkpointDir) { (batch, batchId) =>
+      // recover-before-write: recreating a missing swap-managed dir on
+      // top of a torn compaction would orphan the .old generation
+      graft.engine.DirSwap.recover(targetDir)
+      maintenanceMaxFiles.foreach { mf =>
+        compactVectorIndexIfNeeded(batch.sparkSession, targetDir, mf,
+          keepFrom = batchId)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      overwriteBatch(batch, batchId, LayoutCols, targetDir)
+    }
   }
+
+  /** The stream index's hive layout: `cluster` leads (probe pruning),
+    * `batch_id` generations under it (the idempotent sink). */
+  private val LayoutCols = Seq("cluster", "batch_id")
+
+  /** The `keepFrom` fold of the stream layout's maintenance rewrites:
+    * every generation below `keepFrom` folds into `batch_id = -1`, the
+    * rest keep their own (see [[compactVectorIndex]]). */
+  private def foldBelow(keepFrom: Long)(df: DataFrame): DataFrame =
+    df.withColumn("batch_id",
+      when(col("batch_id") >= keepFrom, col("batch_id")).otherwise(lit(-1L)))
 
   /** COMPACT a quiesced [[vectorIndexStream]] target: at streaming
     * cadence every micro-batch leaves one file per touched cluster, so
     * a long-lived index accumulates `batches × clusters` small files
     * and probe cost drifts from bytes to file-open overhead. The
     * rewrite merges everything into the reserved `batch_id = -1`
-    * generation — one shuffle on cluster, ONE file per cluster,
+    * generation — one [[graft.engine.Engine.rewrite]] under the
+    * write-layout rule, ONE file per `(cluster, batch_id)` dir,
     * content-identical, `cluster=` pruning untouched — via staging-dir
     * write-swap (a torn compaction leaves the original readable;
     * [[graft.engine.Engine.compact]] is the engine-model twin of this
@@ -383,32 +370,21 @@ object Streaming {
       all.join(broadcast(t.select(col("vec_id")).distinct()),
         Seq("vec_id"), "left_anti")
     }
-    // the row count rides the rewrite as an observed metric — a
-    // separate pre-write count() would read the whole index twice per
-    // compaction (the engine's writeCounted pattern)
-    val obs = org.apache.spark.sql.Observation()
-    val tmp = targetDir + ".compact"
-    cur.observe(obs, count(lit(1)).as("rows"))
-      .withColumn("batch_id",
-        when(col("batch_id") >= keepFrom, col("batch_id")).otherwise(lit(-1L)))
-      .repartition(col("cluster"))
-      .write.mode("overwrite")
-      .partitionBy("cluster", "batch_id")
-      .parquet(tmp)
-    val n = obs.get("rows").asInstanceOf[Long]
-    // shared rename-aside swap: unlike an engine model, a streaming
-    // target may not be rebuildable once source batches are retired, so
-    // the swap must never pass through a state with no readable copy
-    graft.engine.DirSwap.replace(tmp, targetDir)
-    n
+    // one file per (cluster, batch_id) dir; the row count rides the
+    // rewrite as an observed metric. Shared rename-aside swap: unlike an
+    // engine model, a streaming target may not be rebuildable once
+    // source batches are retired, so the swap must never pass through a
+    // state with no readable copy
+    graft.engine.Engine.rewrite(foldBelow(keepFrom)(cur), LayoutCols, targetDir)
   }
 
   /** RETRAIN the accumulated streaming index layout — one Lloyd step
-    * over everything the stream has written, the streaming twin of
-    * [[graft.similarity.IncrementalIvfIndex.retrain]]: centroid update
-    * from actual membership (k-row aggregate), scan-local kernel
-    * reassignment of every stored row, cluster-partitioned rewrite +
-    * [[graft.engine.DirSwap]]. Returns `(rows, updatedCentroids)` —
+    * over everything the stream has written, through the retrain core
+    * the engine-built index uses
+    * ([[graft.similarity.IncrementalIvfIndex.retrainLayout]]): centroid
+    * update from actual membership (k-row aggregate), scan-local kernel
+    * reassignment of every stored row (`batch_id` and any PQ columns
+    * ride along), `(cluster, batch_id)` rewrite + swap. Returns `(rows, updatedCentroids)` —
     * centroids are CALLER-OWNED state in the streaming API (each
     * AvailableNow maintenance run passes them in), so the caller feeds
     * the returned quantizer to its next [[vectorIndexStream]] /
@@ -425,52 +401,21 @@ object Streaming {
       targetDir: String,
       dims: Int,
       keepFrom: Long = Long.MaxValue): (Long, Array[(Int, Array[Long], Long)]) = {
-    graft.engine.DirSwap.recover(targetDir)
-    graft.functions.GraftFunctions.register(spark)
-    val all = graft.engine.Resolver(spark).read(targetDir)
-    // partition data vs null-q marker rows (mirroring the engine-side
-    // retrain): the streaming layout stores no markers TODAY, but the
-    // assignment kernel must never see a null vector, and any marker a
-    // future maintenance action restates must survive the rewrite
-    // verbatim rather than crash it
-    val data = all.filter(col("q").isNotNull)
-    val markers = all.filter(col("q").isNull)
-    val cents = graft.similarity.CentroidAssign.collectCentroids(
-      graft.similarity.IncrementalIvfIndex.centroids(
-        data.select(col("vec_id"), col("cluster").cast("int").as("label"),
-          col("q"), col("nsq")), dims))
-    val reassigned = graft.similarity.CentroidAssign
-      .kernel(data.select(col("vec_id"), col("q"), col("nsq")), cents)
-      .select(col("vec_id"), col("cluster"), col("q"), col("nsq"))
-      .join(data.select(col("vec_id"), col("batch_id")), Seq("vec_id"))
-    // the data-row count rides the rewrite as an observed metric on the
-    // reassigned branch (markers excluded, as before) — a pre-write
-    // count() would run the assignment kernel over the corpus twice
-    val obs = org.apache.spark.sql.Observation()
-    val tmp = targetDir + ".retrain"
-    reassigned.observe(obs, count(lit(1)).as("rows"))
-      .unionByName(markers.select(reassigned.columns.map(col): _*))
-      .withColumn("batch_id",
-        when(col("batch_id") >= keepFrom, col("batch_id")).otherwise(lit(-1L)))
-      .repartition(col("cluster"))
-      .write.mode("overwrite")
-      .partitionBy("cluster", "batch_id")
-      .parquet(tmp)
-    val n = obs.get("rows").asInstanceOf[Long]
-    graft.engine.DirSwap.replace(tmp, targetDir)
-    (n, cents)
+    val (r, cents) = graft.similarity.IncrementalIvfIndex.retrainLayout(
+      spark, targetDir, dims, LayoutCols, foldBelow(keepFrom), None)
+    (r.rows, cents)
   }
 
   /** DRIFT-POLICY streaming retrain (the quantizer twin of
-    * [[compactVectorIndexIfNeeded]], same policy as
-    * [[graft.similarity.IncrementalIvfIndex.retrainIfNeeded]]): detect
-    * with one k-row centroid-update aggregate + k driver cosines
-    * between the CALLER's current centroids and each cluster's member
-    * mean; only below `minSelfCos` does the full
-    * [[retrainVectorIndex]] rewrite run. Appends one JSON line per
-    * check to `<targetDir>.maintenance.jsonl` (the compaction sidecar),
-    * so quantizer drift is CI-observable beside small-files debt.
-    * Returns the updated centroids when a retrain ran. */
+    * [[compactVectorIndexIfNeeded]]): the engine index's drift policy
+    * ([[graft.similarity.IncrementalIvfIndex.retrainIfDrifted]]) against
+    * the CALLER's current centroids — one k-row centroid-update
+    * aggregate + k driver cosines; only below `minSelfCos` does the
+    * [[retrainVectorIndex]] rewrite run, reusing the detect pass's
+    * centroids. Appends one JSON line per check to
+    * `<targetDir>.maintenance.jsonl` (the compaction sidecar), so
+    * quantizer drift is CI-observable beside small-files debt. Returns
+    * the updated centroids when a retrain ran. */
   def retrainVectorIndexIfNeeded(
       spark: SparkSession,
       targetDir: String,
@@ -478,36 +423,10 @@ object Streaming {
       dims: Int,
       minSelfCos: Double,
       keepFrom: Long = Long.MaxValue): Option[(Long, Array[(Int, Array[Long], Long)])] = {
-    graft.engine.DirSwap.recover(targetDir)
-    graft.functions.GraftFunctions.register(spark)
-    // null-q marker rows (deleted vectors a future maintenance action
-    // restates) must not feed the drift aggregate — the same filter
-    // retrainVectorIndex and IncrementalIvfIndex.retrainIfNeeded apply;
-    // without it a marker's null label crashes the typed collect
-    val all = graft.engine.Resolver(spark).read(targetDir).filter(col("q").isNotNull)
-    val updated = graft.similarity.CentroidAssign.collectCentroids(
-      graft.similarity.IncrementalIvfIndex.centroids(
-        all.select(col("vec_id"), col("cluster").cast("int").as("label"),
-          col("q"), col("nsq")), dims))
-    val upMap = updated.map(c => c._1 -> c).toMap
-    val selfCos = cents.flatMap { case (l, c, n) =>
-      upMap.get(l).map { case (_, c2, n2) =>
-        var d = 0L; var i = 0
-        while (i < c.length) { d += c(i) * c2(i); i += 1 }
-        d / math.sqrt(n.toDouble * n2.toDouble)
-      }
-    }
-    val minCos = if (selfCos.isEmpty) 1.0 else selfCos.min
-    val due = minCos < minSelfCos
-    val res = if (due) Some(retrainVectorIndex(spark, targetDir, dims, keepFrom)) else None
-    val line = f"""{"event":"retrain_check","min_self_cos":$minCos%.6f,""" +
-      f""""threshold":$minSelfCos%.6f,"due":$due""" +
-      res.fold("")(r => s""","rows":${r._1}""") + "}\n"
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(targetDir + ".maintenance.jsonl"), line,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    res
+    val IIX = graft.similarity.IncrementalIvfIndex
+    IIX.retrainIfDrifted(spark, targetDir, cents, dims, minSelfCos)(up =>
+      IIX.retrainLayout(spark, targetDir, dims, LayoutCols, foldBelow(keepFrom), Some(up))._1)
+      .map { case (r, updated) => (r.rows, updated) }
   }
 
   /** Small-files debt of a streaming index layout: the max parquet-file
@@ -552,12 +471,9 @@ object Streaming {
     val debt = indexFilesPerCluster(targetDir)
     if (debt > maxFiles) {
       val n = compactVectorIndex(spark, targetDir, tombstones, keepFrom)
-      val line = s"""{"event":"compact","files_per_cluster":$debt,""" +
-        s""""max_files":$maxFiles,"keep_from":$keepFrom,"rows":$n}""" + "\n"
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(targetDir + ".maintenance.jsonl"), line,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
+      graft.similarity.IncrementalIvfIndex.logMaintenance(targetDir,
+        s"""{"event":"compact","files_per_cluster":$debt,""" +
+          s""""max_files":$maxFiles,"keep_from":$keepFrom,"rows":$n}""")
       Some(n)
     } else None
   }
@@ -605,36 +521,40 @@ object Streaming {
       cents: Array[(Int, Array[Long], Long)],
       topK: Int,
       nprobe: Int = 1,
-      candFilter: Option[org.apache.spark.sql.Column] = None): Unit = {
-    val q = spark.readStream.schema(schema).parquet(querySourceDir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // resolve the index PER BATCH, not once at stream start: a
-        // maintenance compaction between micro-batches swaps indexDir's
-        // files, and a listing pinned at start would 404 every later
-        // batch. recover() first heals a swap torn mid-rename. (A swap
-        // concurrent with a RUNNING batch can still lose the race — that
-        // batch fails and the restart replays it idempotently.)
+      candFilter: Option[org.apache.spark.sql.Column] = None): Unit =
+    searchStream(spark, querySourceDir, indexDir, targetDir, checkpointDir, schema) {
+      (index, batch) => graft.similarity.IncrementalIvfIndex
+        .searchTopKFor(index, batch, cents, topK, nprobe, candFilter)
+    }
+
+  /** The loop both search streams share: per micro-batch, `search` the
+    * arriving queries against the index and land the results in the
+    * idempotent `batch_id` sink. The index resolves PER BATCH, not once
+    * at stream start: a maintenance compaction between micro-batches
+    * swaps indexDir's files, and a listing pinned at start would 404
+    * every later batch. recover() first heals a swap torn mid-rename.
+    * (A swap concurrent with a RUNNING batch can still lose the race —
+    * that batch fails and the restart replays it idempotently.) */
+  private def searchStream(
+      spark: SparkSession,
+      querySourceDir: String,
+      indexDir: String,
+      targetDir: String,
+      checkpointDir: String,
+      schema: org.apache.spark.sql.types.StructType)(
+      search: (DataFrame, DataFrame) => DataFrame): Unit =
+    availableNow(spark.readStream.schema(schema).parquet(querySourceDir), checkpointDir) {
+      (batch, batchId) =>
         graft.engine.DirSwap.recover(indexDir)
         val index = graft.engine.Resolver(batch.sparkSession).read(indexDir)
-        graft.similarity.IncrementalIvfIndex
-          .searchTopKFor(index, batch, cents, topK, nprobe, candFilter)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(targetDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+        overwriteBatch(search(index, batch), batchId, Seq("batch_id"), targetDir)
+    }
 
   /** The READ side over the PRODUCTION (PQ / residual-PQ) index layout —
-    * the ADC-scored twin of [[vectorSearchStream]], which completes the
-    * streaming lifecycle: [[vectorIndexStreamPQ]] builds the layout, this
-    * probes it, [[compactVectorIndex]] maintains it. Each arriving query
+    * the ADC-scored twin of [[vectorSearchStream]] (both run one loop),
+    * which completes the streaming lifecycle: [[vectorIndexStream]] with
+    * a `codebook` builds the layout, this probes it,
+    * [[compactVectorIndex]] maintains it. Each arriving query
     * flows through [[graft.similarity.IncrementalIvfIndex
     * .searchTopKPQFor]]: probe ranking AND the per-query ADC lookup
     * table are computed INSIDE the query's scan task against the
@@ -673,26 +593,9 @@ object Streaming {
       topK: Int,
       shortK: Int,
       nprobe: Int = 1,
-      candFilter: Option[org.apache.spark.sql.Column] = None): Unit = {
-    val q = spark.readStream.schema(schema).parquet(querySourceDir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // per-batch index resolution — same maintenance-concurrency
-        // contract as [[vectorSearchStream]]'s foreachBatch
-        graft.engine.DirSwap.recover(indexDir)
-        val index = graft.engine.Resolver(batch.sparkSession).read(indexDir)
-        graft.similarity.IncrementalIvfIndex
-          .searchTopKPQFor(index, batch, cents, cb, means, topK, shortK,
-            nprobe, candFilter)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(targetDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      candFilter: Option[org.apache.spark.sql.Column] = None): Unit =
+    searchStream(spark, querySourceDir, indexDir, targetDir, checkpointDir, schema) {
+      (index, batch) => graft.similarity.IncrementalIvfIndex
+        .searchTopKPQFor(index, batch, cents, cb, means, topK, shortK, nprobe, candFilter)
+    }
 }

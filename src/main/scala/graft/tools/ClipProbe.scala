@@ -2,8 +2,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Stage attribution for q_media_clip_filter's scale-letter gap (the
-  * RagProbe idiom: measure the stages, attribute the constant).
+/** Stage attribution for q_media_clip_filter's scale-letter gap
+  * (measure the stages, attribute the constant).
   *
   * The BOARD query synthesizes its image/caption pair from the
   * embeddings table (quantize ×100 + sign-flip — deterministic fixture

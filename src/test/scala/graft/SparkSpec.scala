@@ -9,6 +9,25 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs launched by `body`, counted off the listener bus. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftaccess.SparkListenerAccess.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.graftaccess.SparkListenerAccess.drain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {

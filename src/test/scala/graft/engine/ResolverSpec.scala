@@ -13,25 +13,6 @@ class ResolverSpec extends SparkSpec {
   private def ids(df: DataFrame): Set[Long] =
     df.select($"id").as[Long].collect().toSet
 
-  /** Spark jobs launched by `body`, counted off the listener bus. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.graftaccess.SparkListenerAccess.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      org.apache.spark.graftaccess.SparkListenerAccess.drain(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(l)
-  }
-
   test("(a) an unchanged dir is served the same frame with zero Spark jobs") {
     val dir = s"${tmpDir("resolver")}/t"
     Seq(1L, 2L).toDF("id").write.parquet(dir)

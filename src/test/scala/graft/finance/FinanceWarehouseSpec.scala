@@ -189,12 +189,25 @@ class FinanceWarehouseSpec extends SparkSpec {
         Seq("Basic", "Pro")(rnd.nextInt(2)), start, end,
         (1 + rnd.nextInt(50)) * 10.0, rnd.nextInt(5) == 0)
     }
-    val batches = (1 to 3).map(i => (ts(i), randAccounts(), randSubs()))
+    val batches = (1 to 6).map(i => (ts(i), randAccounts(), randSubs()))
 
+    // the staging models compact past 4 files: each build lands one
+    // file (one input split, like a daily CSV batch), the fifth trips
+    // the rewrite back to one, and no build leaves more than 4
+    val stgDebt = """"name":"(stg_accounts|stg_subscriptions)"[^}]*"max_files_per_partition":(\d+)""".r
     val dir = tmpDir("whr")
-    val runs = run(dir, batches.map { case (bt, a, su) =>
-      (bt, accounts(a: _*)(bt), subs(su: _*)(bt)) })
-    runs.foreach { case (_, rpt) => assert(rpt.ok, rpt.results.mkString("; ")) }
+    val runs = batches.zipWithIndex.map { case ((bt, a, su), i) =>
+      val e = engine(dir, accounts(a: _*)(bt).coalesce(1), subs(su: _*)(bt).coalesce(1), bt)
+      val rpt = e.build(bt)
+      assert(rpt.ok, rpt.results.mkString("; "))
+      val raw = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, "run_results.json")), "UTF-8")
+      val debt = stgDebt.findAllMatchIn(raw).map(m => m.group(1) -> m.group(2).toInt).toMap
+      assert(debt.keySet == Set("stg_accounts", "stg_subscriptions") &&
+        debt.values.forall(_ <= 4), raw)
+      if (i == 4) assert(debt.values.forall(_ == 1), raw)
+      (e, rpt)
+    }
 
     // full refresh with only the final state (snapshot history differs,
     // but current-truth-derived facts must agree)

@@ -13,6 +13,16 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(m: Int) = new Timestamp(3600L * 1000 * 24 * 365 * 50 + m * 60000L)
 
+  /** True when every generation dir under a stream index layout's
+    * `cluster=` dirs whose name passes `gen` holds exactly one part
+    * file (and one such dir exists). */
+  private def onePartPerDir(tgt: String, gen: String => Boolean): Boolean = {
+    val dirs = new java.io.File(tgt).listFiles
+      .filter(_.getName.startsWith("cluster=")).toSeq
+      .flatMap(_.listFiles.filter(d => d.isDirectory && gen(d.getName)))
+    dirs.nonEmpty && dirs.forall(_.listFiles.count(_.getName.startsWith("part-")) == 1)
+  }
+
   private val fixture = Seq(
     Event(1, ts(0), 1, "click", 1.0),
     Event(2, ts(5), 1, "click", 2.0), // same session (gap 5m < 30m)
@@ -321,6 +331,9 @@ class StreamingSpec extends SparkSpec {
     // them into -1 BEFORE appending its own generation (keepFrom kept
     // batch 3 out of the fold — it wasn't committed yet)
     assert(gens() == Set("batch_id=-1", "batch_id=3"), gens())
+    // the write-layout rule on the in-loop rewrite: ONE part file in each
+    // batch_id=-1 dir it wrote (batch 3's own dir is the sink's)
+    assert(onePartPerDir(tgt, _ == "batch_id=-1"))
     // exactly-once through the maintenance: every arrival exactly once,
     // assignments ≡ one-shot batch kernel
     val got = spark.read.parquet(tgt)
@@ -441,9 +454,9 @@ class StreamingSpec extends SparkSpec {
     val feed = e.select($"vec_id", $"q", $"nsq")
     val schema = feed.schema
     feed.filter($"vec_id" <= mid).write.mode("append").parquet(src)
-    Streaming.vectorIndexStreamPQ(spark, src, tgt, ckp, schema, cents, cb)
+    Streaming.vectorIndexStream(spark, src, tgt, ckp, schema, cents, codebook = Some(cb))
     feed.filter($"vec_id" > mid).write.mode("append").parquet(src)
-    Streaming.vectorIndexStreamPQ(spark, src, tgt, ckp, schema, cents, cb)
+    Streaming.vectorIndexStream(spark, src, tgt, ckp, schema, cents, codebook = Some(cb))
 
     // row-for-row: same (vec_id, cluster, codes, npq) as the engine DAG
     def rowsOf(d: String) = spark.read.parquet(d)
@@ -734,8 +747,11 @@ class StreamingSpec extends SparkSpec {
 
     // tight threshold: retrain runs — boundary row moves, generations
     // fold, the UPDATED quantizer comes back to the caller
-    val Some((n, cents2)) = Streaming.retrainVectorIndexIfNeeded(
-      spark, tgt, cents, 4, minSelfCos = 0.9999)
+    val (Some((n, cents2)), dueJobs) = jobsDuring(Streaming.retrainVectorIndexIfNeeded(
+      spark, tgt, cents, 4, minSelfCos = 0.9999))
+    // the detect pass's centroid update feeds the retrain: the corpus
+    // aggregate runs once, not once more inside the rewrite
+    assert(dueJobs <= 5, s"a due drift retrain launched $dueJobs jobs")
     assert(n == 7)
     assert(assigned().contains(6L -> 1))
     assert(cents2.map(c => (c._1, c._2.toSeq, c._3)).toSet == Set(
@@ -744,6 +760,8 @@ class StreamingSpec extends SparkSpec {
       new java.io.File(s"$tgt/cluster=$cluster").listFiles
         .filter(_.isDirectory).map(_.getName).toSet
     assert(gens(0) == Set("batch_id=-1") && gens(1) == Set("batch_id=-1"))
+    // the write-layout rule on the retrain rewrite: one part file per dir
+    assert(onePartPerDir(tgt, _ => true))
 
     // the NEXT stream run assigns against the rotated quantizer,
     // exactly-once over the rewritten layout: (51,50,0,0) discriminates
