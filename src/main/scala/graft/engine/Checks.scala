@@ -46,15 +46,23 @@ object Checks {
 
   /** relationships against another MODEL of the DAG, resolved at check
     * time (dbt `relationships: to: ref('dim_x')`, `facts/schema.yml:10-26`).
+    * The parent is recorded in [[Check.refs]], so a build runs the child
+    * after the parent even when the parent is not one of its deps.
     * The anti-join broadcasts when the parent is dim-sized; a bloom-filter
     * pre-pass is the 100 TB-child variant. */
   def relationshipsTo(childCol: String, parentModel: String, parentCol: String): Check =
     Check(s"relationships($childCol -> $parentModel.$parentCol)",
       (df: DataFrame, r: String => DataFrame) => df.filter(col(childCol).isNotNull)
-        .join(r(parentModel).select(col(parentCol).as(childCol)), Seq(childCol), "left_anti"))
+        .join(r(parentModel).select(col(parentCol).as(childCol)), Seq(childCol), "left_anti"),
+      refs = Seq(parentModel))
 
   /** Singular test that reads other models through the resolver
-    * (`tests/test_account_month_ties_subscription_month.sql`). */
+    * (`tests/test_account_month_ties_subscription_month.sql`). The query
+    * is opaque, so it records no [[Check.refs]]: it may read only the
+    * node's upstream closure (its deps and their ancestors), which the
+    * build has finished before the node runs. A model outside that
+    * closure may still be mid-build, or not built yet, when the check
+    * reads it. */
   def singularWithRefs(name: String)(
       q: (DataFrame, String => DataFrame) => DataFrame): Check = Check(name, q)
 

@@ -53,13 +53,14 @@ final case class BuildReport(results: Seq[NodeResult]) {
   * fuses them into the consumer — column pruning/predicate pushdown reach
   * through, SURVEY.md §4).
   *
-  * Scale posture: the DAG runs node-at-a-time on the driver but every
-  * node's work is a distributed Spark job; nothing is collected except
-  * incremental watermarks (single scalar). `DeleteInsert` models write
-  * with dynamic partition overwrite so a 100 TB fact restates only the
-  * window's partitions. Independent DAG branches could be dispatched
-  * concurrently from the driver — single-threaded here to match the
-  * reference (`threads: 1`, `/root/reference/README.md:99`).
+  * Scale posture: every node's work is a distributed Spark job; nothing
+  * is collected except incremental watermarks (single scalar).
+  * `DeleteInsert` models write with dynamic partition overwrite so a
+  * 100 TB fact restates only the window's partitions. The driver
+  * dispatches independent DAG branches concurrently (dbt's `threads:`,
+  * one worker per core of the session by default — see [[build]]): a
+  * DAG of many small nodes is bound by per-job scheduling cost, which
+  * overlapping branches hides.
   */
 final class Engine(
     spark: SparkSession,
@@ -186,15 +187,21 @@ final class Engine(
     hasPart(rootFiles)
   }
 
-  /** Kahn topological order; fails fast on cycles or unknown refs. */
+  /** The models of this build a node runs after: its deps plus the
+    * models its checks read ([[Check.refs]]). A check ref orders the
+    * node and nothing else: only a red DEP skips it. */
+  private def runsAfter(m: Model): Seq[String] =
+    (m.deps ++ m.checks.flatMap(_.refs)).distinct
+      .filter(d => d != m.name && byName.contains(d))
+
+  /** Kahn topological order over [[runsAfter]]; fails fast on cycles or
+    * unknown refs. */
   private[engine] def topoOrder: Seq[String] = {
+    for (m <- models; d <- m.deps if !byName.contains(d) && !sources.contains(d))
+      throw new IllegalArgumentException(s"model ${m.name}: unknown ref '$d'")
     val indeg = mutable.Map(models.map(m => m.name -> 0): _*)
     val out = mutable.Map.empty[String, List[String]].withDefaultValue(Nil)
-    for (m <- models; d <- m.deps) {
-      if (!byName.contains(d) && !sources.contains(d))
-        throw new IllegalArgumentException(s"model ${m.name}: unknown ref '$d'")
-      if (byName.contains(d)) { indeg(m.name) += 1; out(d) ::= m.name }
-    }
+    for (m <- models; d <- runsAfter(m)) { indeg(m.name) += 1; out(d) ::= m.name }
     val q = mutable.Queue(models.map(_.name).filter(indeg(_) == 0).sorted: _*)
     val order = mutable.ArrayBuffer.empty[String]
     while (q.nonEmpty) {
@@ -722,7 +729,8 @@ final class Engine(
         val n = writeCounted(df, _.write.mode("overwrite").parquet(path(m.name)))
         recordSeed(seed, df.schema, Nil)
         n
-      case Materialization.BucketedTable(key, n) =>
+      case Materialization.BucketedTable(key, buckets) =>
+        val n = buckets.getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
         // external table at the model's normal path; DROP clears stale
         // catalog metadata (not the files — overwrite rewrites those).
         // Repartition ON the bucket key first: bucketBy splits each
@@ -1222,8 +1230,11 @@ final class Engine(
       // A check referencing a model that does not exist is skipped with
       // a warning, matching dbt (the reference declares tests against
       // nonexistent `dim_feature` / `mart_subscription_month_enriched`
-      // models — SURVEY §5 note 1).
-      val checkRecords = m.checks.flatMap { c =>
+      // models — SURVEY §5 note 1). The check jobs carry their own
+      // group, so a trace attributes them to this node while other
+      // nodes' jobs overlap them.
+      sc.setJobGroup(s"graft-check.$buildTag.$name", s"graft checks: $name")
+      val checkRecords = try m.checks.flatMap { c =>
         try {
           val c0 = System.nanoTime()
           val v = c.violationsWithRefs(ref(name), ref)
@@ -1249,7 +1260,7 @@ final class Engine(
               s"WARN: skipping check '${c.name}' on $name: unknown ref '${u.refName}'")
             None
         }
-      }
+      } finally sc.clearJobGroup()
       if (testHistory && checkRecords.nonEmpty)
         appendTestHistory(checkRecords.map { case (cn, bad, nViol, wall) =>
           historyLine(name, cn, "data", !bad, nViol, wall, batchTs)
@@ -1390,6 +1401,62 @@ final class Engine(
   private def sanitizeDirName(s: String): String =
     s.map(ch => if (ch.isLetterOrDigit || ch == '_') ch else '_')
 
+  /** [[build]]'s default worker count: the session's
+    * `defaultParallelism` (its cores), capped at the model count. */
+  private[graft] def defaultThreads: Int =
+    math.max(1, math.min(spark.sparkContext.defaultParallelism, models.size))
+
+  /** The build's one scheduler. `threads` workers take ready nodes in
+    * [[topoOrder]] rank: a node is ready once every model it
+    * [[runsAfter]] has a result, and `run` gets whether a DEP's result
+    * is not "ok" (the dbt skip). Results come back in topological
+    * order. */
+  private def dispatch(threads: Int)(
+      run: (String, Boolean) => NodeResult): Seq[NodeResult] = {
+    val order = topoOrder
+    val rank = order.zipWithIndex.toMap
+    val waiting = mutable.Map(models.map(m => m.name -> runsAfter(m).size): _*)
+    val children = models.flatMap(m => runsAfter(m).map(_ -> m.name)).groupMap(_._1)(_._2)
+    val ready = mutable.PriorityQueue(order.filter(waiting(_) == 0): _*)(
+      Ordering.by((n: String) => -rank(n)))
+    val results = mutable.Map.empty[String, NodeResult]
+    val lock = new Object
+    def take(): Option[String] = lock.synchronized {
+      while (ready.isEmpty && results.size < order.size) lock.wait()
+      if (ready.isEmpty) None else Some(ready.dequeue())
+    }
+    def work(): Unit = {
+      var next = take()
+      while (next.nonEmpty) {
+        val name = next.get
+        val depBlocked = lock.synchronized(
+          byName(name).deps.exists(d => results.get(d).exists(_.status != "ok")))
+        // execNode catches Exceptions itself; this also turns an Error
+        // into the node's result, so no worker leaves the others waiting
+        val res =
+          try run(name, depBlocked)
+          catch { case t: Throwable => NodeResult(name, "error", 0, error = Some(t.toString)) }
+        lock.synchronized {
+          results(name) = res
+          for (c <- children.getOrElse(name, Nil)) {
+            waiting(c) -= 1
+            if (waiting(c) == 0) ready.enqueue(c)
+          }
+          lock.notifyAll()
+        }
+        next = take()
+      }
+    }
+    val workers = (1 to math.max(1, math.min(threads, order.size))).map { _ =>
+      val t = new Thread(() => work())
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    workers.foreach(_.join())
+    order.map(results)
+  }
+
   /** `dbt retry`: re-execute exactly the nodes the LAST invocation left
     * unfinished — status != ok in run_results.json (errors, failed
     * tests, and their skipped downstream, which run_results already
@@ -1398,7 +1465,7 @@ final class Engine(
     * like dbt's "Nothing to do". */
   def buildRetry(batchTs: java.sql.Timestamp =
       new java.sql.Timestamp(System.currentTimeMillis()),
-      threads: Int = 1): BuildReport = {
+      threads: Int = defaultThreads): BuildReport = {
     val p = Paths.get(warehouseDir, "run_results.json")
     require(Files.exists(p),
       "buildRetry: no run_results.json in the warehouse — run build() first")
@@ -1415,13 +1482,14 @@ final class Engine(
   /** `dbt build`: topo-ordered materialize + inline tests; a node whose
     * checks fail blocks its transitive downstream (SURVEY.md §3.2 step 5).
     *
-    * `threads` > 1 dispatches INDEPENDENT DAG branches concurrently from
-    * the driver (dbt's `threads:`; the reference pins 1,
-    * `/root/reference/README.md:99`). Each node is still one distributed
-    * Spark job — concurrency here overlaps scheduling gaps and
-    * independent writes, which matters when a wide DAG of small models
-    * runs on a large cluster. Spark sessions are thread-safe for
-    * concurrent job submission.
+    * `threads` is dbt's `threads:`: that many driver workers take ready
+    * nodes — every model it [[runsAfter]] finished — in [[topoOrder]]
+    * rank, so independent DAG branches run concurrently and one worker
+    * runs exactly the topological order. The default is one worker per
+    * core of the session ([[defaultThreads]]). Each node still runs as
+    * distributed Spark jobs; the workers overlap per-job scheduling
+    * gaps and independent writes, which bound a DAG of many small nodes.
+    * Spark sessions are thread-safe for concurrent job submission.
     *
     * `fullRefresh` = dbt's `--full-refresh` (reference `README.md:115`):
     * incremental-append and delete+insert models ignore their persisted
@@ -1430,7 +1498,7 @@ final class Engine(
     * rebuild cannot reconstruct). */
   def build(batchTs: java.sql.Timestamp =
       new java.sql.Timestamp(System.currentTimeMillis()),
-      threads: Int = 1,
+      threads: Int = defaultThreads,
       select: Seq[String] = Nil,
       fullRefresh: Boolean = false): BuildReport = {
     if (select.nonEmpty) {
@@ -1483,7 +1551,6 @@ final class Engine(
         prior, priorChecksSel)
       return BuildReport(rpt.results.filter(r => sel(r.name)))
     }
-    val order = topoOrder
     // one manifest read for the whole build (per-node re-reads were
     // O(models × manifest-size)); also the carry-forward record for
     // non-promoted nodes' check names in the manifest rewrite below
@@ -1494,58 +1561,9 @@ final class Engine(
     val buildTag = java.util.UUID.randomUUID().toString.take(8)
     spark.sparkContext.addSparkListener(shuffle)
     val report = try {
-      if (threads <= 1) {
-        val blocked = mutable.Set.empty[String]
-        BuildReport(order.map { name =>
-          val res = execNode(name, batchTs, byName(name).deps.exists(blocked),
-            shuffle, buildTag, fullRefresh, priorChecks)
-          if (res.status != "ok") blocked += name
-          res
-        })
-      } else {
-        val results = new java.util.concurrent.ConcurrentHashMap[String, NodeResult]()
-        val children = mutable.Map.empty[String, List[String]].withDefaultValue(Nil)
-        val remaining = mutable.Map.empty[String, Int]
-        for (m <- models) {
-          val modelDeps = m.deps.filter(byName.contains)
-          remaining(m.name) = modelDeps.size
-          modelDeps.foreach(d => children(d) ::= m.name)
-        }
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-        val latch = new java.util.concurrent.CountDownLatch(models.size)
-        val lock = new Object
-        def submit(name: String): Unit = {
-          pool.submit(new Runnable {
-            def run(): Unit = try {
-              val depBlocked = byName(name).deps
-                .filter(byName.contains)
-                .exists(d => Option(results.get(d)).forall(_.status != "ok"))
-              results.put(name, execNode(name, batchTs, depBlocked, shuffle,
-                buildTag, fullRefresh, priorChecks))
-            } catch {
-              // execNode catches Exceptions itself; this guards Errors so
-              // a worker failure can never hang the await below
-              case t: Throwable =>
-                results.put(name, NodeResult(name, "error", 0, error = Some(t.toString)))
-            } finally {
-              lock.synchronized {
-                for (c <- children(name)) {
-                  remaining(c) -= 1
-                  if (remaining(c) == 0) submit(c)
-                }
-              }
-              latch.countDown()
-            }
-          })
-          ()
-        }
-        lock.synchronized {
-          models.map(_.name).filter(remaining(_) == 0).foreach(submit)
-        }
-        latch.await()
-        pool.shutdown()
-        BuildReport(order.map(results.get))
-      }
+      BuildReport(dispatch(threads) { (name, depBlocked) =>
+        execNode(name, batchTs, depBlocked, shuffle, buildTag, fullRefresh, priorChecks)
+      })
     } finally {
       spark.sparkContext.removeSparkListener(shuffle)
       // release engine-internal persisted frames (PQ cell stream,

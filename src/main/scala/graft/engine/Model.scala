@@ -62,8 +62,20 @@ object Materialization {
     * `key` implies equal full join key on both sides, so matches stay
     * colocated — and the default-true guard only hedges against reduced
     * parallelism, which is the trade bucketing makes deliberately.
+    *
+    * `buckets` unset (the default) sizes the table from the session's
+    * `spark.sql.shuffle.partitions` at write time: that is the partition
+    * count the planner gives the consumer's other join side, so the
+    * bucketed side needs no exchange, and the file count follows the
+    * session's parallelism instead of a constant.
     */
-  final case class BucketedTable(key: String, buckets: Int) extends Materialization
+  final case class BucketedTable(key: String, buckets: Option[Int] = None)
+    extends Materialization
+
+  object BucketedTable {
+    /** A fixed bucket count. */
+    def apply(key: String, buckets: Int): BucketedTable = BucketedTable(key, Some(buckets))
+  }
 
   /** Incremental append: on first run write everything; afterwards append
     * only rows with `watermarkCol > max(watermarkCol)` already in the target.
@@ -285,10 +297,17 @@ object Materialization {
   * argument) — dbt's `relationships` test and the singular tests under
   * `tests/` are cross-model queries (`facts/schema.yml:10-26`,
   * `tests/test_account_month_ties_subscription_month.sql`).
+  *
+  * @param refs the models the check reads through the resolver, as
+  *   declared by its constructor ([[Checks.relationshipsTo]]). The build
+  *   runs the node after each of them that is in the same build, so the
+  *   check reads the parent's generation of THIS build. Ordering only: a
+  *   red parent does not skip the node.
   */
 final case class Check(
     name: String,
-    violationsWithRefs: (DataFrame, String => DataFrame) => DataFrame) {
+    violationsWithRefs: (DataFrame, String => DataFrame) => DataFrame,
+    refs: Seq[String] = Nil) {
   /** Single-model form for tests/specs that have no resolver. */
   def violations(df: DataFrame): DataFrame =
     violationsWithRefs(df, n => throw new IllegalArgumentException(

@@ -424,7 +424,7 @@ object FinanceWarehouse {
     // every consumer, where before each consumer re-aggregated the
     // sub×month fact and re-shuffled the result.
     Model("int_account_monthly_mrr", Seq("fct_subscription_month"),
-      Materialization.BucketedTable("account_id", 32),
+      Materialization.BucketedTable("account_id"),
       checks = Seq(
         Checks.uniqueCombination("account_id", "month_start_date"),
         Checks.notNull("account_id", "month_start_date", "mrr_end_mrr")))((_, r) =>

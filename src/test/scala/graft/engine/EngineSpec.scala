@@ -1593,7 +1593,7 @@ class EngineSpec extends SparkSpec {
       Model("right", Seq("base"), Materialization.Table)((_, r) => r("base").filter($"status" === "B")),
       Model("join", Seq("left", "right"), Materialization.Table)((_, r) =>
         r("left").unionByName(r("right"))))
-    val seqRpt = eng(tmpDir("engs"), mk).build()
+    val seqRpt = eng(tmpDir("engs"), mk).build(threads = 1)
     val parRpt = eng(tmpDir("engp"), mk).build(threads = 4)
     assert(parRpt.ok, parRpt.results.mkString("; "))
     // same statuses and row counts in topo order (measured elapsedMs /
@@ -1662,6 +1662,44 @@ class EngineSpec extends SparkSpec {
     // every model logged every build (no dropped lines under concurrency)
     Seq("base", "left", "right", "join").foreach { m =>
       assert(bh.count(_.contains(s""""model":"$m"""")) == 2, m)
+    }
+  }
+
+  test("build's default worker count: the session's defaultParallelism, capped at the model count") {
+    def views(n: Int) = (1 to n).map(i =>
+      Model(s"v$i", Seq("raw_orders"), Materialization.View)((_, r) => r("raw_orders")))
+    val cores = spark.sparkContext.defaultParallelism
+    val dir = tmpDir("engthr")
+    assert(eng(dir, views(1)).defaultThreads == 1)
+    assert(eng(dir, views(2)).defaultThreads == math.min(2, cores))
+    assert(eng(dir, views(cores + 3)).defaultThreads == cores)
+  }
+
+  test("a relationship check to a later-sorting sibling runs after it, under threads = 1 and the default") {
+    // `zparent` is not a dep of `child` and sorts after it, so only the
+    // check's recorded ref orders the two: without it, a first build's
+    // check reads a parent that does not exist yet.
+    def mk(parentKeeps: org.apache.spark.sql.Column, parentChecks: Seq[Check] = Nil) = Seq(
+      Model("child", Seq("raw_orders"), Materialization.Table,
+        checks = Seq(Checks.relationshipsTo("id", "zparent", "id")))((_, r) => r("raw_orders")),
+      Model("zparent", Seq("raw_orders"), Materialization.Table, checks = parentChecks)(
+        (_, r) => r("raw_orders").filter(parentKeeps)))
+    assert(eng(tmpDir("engrel"), mk(lit(true))).topoOrder == Seq("zparent", "child"))
+    for (threads <- Seq(Some(1), None)) {
+      def build(ms: Seq[Model]) = {
+        val e = eng(tmpDir("engrel"), ms)
+        threads.fold(e.build())(t => e.build(threads = t))
+      }
+      val green = build(mk(lit(true)))
+      assert(green.ok, s"$threads: ${green.results.mkString("; ")}")
+      val red = build(mk($"id" =!= 2))
+      assert(red("zparent").status == "ok", s"$threads: ${red.results.mkString("; ")}")
+      assert(red("child").status == "test_failed", s"$threads: ${red.results.mkString("; ")}")
+      assert(red("child").failedChecks == Seq("relationships(id -> zparent.id)"))
+      // ordering only: a red parent does not skip the child
+      val redParent = build(mk(lit(true), Seq(Checks.acceptedValues("status", Seq("Z")))))
+      assert(redParent("zparent").status == "test_failed")
+      assert(redParent("child").status == "ok", s"$threads: ${redParent.results.mkString("; ")}")
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.finance
 
 import graft.SparkSpec
-import graft.engine.{Engine, Materialization, Model, Snapshot}
+import graft.engine.{BuildReport, Checks, Engine, Materialization, Model, Snapshot}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -620,5 +620,85 @@ class FinanceWarehouseSpec extends SparkSpec {
     assert(!rpt2.ok)
     assert(rpt2("mart_mrr_waterfall_month").status == "unit_test_failed",
       rpt2.results.mkString("; "))
+  }
+
+  // ---- concurrent dispatch, the build default, against one worker
+
+  /** `models` with model `name` replaced by `f` of it. */
+  private def replaced(models: Seq[Model], name: String)(f: Model => Model): Seq[Model] =
+    models.map(m => if (m.name == name) f(m) else m)
+
+  test("the default concurrent build equals threads = 1: rows, reports, run_results order, a red day") {
+    val red = replaced(FinanceWarehouse.models(vars), "dim_account")(m =>
+      new Model(m.name, m.deps, m.materialization,
+        m.checks :+ Checks.singular("injected_red")(df => df), m.buildFn, m.contract, m.version))
+    val days = Seq(
+      (ts(1), accounts(b1Accounts: _*)(ts(1)), subs(b1Subs: _*)(ts(1)), FinanceWarehouse.models(vars)),
+      (ts(2), accounts(b2Accounts: _*)(ts(2)), subs(b2Subs: _*)(ts(2)), FinanceWarehouse.models(vars)),
+      (ts(3), accounts(b2Accounts: _*)(ts(3)), subs(b2Subs: _*)(ts(3)), red))
+    val (conc, serial) = (tmpDir("whconc"), tmpDir("whser"))
+    def norm(r: BuildReport) = r.results.map(n => (n.name, n.status, n.rows, n.failedChecks))
+    def runOrder(dir: String) = """"name":"([^"]+)","status"""".r
+      .findAllMatchIn(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, "run_results.json")), "UTF-8"))
+      .map(_.group(1)).toSeq
+    val reports = days.map { case (bt, acc, sub, models) =>
+      def eng(dir: String) = new Engine(spark, dir,
+        Map("raw_accounts" -> acc, "raw_subscriptions" -> sub,
+          "raw_support_tickets" -> tickets(bt)), models)
+      val (ec, es) = (eng(conc), eng(serial))
+      assert(ec.defaultThreads == math.min(spark.sparkContext.defaultParallelism, models.size))
+      val (rc, rs) = (ec.build(bt), es.build(bt, threads = 1))
+      assert(norm(rc) == norm(rs), s"$bt\n${rc.results.mkString("\n")}\n${rs.results.mkString("\n")}")
+      assert(runOrder(conc) == rc.results.map(_.name))
+      assert(runOrder(serial) == runOrder(conc))
+      models.foreach { m =>
+        val (a, b) = (ec.ref(m.name), es.ref(m.name))
+        assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, s"$bt: ${m.name} differs")
+      }
+      rc
+    }
+    reports.init.foreach(r => assert(r.ok, r.results.mkString("; ")))
+    val day3 = reports.last
+    assert(day3("dim_account").status == "test_failed")
+    assert(day3("dim_account").failedChecks == Seq("injected_red"))
+    Seq("dim_subscription", "fct_subscription_month", "int_account_monthly_mrr",
+      "fct_account_month", "mart_mrr_waterfall_month").foreach(n =>
+      assert(day3(n).status == "skipped_upstream", n))
+    Seq("stg_support_tickets", "dim_date", "int_subscriptions_current_merged",
+      "snap_subscriptions").foreach(n => assert(day3(n).status == "ok", n))
+  }
+
+  test("a warehouse whose rollup has 32 buckets rebuilds on the session's bucket count") {
+    val fixed32 = replaced(FinanceWarehouse.models(vars), "int_account_monthly_mrr")(m =>
+      new Model(m.name, m.deps, Materialization.BucketedTable("account_id", 32),
+        m.checks, m.buildFn, m.contract, m.version))
+    def eng(dir: String, d: Int, models: Seq[Model]) = new Engine(spark, dir,
+      Map("raw_accounts" -> accounts((if (d == 1) b1Accounts else b2Accounts): _*)(ts(d)),
+        "raw_subscriptions" -> subs((if (d == 1) b1Subs else b2Subs): _*)(ts(d)),
+        "raw_support_tickets" -> tickets(ts(d))), models)
+    // the bucket count a keyed aggregate's bucketed scan reports
+    def buckets(e: Engine) = {
+      val q = e.ref("int_account_monthly_mrr").groupBy($"account_id").count()
+      q.collect()
+      """SelectedBucketsCount: \d+ out of (\d+)""".r
+        .findFirstMatchIn(q.queryExecution.executedPlan.toString).map(_.group(1).toInt)
+    }
+    val dir = tmpDir("whb32")
+    val e1 = eng(dir, 1, fixed32)
+    assert(e1.build(ts(1)).ok)
+    assert(buckets(e1) == Some(32))
+    val e2 = eng(dir, 2, FinanceWarehouse.models(vars))
+    val rpt = e2.build(ts(2))
+    assert(rpt.ok, rpt.results.mkString("; "))
+    assert(buckets(e2) == Some(spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    // same truth as a warehouse that never had 32 buckets
+    val fresh = tmpDir("whbfresh")
+    Seq(1, 2).foreach(d => assert(eng(fresh, d, FinanceWarehouse.models(vars)).build(ts(d)).ok))
+    val ef = eng(fresh, 2, FinanceWarehouse.models(vars))
+    Seq("int_account_monthly_mrr", "fct_account_month", "mart_mrr_waterfall_month").foreach { n =>
+      val (a, b) = (e2.ref(n), ef.ref(n))
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, n)
+    }
   }
 }
